@@ -132,17 +132,16 @@ def _host_speed_index() -> float:
 
 def _host_steal_under_load() -> "float | None":
     """Percent of CPU time STOLEN by the hypervisor while this guest
-    runs an all-core workload (32 processes × one md5-64MB pass,
-    ~0.5s wall), from /proc/stat deltas. The single-thread index
-    above misses this failure mode entirely: round 17 measured md5
-    near-flat (x1.11) while Spark controls read x1.5-2.5 — the
-    explanation was 20% steal that only appears when every vCPU is
-    busy (an idle guest is never preempted, so idle-box steal reads
-    ~0%). Recorded so a pollution-gate firing can be attributed to
-    host oversubscription (not actionable) vs a real plan regression
-    (actionable) without guessing. None on non-Linux/containers
-    without /proc/stat."""
-    import hashlib
+    runs an all-core workload (one process per usable core × one
+    md5-64MB pass, ~0.5s wall), from /proc/stat deltas. The
+    single-thread index above misses this failure mode entirely:
+    round 17 measured md5 near-flat (x1.11) while Spark controls read
+    x1.5-2.5 — the explanation was 20% steal that only appears when
+    every vCPU is busy (an idle guest is never preempted, so idle-box
+    steal reads ~0%). Recorded so a pollution-gate firing can be
+    attributed to host oversubscription (not actionable) vs a real
+    plan regression (actionable) without guessing. None on
+    non-Linux/containers without /proc/stat."""
     import multiprocessing as mp
 
     def _snap():
@@ -153,9 +152,10 @@ def _host_steal_under_load() -> "float | None":
         before = _snap()
     except (OSError, ValueError, IndexError):
         return None
+    n = len(os.sched_getaffinity(0))
     ctx = mp.get_context("fork")
-    with ctx.Pool(32) as pool:
-        pool.map(_md5_64mb_once, range(32))
+    with ctx.Pool(n) as pool:
+        pool.map(_md5_64mb_once, range(n))
     after = _snap()
     delta = [b - a for a, b in zip(before, after)]
     total = sum(delta)
@@ -173,54 +173,19 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else -1.0
-    # Fresh published-artifact store per bench run: the dedup_minhash
-    # composition family reads the verified pair set through a
-    # publish/read seam (dedup_ops.verified_pair_store) — production
-    # materializes that table once per curation run, so the bench lets
-    # the FIRST materialization happen inside this run (warmup of the
-    # first consumer) and charges each composer its marginal read-side
-    # work. A lingering store from a previous run would hide the build
-    # cost entirely; an isolated temp dir keeps the accounting honest.
+    # Fresh store bases per bench run (SCALE.md "Published
+    # artifacts"): production materializes each published store once
+    # per curation run, so the bench lets the FIRST materialization
+    # happen inside this run (warmup of the first consumer) and
+    # charges each composer its marginal read-side work. A lingering
+    # store from a previous run would hide the build cost entirely; an
+    # isolated temp dir per base keeps the accounting honest.
     import tempfile
 
-    from programmers_data_spark.queries.dedup_ops import PAIR_STORE_ENV
-    from programmers_data_spark.queries.interchange_ops import (
-        JSONL_STORE_ENV,
-    )
+    from programmers_data_spark.storeutil import STORE_ENVS
 
-    from programmers_data_spark.queries.round12_ops import IMG_STORE_ENV
-
-    os.environ[PAIR_STORE_ENV] = tempfile.mkdtemp(prefix="pds_bench_pairs_")
-    # same per-run isolation for the JSONL roundtrip's written shard
-    # trees (each timed run re-writes — the query IS the roundtrip)
-    os.environ[JSONL_STORE_ENV] = tempfile.mkdtemp(prefix="pds_bench_jsonl_")
-    # and for the published media-hash indexes the incremental
-    # maintenance queries probe (media_index.hash_store/band_store
-    # per modality)
-    from programmers_data_spark.queries.media_lifecycle_ops import (
-        AUDIO_SPEC,
-        VIDEO_SPEC,
-    )
-
-    os.environ[IMG_STORE_ENV] = tempfile.mkdtemp(prefix="pds_bench_img_")
-    os.environ[AUDIO_SPEC.store_env] = tempfile.mkdtemp(
-        prefix="pds_bench_aud_"
-    )
-    os.environ[VIDEO_SPEC.store_env] = tempfile.mkdtemp(
-        prefix="pds_bench_vid_"
-    )
-    # and for the published embedding signature/pair/cluster stores
-    # the round-16 vector-maintenance queries probe
-    from programmers_data_spark.embedding_index import EMB_STORE_ENV
-
-    os.environ[EMB_STORE_ENV] = tempfile.mkdtemp(prefix="pds_bench_emb_")
-    # and for the published derived-table stores (tokens/postings/
-    # shingles/bigram vocab/activity months — r18, the pair-store
-    # accounting: fresh per run, so the first consumer's untimed
-    # warmup pays each build and every timed run reads parquet)
-    from programmers_data_spark.derived_store import DERIV_STORE_ENV
-
-    os.environ[DERIV_STORE_ENV] = tempfile.mkdtemp(prefix="pds_bench_der_")
+    for env in STORE_ENVS:
+        os.environ[env] = tempfile.mkdtemp(prefix=f"pds_bench_{env.lower()}_")
     spark = get_spark(app_name="pds-bench")
 
     registry.load_all()

@@ -34,11 +34,10 @@ vector pipeline; this tier is north-star training-data-pipeline scope
 
 from __future__ import annotations
 
-import hashlib
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .storeutil import artifact_dir, published, published_bucketed
 
 # Base-dir override env var for the published signature/pair/cluster
 # artifacts (bench pins a fresh dir per run for honest accounting).
@@ -53,14 +52,6 @@ EMB_ARRIVAL_RESIDUE = 4
 EMB_INGEST_ENV = "SPARK_GRAFT_EMB_INGEST_STORE"
 
 _N_SIG_BUCKETS = 8
-
-# memoized store handles — *_CACHE contract (bench._reset's package
-# sweep reaches these by name); keyed like media_index._memo_key so a
-# mid-session store-env change misses the cache naturally
-_MemoKey = tuple[str, str, str]
-_SIG_STORE_CACHE: dict[_MemoKey, DataFrame] = {}
-_EMB_PAIR_STORE_CACHE: dict[_MemoKey, DataFrame] = {}
-_EMB_CLUSTER_STORE_CACHE: dict[_MemoKey, DataFrame] = {}
 
 
 def _algo_fp() -> str:
@@ -83,27 +74,12 @@ def _algo_fp() -> str:
 
 
 def store_table_dir(sf_dir: str, leaf: str) -> str:
-    """Content-addressed location for sf_dir's published embedding
-    artifacts: fixture bytes (path, size, mtime) + the live algorithm
+    """Location of sf_dir's published embedding artifact ``leaf``:
+    keyed by the embeddings fixture plus the live algorithm
     parameters."""
-    from .storeutil import store_base
-
-    base = store_base(EMB_STORE_ENV, "spark_graft_emb_store")
-    emb = os.path.abspath(os.path.join(sf_dir, "embeddings.parquet"))
-    try:
-        st = os.stat(emb)
-        ident = f"{emb}|{st.st_size}|{st.st_mtime_ns}"
-    except OSError:
-        ident = f"{emb}|missing"
-    fp = hashlib.md5(f"{ident}|{_algo_fp()}".encode()).hexdigest()[:16]
-    return os.path.join(base, fp, leaf)
-
-
-def _memo_key(spark: SparkSession, sf_dir: str) -> _MemoKey:
-    return (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        store_table_dir(sf_dir, "x"),
+    return artifact_dir(
+        EMB_STORE_ENV, "spark_graft_emb_store", sf_dir,
+        "embeddings.parquet", _algo_fp(), leaf,
     )
 
 
@@ -132,47 +108,16 @@ def sig_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     side of incremental embedding dedup: (vec_id, tbl, bucket) written
     ONCE, hash-bucketed by the join key, and every maintenance batch
     equi-joins arrival signatures against it with NO Exchange on the
-    index side and no per-run O(index) GEMM re-derivation. A fresh
-    session that finds the files already on disk re-registers the
-    external bucketed table via DDL (no rewrite)."""
-    key = _memo_key(spark, sf_dir)
-    cached = _SIG_STORE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    from . import sinks
-
-    path = store_table_dir(sf_dir, "emb_sigs")
-    # table identity binds to the FULL path (not just the fixture
-    # fingerprint): two store base dirs in one session must not share
-    # a catalog entry pointing at whichever was registered first
-    name = "emb_sigs_" + hashlib.md5(path.encode()).hexdigest()[:12]
-    if not spark.catalog.tableExists(name):
-        if os.path.isdir(path) and any(
-            f.endswith(".parquet") for f in os.listdir(path)
-        ):
-            spark.sql(
-                f"CREATE TABLE {name} "
-                f"(vec_id BIGINT, tbl INT, bucket BIGINT) "
-                f"USING PARQUET "
-                f"CLUSTERED BY (tbl, bucket) "
-                f"INTO {_N_SIG_BUCKETS} BUCKETS "
-                f"LOCATION '{path}'"
-            )
-        else:
-            sigs = signatures(spark, sf_dir).select(
-                "vec_id", "tbl", "bucket"
-            )
-            if sigs.limit(1).count() == 0:  # bounded 1-value scalar
-                return sigs
-            sinks.save_bucketed(
-                sigs, name, path,
-                bucket_by=["tbl", "bucket"],
-                n_buckets=_N_SIG_BUCKETS,
-                sort_by=["tbl", "bucket"],
-            )
-    table = spark.table(name)
-    _SIG_STORE_CACHE[key] = table
-    return table
+    index side and no per-run O(index) GEMM re-derivation."""
+    return published_bucketed(
+        spark,
+        store_table_dir(sf_dir, "emb_sigs"),
+        "emb_sigs",
+        "vec_id BIGINT, tbl INT, bucket BIGINT",
+        ["tbl", "bucket"],
+        _N_SIG_BUCKETS,
+        lambda: signatures(spark, sf_dir).select("vec_id", "tbl", "bucket"),
+    )
 
 
 def cos_prefilter_kernel():
@@ -251,20 +196,10 @@ def pair_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     reranks on the exact fold cosine both engines share bitwise, so
     content is exactly ``embedding_neardup_lsh``'s registered output
     (the GEMM prefilter that operator adds only discards pairs the
-    exact threshold rejects anyway). An empty pair set is returned
-    directly without publishing (publish_versioned rejects empty
-    tables by design)."""
-    key = _memo_key(spark, sf_dir)
-    cached = _EMB_PAIR_STORE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    from .publish import publish_versioned, read_versioned
+    exact threshold rejects anyway)."""
     from .queries.similarity_ops import load_vectors
 
-    table_dir = store_table_dir(sf_dir, "emb_pairs")
-    try:
-        stored = read_versioned(spark, table_dir)
-    except FileNotFoundError:
+    def build() -> DataFrame:
         b = sig_store(spark, sf_dir)
         cand = (
             b.alias("a")
@@ -276,15 +211,11 @@ def pair_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .distinct()
         )
-        computed = verify_pairs(
+        return verify_pairs(
             cand, load_vectors(spark, sf_dir), include_cos_bp=True
         )
-        if computed.limit(1).count() == 0:  # bounded 1-value scalar
-            return computed
-        publish_versioned(computed, table_dir)
-        stored = read_versioned(spark, table_dir)
-    _EMB_PAIR_STORE_CACHE[key] = stored
-    return stored
+
+    return published(spark, store_table_dir(sf_dir, "emb_pairs"), build)
 
 
 def cluster_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -292,22 +223,11 @@ def cluster_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     EMB_ARRIVAL_RESIDUE) as a published artifact — the state
     incremental cluster maintenance starts from. Columns: (vec_id,
     cluster_id), cluster_id = min member id; singletons map to
-    themselves. An empty existing corpus returns the computed empty
-    frame directly."""
-    key = _memo_key(spark, sf_dir)
-    cached = _EMB_CLUSTER_STORE_CACHE.get(key)
-    if cached is not None:
-        return cached
+    themselves."""
     from .operators import connected_components_auto
-    from .publish import publish_versioned, read_versioned
     from .queries.similarity_ops import load_vectors
 
-    table_dir = store_table_dir(
-        sf_dir, f"emb_clusters_r{EMB_ARRIVAL_RESIDUE}"
-    )
-    try:
-        stored = read_versioned(spark, table_dir)
-    except FileNotFoundError:
+    def build() -> DataFrame:
         is_existing = lambda c: (F.col(c) % 10) != EMB_ARRIVAL_RESIDUE  # noqa: E731
         pairs = pair_store(spark, sf_dir).filter(
             is_existing("vec_a") & is_existing("vec_b")
@@ -318,16 +238,15 @@ def cluster_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("vec_id")
             .filter(is_existing("vec_id"))
         )
-        computed = (
-            ids.join(labels, ids["vec_id"] == labels["vertex"], "left")
-            .select(
-                "vec_id",
-                F.coalesce("component", "vec_id").alias("cluster_id"),
-            )
+        return ids.join(
+            labels, ids["vec_id"] == labels["vertex"], "left"
+        ).select(
+            "vec_id",
+            F.coalesce("component", "vec_id").alias("cluster_id"),
         )
-        if computed.limit(1).count() == 0:  # bounded 1-value scalar
-            return computed
-        publish_versioned(computed, table_dir)
-        stored = read_versioned(spark, table_dir)
-    _EMB_CLUSTER_STORE_CACHE[key] = stored
-    return stored
+
+    return published(
+        spark,
+        store_table_dir(sf_dir, f"emb_clusters_r{EMB_ARRIVAL_RESIDUE}"),
+        build,
+    )

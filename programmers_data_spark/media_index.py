@@ -40,13 +40,13 @@ scope (SURVEY.md §2 "LLM-data-pipeline operators").
 
 from __future__ import annotations
 
-import hashlib
-import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .storeutil import artifact_dir, published, published_bucketed
 
 
 @dataclass(frozen=True)
@@ -93,39 +93,30 @@ class MediaIndexSpec:
 # Memoized per _memo_key: (applicationId, sf_dir, spec.name,
 # resolved store table dir) — the last element makes a mid-session
 # SPARK_GRAFT_*_STORE change naturally miss the cache instead of
-# serving the previously published artifact (r13 ADVICE #2). The
-# image tier's round-12 module-level caches alias these dicts so
-# existing tests' .clear() calls (and bench._reset's package-wide
-# *_CACHE sweep) reach them unchanged.
+# serving a result built over the previous store (r13 ADVICE #2).
 _MemoKey = tuple[str, str, str, str]
-_HASH_STORE_CACHE: dict[_MemoKey, DataFrame] = {}
-_BAND_STORE_CACHE: dict[_MemoKey, DataFrame] = {}
 _INCR_INDEX_CACHE: dict[_MemoKey, DataFrame] = {}
 _INGEST_CACHE: dict[_MemoKey, DataFrame] = {}
 
 
-def store_table_dir(spec: MediaIndexSpec, sf_dir: str) -> str:
-    """Content-addressed location for sf_dir's published hash index:
-    fixture bytes (path, size, mtime) + the live algorithm parameters
-    + an algo version (all inside spec.algo_fp)."""
-    from .storeutil import store_base
-
-    base = store_base(spec.store_env, f"spark_graft_{spec.name[:3]}_store")
-    doc = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
-    try:
-        st = os.stat(doc)
-        ident = f"{doc}|{st.st_size}|{st.st_mtime_ns}"
-    except OSError:
-        ident = f"{doc}|missing"
-    fp = hashlib.md5(f"{ident}|{spec.algo_fp}".encode()).hexdigest()[:16]
-    return os.path.join(base, fp, f"{spec.name}_hashes")
+def store_table_dir(
+    spec: MediaIndexSpec, sf_dir: str, leaf: str = "hashes"
+) -> str:
+    """Location of sf_dir's published ``<spec.name>_<leaf>`` artifact
+    (hashes, bands, pairs, clusters_r<residue>): keyed by the
+    documents fixture plus the live algorithm parameters and an algo
+    version (all inside spec.algo_fp)."""
+    return artifact_dir(
+        spec.store_env, f"spark_graft_{spec.name[:3]}_store", sf_dir,
+        "documents.parquet", spec.algo_fp, f"{spec.name}_{leaf}",
+    )
 
 
 def _memo_key(
     spark: SparkSession, sf_dir: str, spec: MediaIndexSpec
 ) -> tuple[str, str, str, str]:
-    """Cache key for the published-artifact memos: binds the RESOLVED
-    store table dir (env var + fixture fingerprint) so changing
+    """Cache key for the per-batch memos: binds the RESOLVED store
+    table dir (env var + fixture fingerprint) so changing
     SPARK_GRAFT_*_STORE mid-session misses the cache naturally."""
     return (
         spark.sparkContext.applicationId,
@@ -144,26 +135,12 @@ def hash_store(
     IT is measured), published through the K8 validated-swap layer,
     read by every maintenance batch / dedup report afterwards. The
     parquet roundtrip of long columns is exact, so correctness is
-    unaffected. An EMPTY index (legal on an empty fixture) is
-    returned directly without publishing (publish_versioned rejects
-    empty tables by design)."""
-    key = _memo_key(spark, sf_dir, spec)
-    cached = _HASH_STORE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    from .publish import publish_versioned, read_versioned
-
-    table_dir = store_table_dir(spec, sf_dir)
-    try:
-        stored = read_versioned(spark, table_dir)
-    except FileNotFoundError:
-        computed = spec.hash_table(spark, sf_dir)
-        if computed.limit(1).count() == 0:  # bounded 1-value scalar
-            return computed
-        publish_versioned(computed, table_dir)
-        stored = read_versioned(spark, table_dir)
-    _HASH_STORE_CACHE[key] = stored
-    return stored
+    unaffected."""
+    return published(
+        spark,
+        store_table_dir(spec, sf_dir),
+        lambda: spec.hash_table(spark, sf_dir),
+    )
 
 
 def band_store(
@@ -171,57 +148,21 @@ def band_store(
 ) -> DataFrame:
     """The index's BAND table as a published BUCKETED layout — the
     probe side of incremental media dedup: the (band, bval) exploded
-    table is written ONCE, hash-bucketed by the join key via
-    sinks.save_bucketed, and every maintenance batch equi-joins
-    arrival bands against it with NO Exchange on the index side and
-    no per-run O(index) band re-derivation. A fresh session that
-    finds the files already on disk re-registers the external
-    bucketed table via DDL (no rewrite)."""
-    key = _memo_key(spark, sf_dir, spec)
-    cached = _BAND_STORE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    from . import sinks
+    table is written ONCE, hash-bucketed by the join key, and every
+    maintenance batch equi-joins arrival bands against it with NO
+    Exchange on the index side and no per-run O(index) band
+    re-derivation."""
     from .queries.round12_ops import _band_frame
 
-    path = os.path.join(
-        os.path.dirname(store_table_dir(spec, sf_dir)), f"{spec.name}_bands"
+    return published_bucketed(
+        spark,
+        store_table_dir(spec, sf_dir, "bands"),
+        f"{spec.cat}_bands",
+        "media_id BIGINT, band INT, bval BIGINT",
+        ["band", "bval"],
+        spec.n_buckets,
+        lambda: _band_frame(hash_store(spark, sf_dir, spec)),
     )
-    # table identity binds to the FULL path (not just the fixture
-    # fingerprint): two store base dirs in one session must not share
-    # a catalog entry pointing at whichever was registered first
-    name = (
-        f"{spec.cat}_bands_" + hashlib.md5(path.encode()).hexdigest()[:12]
-    )
-    if not spark.catalog.tableExists(name):
-        if os.path.isdir(path) and any(
-            f.endswith(".parquet") for f in os.listdir(path)
-        ):
-            spark.sql(
-                f"CREATE TABLE {name} "
-                f"(media_id BIGINT, band INT, bval BIGINT) "
-                f"USING PARQUET "
-                f"CLUSTERED BY (band, bval) "
-                f"INTO {spec.n_buckets} BUCKETS "
-                f"LOCATION '{path}'"
-            )
-        else:
-            bands = _band_frame(hash_store(spark, sf_dir, spec))
-            if bands.limit(1).count() == 0:  # bounded 1-value scalar
-                return bands
-            sinks.save_bucketed(
-                bands, name, path,
-                bucket_by=["band", "bval"],
-                n_buckets=spec.n_buckets,
-                sort_by=["band", "bval"],
-            )
-    table = spark.table(name)
-    _BAND_STORE_CACHE[key] = table
-    return table
-
-
-_CLUSTER_STORE_CACHE: dict[_MemoKey, DataFrame] = {}
-_PAIR_STORE_CACHE: dict[_MemoKey, DataFrame] = {}
 
 
 def pair_store(
@@ -242,23 +183,10 @@ def pair_store(
     even the one-time build never re-runs the Arrow codec kernel.
     Content is exactly ``_pairs_from(hash_table)`` (parquet
     roundtrips of long columns are exact); columns
-    (media_a, media_b, ham_d), normalized media_a < media_b. An
-    empty pair set (legal: a corpus with no near-dups) is returned
-    directly without publishing (publish_versioned rejects empty
-    tables by design)."""
-    key = _memo_key(spark, sf_dir, spec)
-    cached = _PAIR_STORE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    from .publish import publish_versioned, read_versioned
+    (media_a, media_b, ham_d), normalized media_a < media_b."""
     from .queries.round12_ops import HAM_T
 
-    table_dir = os.path.join(
-        os.path.dirname(store_table_dir(spec, sf_dir)), f"{spec.name}_pairs"
-    )
-    try:
-        stored = read_versioned(spark, table_dir)
-    except FileNotFoundError:
+    def build() -> DataFrame:
         h = hash_store(spark, sf_dir, spec)
         if h.limit(1).count() == 0:  # bounded 1-value scalar
             return spark.createDataFrame(
@@ -285,19 +213,15 @@ def pair_store(
             F.col("dhash_lo").alias("lo_b"),
             F.col("dhash_hi").alias("hi_b"),
         )
-        computed = (
+        return (
             cand.join(ha, "media_a")
             .join(hb, "media_b")
             .withColumn("ham_d", _ham())
             .filter(F.col("ham_d") <= HAM_T)
             .select("media_a", "media_b", "ham_d")
         )
-        if computed.limit(1).count() == 0:  # bounded 1-value scalar
-            return computed
-        publish_versioned(computed, table_dir)
-        stored = read_versioned(spark, table_dir)
-    _PAIR_STORE_CACHE[key] = stored
-    return stored
+
+    return published(spark, store_table_dir(spec, sf_dir, "pairs"), build)
 
 
 def cluster_store(
@@ -311,30 +235,18 @@ def cluster_store(
     every ingest batch MERGES into it (incremental_clusters below)
     instead of re-clustering the corpus. Columns: (media_id,
     cluster_id), cluster_id = min member id; singletons map to
-    themselves. An empty existing corpus returns the computed empty
-    frame directly (publish_versioned rejects empty tables)."""
-    key = _memo_key(spark, sf_dir, spec)
-    cached = _CLUSTER_STORE_CACHE.get(key)
-    if cached is not None:
-        return cached
+    themselves."""
     from .operators import connected_components_auto
-    from .publish import publish_versioned, read_versioned
     from .queries.round12_ops import _pairs_from
 
-    table_dir = os.path.join(
-        os.path.dirname(store_table_dir(spec, sf_dir)),
-        f"{spec.name}_clusters_r{spec.arrival_residue}",
-    )
-    try:
-        stored = read_versioned(spark, table_dir)
-    except FileNotFoundError:
+    def build() -> DataFrame:
         h = hash_store(spark, sf_dir, spec).filter(
             F.col("media_id") % 3 != spec.arrival_residue
         )
         labels = connected_components_auto(
             _pairs_from(h), "media_a", "media_b"
         )
-        computed = (
+        return (
             h.select("media_id")
             .join(labels, h["media_id"] == labels["vertex"], "left")
             .select(
@@ -342,12 +254,12 @@ def cluster_store(
                 F.coalesce("component", "media_id").alias("cluster_id"),
             )
         )
-        if computed.limit(1).count() == 0:  # bounded 1-value scalar
-            return computed
-        publish_versioned(computed, table_dir)
-        stored = read_versioned(spark, table_dir)
-    _CLUSTER_STORE_CACHE[key] = stored
-    return stored
+
+    return published(
+        spark,
+        store_table_dir(spec, sf_dir, f"clusters_r{spec.arrival_residue}"),
+        build,
+    )
 
 
 def incremental_clusters(

@@ -38,6 +38,7 @@ from pyspark.sql.window import Window
 from ..catalog import load_table
 from ..operators import salted_band_pairs
 from ..registry import query
+from ..storeutil import artifact_dir, published
 
 N_HASHES = 8
 BAND_SIZE = 2  # 4 bands × rows of 2 → catches jaccard ≳ 0.5
@@ -386,36 +387,18 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # so a bench run can pin a fresh per-run store (bench.py does).
 PAIR_STORE_ENV = "SPARK_GRAFT_PAIR_STORE"
 
-# store-read handles per (applicationId, sf_dir) — *_CACHE contract
-_STORE_CACHE: dict[tuple[str, str], DataFrame] = {}
 
-
-def _pair_store_table(sf_dir: str) -> str:
-    """Content-addressed location for sf_dir's published pair set:
-    keyed by the documents fixture's (path, size, mtime) plus the
-    algorithm version AND the live algorithm parameters (interpolated
-    from the constants dedup_minhash actually uses, never hand-written
-    literals — r8 ADVICE: a stale literal would defeat the guarantee
-    this docstring states). The default base is per-uid under 0700
-    (storeutil.store_base) so another user on a shared host cannot
-    pre-plant an artifact at a predictable path."""
-    import hashlib
-    import os
-
-    from ..storeutil import store_base
-
-    base = store_base(PAIR_STORE_ENV, "spark_graft_pair_store")
-    doc = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
-    try:
-        st = os.stat(doc)
-        ident = f"{doc}|{st.st_size}|{st.st_mtime_ns}"
-    except OSError:
-        ident = f"{doc}|missing"
-    fp = hashlib.md5(
-        f"{ident}|minhash|{N_HASHES}|{BAND_SIZE}"
-        f"|j{JACCARD_THRESHOLD}|v1".encode()
-    ).hexdigest()[:16]
-    return os.path.join(base, fp, "minhash_pairs")
+def pair_store_dir(sf_dir: str, leaf: str = "minhash_pairs") -> str:
+    """Location of sf_dir's published pair set (and, under other
+    leaves, of artifacts derived from it): keyed by the documents
+    fixture plus the LIVE MinHash constants dedup_minhash uses, never
+    hand-written literals (r8 ADVICE: a stale literal would serve the
+    old pairs after a constant change)."""
+    return artifact_dir(
+        PAIR_STORE_ENV, "spark_graft_pair_store", sf_dir,
+        "documents.parquet",
+        f"minhash|{N_HASHES}|{BAND_SIZE}|j{JACCARD_THRESHOLD}|v1", leaf,
+    )
 
 
 def verified_pair_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -434,31 +417,13 @@ def verified_pair_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     read the artifact, so isolated per-query accounting charges each
     composer its marginal work, exactly as production would.
 
-    An EMPTY pair set (legal on degenerate fixtures) is returned
-    directly without publishing — publish_versioned rejects empty
-    tables by design and recomputing nothing costs nothing.
     Correctness is unaffected by the seam: the artifact is
     content-addressed to the fixture bytes and the parquet roundtrip
     of (long, long, double) is exact, so consumers see bit-identical
     rows either way (driver-checked via the composers' green rows)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _STORE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    from ..publish import publish_versioned, read_versioned
-
-    table_dir = _pair_store_table(sf_dir)
-    try:
-        stored = read_versioned(spark, table_dir)
-    except FileNotFoundError:
-        computed = dedup_minhash(spark, sf_dir)
-        if computed.limit(1).count() == 0:
-            return computed
-        publish_versioned(computed, table_dir)
-        stored = read_versioned(spark, table_dir)
-    result = stored.orderBy("doc_a", "doc_b")
-    _STORE_CACHE[key] = result
-    return result
+    return published(
+        spark, pair_store_dir(sf_dir), lambda: dedup_minhash(spark, sf_dir)
+    ).orderBy("doc_a", "doc_b")
 
 
 @query(

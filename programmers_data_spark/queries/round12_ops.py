@@ -871,10 +871,6 @@ def crossmodal_dup_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the rest. A pure function of the id, so both engines agree on the
 # split for free and the full rebuild is a split-independent oracle.
 
-# the persisted existing+arrivals index — aliased to the shared
-# engine's cache (see the published index seam below)
-_IMG_INCR_INDEX_CACHE = media_index._INCR_INDEX_CACHE
-
 
 @query(
     "image_neardup_incremental",
@@ -922,9 +918,6 @@ def image_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------- streaming index maintenance
-
-# aliased to the shared engine's cache (see the published index seam)
-_IMG_INGEST_CACHE = media_index._INGEST_CACHE
 
 
 @query(
@@ -1202,20 +1195,7 @@ def audio_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the hash table above) — the round-12 bespoke implementation moved
 # to the engine verbatim when the audio/video tiers adopted the same
 # lifecycle, preserving every identity (artifact paths, catalog
-# names, content addressing, scratch envs). Caches are aliased so
-# existing .clear() call sites and bench._reset's package-wide
-# *_CACHE sweep reach the engine's memos.
-_IMG_STORE_CACHE = media_index._HASH_STORE_CACHE
-
-_IMG_BAND_STORE_CACHE = media_index._BAND_STORE_CACHE
-
-
-def _img_store_table(sf_dir: str) -> str:
-    """Content-addressed location for sf_dir's published image-hash
-    index (media_index.store_table_dir with IMAGE_SPEC): fixture
-    bytes (path, size, mtime) + the LIVE algorithm parameters (never
-    hand-written literals — the pair-store r8 lesson)."""
-    return media_index.store_table_dir(IMAGE_SPEC, sf_dir)
+# names, content addressing, scratch envs).
 
 
 def image_band_store(spark: SparkSession, sf_dir: str) -> DataFrame:

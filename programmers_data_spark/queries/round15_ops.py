@@ -269,10 +269,6 @@ def stream_text_neardup_ingest(
 
 # --------------------------------- incremental cluster maintenance
 
-# store-read handles per (applicationId, sf_dir, resolved store dir)
-# — *_CACHE contract
-_TEXT_CLUSTER_STORE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
 
 def text_cluster_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster assignments over the EXISTING text corpus (doc_id % 10
@@ -287,34 +283,17 @@ def text_cluster_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     Columns: (doc_id, cluster_id), cluster_id = min member id;
     singletons map to themselves. Content-addressed UNDER the pair
     store's fingerprint directory (same fixture bytes + live MinHash
-    constants), residue in the leaf name — the media-tier layout. An
-    empty existing corpus returns the computed empty frame directly
-    (publish_versioned rejects empty tables by design)."""
-    import os
-
+    constants), residue in the leaf name — the media-tier layout."""
     from ..operators import connected_components_auto
-    from ..publish import publish_versioned, read_versioned
+    from ..storeutil import published
     from .curation_ops import _NEW_BATCH_RESIDUE
     from .dedup_ops import (
         _augmented_docs,
-        _pair_store_table,
+        pair_store_dir,
         verified_pair_store,
     )
 
-    table_dir = os.path.join(
-        os.path.dirname(_pair_store_table(sf_dir)),
-        f"text_clusters_r{_NEW_BATCH_RESIDUE}",
-    )
-    # memo key binds the RESOLVED store dir (env + fixture
-    # fingerprint) — the r14 learning: monkeypatched store envs then
-    # miss the cache naturally, no manual clears in tests
-    key = (spark.sparkContext.applicationId, sf_dir, table_dir)
-    cached = _TEXT_CLUSTER_STORE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    try:
-        stored = read_versioned(spark, table_dir)
-    except FileNotFoundError:
+    def build() -> DataFrame:
         is_existing = lambda c: (F.col(c) % 10) != _NEW_BATCH_RESIDUE  # noqa: E731
         pairs = verified_pair_store(spark, sf_dir).filter(
             is_existing("doc_a") & is_existing("doc_b")
@@ -325,18 +304,18 @@ def text_cluster_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id")
             .filter(is_existing("doc_id"))
         )
-        computed = ids.join(
+        return ids.join(
             labels, ids["doc_id"] == labels["vertex"], "left"
         ).select(
             "doc_id",
             F.coalesce("component", "doc_id").alias("cluster_id"),
         )
-        if computed.limit(1).count() == 0:  # bounded 1-value scalar
-            return computed
-        publish_versioned(computed, table_dir)
-        stored = read_versioned(spark, table_dir)
-    _TEXT_CLUSTER_STORE_CACHE[key] = stored
-    return stored
+
+    return published(
+        spark,
+        pair_store_dir(sf_dir, f"text_clusters_r{_NEW_BATCH_RESIDUE}"),
+        build,
+    )
 
 
 def _text_cluster_full_oracle() -> str:

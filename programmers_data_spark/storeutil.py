@@ -1,6 +1,6 @@
-"""Shared-artifact store locations — safe defaults for the published
-intermediate tables that composition queries read (the verified
-near-dup pair store, the JSONL interchange store).
+"""Shared-artifact stores — where a published derived table lives, and
+how it is built once per corpus version and read afterwards (see
+SCALE.md "Published artifacts").
 
 Two requirements the naive ``$TMPDIR/fixed_name`` default violates:
 
@@ -17,9 +17,29 @@ Two requirements the naive ``$TMPDIR/fixed_name`` default violates:
 
 from __future__ import annotations
 
+import hashlib
 import os
 import stat
 import tempfile
+from collections.abc import Callable
+
+# Every env var that names a store base: the published artifacts and
+# the scratch trees of ingest, interchange and audit queries. bench.py
+# isolates each one per run; tests/test_artifacts.py checks that every
+# base the package resolves is listed.
+STORE_ENVS = (
+    "SPARK_GRAFT_PAIR_STORE", "SPARK_GRAFT_DERIV_STORE",
+    "SPARK_GRAFT_IMG_STORE", "SPARK_GRAFT_AUDIO_STORE",
+    "SPARK_GRAFT_VIDEO_STORE", "SPARK_GRAFT_EMB_STORE",
+    "SPARK_GRAFT_EMB_INGEST_STORE", "SPARK_GRAFT_TEXT_INGEST_STORE",
+    "SPARK_GRAFT_IMG_INGEST_STORE", "SPARK_GRAFT_JSONL_STORE",
+    "SPARK_GRAFT_ORC_STORE", "SPARK_GRAFT_UPSERT_PUB_STORE",
+    "SPARK_GRAFT_LATE_STORE", "SPARK_GRAFT_DEDUP_AUDIT_STORE",
+    "SPARK_GRAFT_AUDIO_INGEST_STORE", "SPARK_GRAFT_VIDEO_INGEST_STORE",
+)
+
+# store-read handles per (applicationId, table dir) — *_CACHE contract
+_ARTIFACT_CACHE: dict = {}
 
 
 def store_base(env_var: str, name: str) -> str:
@@ -54,3 +74,97 @@ def store_base(env_var: str, name: str) -> str:
                 f"chmod 0700 it or set ${env_var}"
             )
     return base
+
+
+def artifact_dir(
+    env: str, default_name: str, sf_dir: str, fixture: str, key: str, leaf: str
+) -> str:
+    """Content-addressed location of one artifact derived from one
+    fixture table: ``store_base(env, default_name)/<fp>/leaf`` where
+    fp hashes the fixture's (abspath, size, mtime_ns) plus ``key`` —
+    the derivation's LIVE parameters, so a regenerated fixture or a
+    changed constant re-keys the store instead of serving stale
+    rows."""
+    base = store_base(env, default_name)
+    f = os.path.abspath(os.path.join(sf_dir, fixture))
+    try:
+        st = os.stat(f)
+        ident = f"{f}|{st.st_size}|{st.st_mtime_ns}"
+    except OSError:
+        ident = f"{f}|missing"
+    fp = hashlib.md5(f"{ident}|{key}".encode()).hexdigest()[:16]
+    return os.path.join(base, fp, leaf)
+
+
+def _is_empty(df) -> bool:
+    return df.limit(1).count() == 0  # bounded 1-value scalar
+
+
+def published(spark, table_dir: str, build: Callable):
+    """Read the artifact at ``table_dir``; on a miss, publish
+    ``build()`` through the K8 validated swap (publish_versioned) and
+    read it back. An empty build is returned unpublished
+    (publish_versioned rejects empty tables by design)."""
+    key = (spark.sparkContext.applicationId, table_dir)
+    cached = _ARTIFACT_CACHE.get(key)
+    if cached is not None:
+        return cached
+    from .publish import publish_versioned, read_versioned
+
+    try:
+        stored = read_versioned(spark, table_dir)
+    except FileNotFoundError:
+        computed = build()
+        if _is_empty(computed):
+            return computed
+        publish_versioned(computed, table_dir)
+        stored = read_versioned(spark, table_dir)
+    _ARTIFACT_CACHE[key] = stored
+    return stored
+
+
+def published_bucketed(
+    spark,
+    path: str,
+    prefix: str,
+    ddl: str,
+    bucket_by: list[str],
+    n_buckets: int,
+    build: Callable,
+):
+    """The bucketed twin of :func:`published`: the artifact at
+    ``path`` is an external table hash-bucketed (and sorted) by
+    ``bucket_by``, so every join on that key plans with no Exchange
+    on its side. Files already on disk are re-registered through DDL
+    (columns ``ddl``); otherwise ``build()`` is written via
+    sinks.save_bucketed. The catalog name binds the FULL path, so two
+    store bases in one session never share a table entry."""
+    key = (spark.sparkContext.applicationId, path)
+    cached = _ARTIFACT_CACHE.get(key)
+    if cached is not None:
+        return cached
+    name = f"{prefix}_" + hashlib.md5(path.encode()).hexdigest()[:12]
+    if not spark.catalog.tableExists(name):
+        if os.path.isdir(path) and any(
+            f.endswith(".parquet") for f in os.listdir(path)
+        ):
+            spark.sql(
+                f"CREATE TABLE {name} ({ddl}) USING PARQUET "
+                f"CLUSTERED BY ({', '.join(bucket_by)}) "
+                f"INTO {n_buckets} BUCKETS LOCATION '{path}'"
+            )
+        else:
+            from . import sinks
+
+            computed = build()
+            if _is_empty(computed):
+                return computed
+            sinks.save_bucketed(
+                computed, name, path,
+                bucket_by=bucket_by,
+                n_buckets=n_buckets,
+                sort_by=bucket_by,
+            )
+    table = spark.table(name)
+    _ARTIFACT_CACHE[key] = table
+    return table

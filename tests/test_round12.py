@@ -12,7 +12,8 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from programmers_data_spark import registry  # noqa: E402
+from programmers_data_spark import media_index, registry  # noqa: E402
+from programmers_data_spark.memo import clear_memo_caches  # noqa: E402
 from programmers_data_spark.queries.round12_ops import (  # noqa: E402
     HAM_T,
     IMG_H,
@@ -289,7 +290,7 @@ def test_stream_ingest_cleans_scratch(spark, planted_dir):
 
     from programmers_data_spark.queries import round12_ops
 
-    round12_ops._IMG_INGEST_CACHE.clear()
+    clear_memo_caches()
     registry.QUERIES["stream_image_neardup_ingest"](
         spark, planted_dir
     ).count()
@@ -401,7 +402,7 @@ def test_image_hash_store_roundtrip(spark, planted_dir, tmp_path, monkeypatch):
     from programmers_data_spark.queries import round12_ops
 
     monkeypatch.setenv(round12_ops.IMG_STORE_ENV, str(tmp_path))
-    round12_ops._IMG_STORE_CACHE.clear()
+    clear_memo_caches()
     first = round12_ops.image_hash_store(spark, planted_dir)
     direct = round12_ops._image_hash_table(spark, planted_dir)
     assert first.subtract(direct).count() == 0
@@ -412,7 +413,7 @@ def test_image_hash_store_roundtrip(spark, planted_dir, tmp_path, monkeypatch):
 
     gens = glob.glob(str(tmp_path) + "/*/image_hashes/*")
     assert gens, "nothing was published"
-    round12_ops._IMG_STORE_CACHE.clear()
+    clear_memo_caches()
     again = round12_ops.image_hash_store(spark, planted_dir)
     assert again.subtract(direct).count() == 0
     assert gens == glob.glob(str(tmp_path) + "/*/image_hashes/*")
@@ -495,8 +496,7 @@ def test_incremental_probe_index_side_plans_without_exchange(
     from programmers_data_spark.queries import round12_ops
 
     monkeypatch.setenv(round12_ops.IMG_STORE_ENV, str(tmp_path))
-    round12_ops._IMG_STORE_CACHE.clear()
-    round12_ops._IMG_BAND_STORE_CACHE.clear()
+    clear_memo_caches()
     allb = round12_ops.image_band_store(spark, planted_dir)
     arrivals = round12_ops._image_hash_table(spark, planted_dir).filter(
         F.col("media_id") % 3 == round12_ops.IMG_ARRIVAL_RESIDUE
@@ -529,24 +529,22 @@ def test_band_store_reregisters_over_existing_files(
     from programmers_data_spark.queries import round12_ops
 
     monkeypatch.setenv(round12_ops.IMG_STORE_ENV, str(tmp_path))
-    round12_ops._IMG_STORE_CACHE.clear()
-    round12_ops._IMG_BAND_STORE_CACHE.clear()
+    clear_memo_caches()
     first = round12_ops.image_band_store(spark, planted_dir)
     expected = round12_ops._band_frame(
         round12_ops._image_hash_table(spark, planted_dir)
     )
     assert first.subtract(expected).count() == 0
     assert expected.subtract(first).count() == 0
-    path = os.path.join(
-        os.path.dirname(round12_ops._img_store_table(planted_dir)),
-        "image_bands",
+    path = media_index.store_table_dir(
+        round12_ops.IMAGE_SPEC, planted_dir, "bands"
     )
     files = sorted(glob.glob(path + "/*.parquet"))
     assert files, "band store not published"
     # simulate the fresh session: drop the catalog entry, keep files
     name = "img_bands_" + hashlib.md5(path.encode()).hexdigest()[:12]
     spark.sql(f"DROP TABLE IF EXISTS {name}")
-    round12_ops._IMG_BAND_STORE_CACHE.clear()
+    clear_memo_caches()
     again = round12_ops.image_band_store(spark, planted_dir)
     assert sorted(glob.glob(path + "/*.parquet")) == files  # no rewrite
     assert again.subtract(expected).count() == 0

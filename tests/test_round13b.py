@@ -15,6 +15,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import pyspark.sql.functions as F  # noqa: E402
 
 from programmers_data_spark import media_index, registry  # noqa: E402
+from programmers_data_spark.memo import clear_memo_caches  # noqa: E402
 from programmers_data_spark.testing import compare_to_oracle  # noqa: E402
 
 registry.load_all()
@@ -50,10 +51,7 @@ def _isolate(monkeypatch, tmp_path, spec):
     """Point a spec's published store at a fresh dir and clear the
     engine memos so the test sees a cold lifecycle."""
     monkeypatch.setenv(spec.store_env, str(tmp_path))
-    media_index._HASH_STORE_CACHE.clear()
-    media_index._BAND_STORE_CACHE.clear()
-    media_index._INCR_INDEX_CACHE.clear()
-    media_index._INGEST_CACHE.clear()
+    clear_memo_caches()
 
 
 @pytest.mark.parametrize(
@@ -160,7 +158,7 @@ def test_streaming_ingest_cleans_scratch(spark, planted_dir):
 
     from programmers_data_spark.storeutil import store_base
 
-    media_index._INGEST_CACHE.clear()
+    clear_memo_caches()
     registry.QUERIES["stream_video_neardup_ingest"](
         spark, planted_dir
     ).count()
@@ -299,7 +297,6 @@ def test_pair_store_publishes_once_then_reads(
 
     spec = round12_ops.IMAGE_SPEC
     _isolate(monkeypatch, tmp_path, spec)
-    media_index._PAIR_STORE_CACHE.clear()
 
     first = media_index.pair_store(spark, planted_dir, spec)
     rows1 = [(r.media_a, r.media_b, r.ham_d)
@@ -308,7 +305,7 @@ def test_pair_store_publishes_once_then_reads(
     pair_dirs = _glob.glob(str(tmp_path / "*" / "image_pairs" / "gen-*"))
     assert len(pair_dirs) == 1, pair_dirs
 
-    media_index._PAIR_STORE_CACHE.clear()
+    clear_memo_caches()
     again = media_index.pair_store(spark, planted_dir, spec)
     rows2 = [(r.media_a, r.media_b, r.ham_d)
              for r in again.orderBy("media_a", "media_b").collect()]

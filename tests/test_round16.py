@@ -91,6 +91,7 @@ import sys  # noqa: E402
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from programmers_data_spark import registry  # noqa: E402
+from programmers_data_spark.memo import clear_memo_caches  # noqa: E402
 from programmers_data_spark.testing import compare_to_oracle  # noqa: E402
 from tests.conftest import SF_ORACLE as SF_DIR  # noqa: E402
 
@@ -216,11 +217,10 @@ def test_embedding_ingest_cleans_scratch(spark):
     instantiation too."""
     import glob
 
-    from programmers_data_spark.queries import round16_ops
     from programmers_data_spark.embedding_index import EMB_INGEST_ENV
     from programmers_data_spark.storeutil import store_base
 
-    round16_ops._EMB_INGEST_CACHE.clear()
+    clear_memo_caches()
     registry.QUERIES["stream_embedding_neardup_ingest"](
         spark, SF_DIR
     ).count()
@@ -235,14 +235,12 @@ def test_pair_store_publishes_once_and_rereads(spark, tmp_path, monkeypatch):
     from programmers_data_spark import embedding_index as EI
 
     monkeypatch.setenv(EI.EMB_STORE_ENV, str(tmp_path))
-    EI._SIG_STORE_CACHE.clear()
-    EI._EMB_PAIR_STORE_CACHE.clear()
-    EI._EMB_CLUSTER_STORE_CACHE.clear()
+    clear_memo_caches()
     first = {
         (r.vec_a, r.vec_b)
         for r in EI.pair_store(spark, SF_DIR).collect()
     }
-    EI._EMB_PAIR_STORE_CACHE.clear()
+    clear_memo_caches()
     second = {
         (r.vec_a, r.vec_b)
         for r in EI.pair_store(spark, SF_DIR).collect()
@@ -330,10 +328,7 @@ def test_embedding_stores_on_degenerate_fixture(
     ).to_parquet(fx / "embeddings.parquet", index=False)
     monkeypatch.setenv(EI.EMB_STORE_ENV, str(tmp_path / "store"))
     monkeypatch.setenv(EI.EMB_INGEST_ENV, str(tmp_path / "ing"))
-    EI._SIG_STORE_CACHE.clear()
-    EI._EMB_PAIR_STORE_CACHE.clear()
-    EI._EMB_CLUSTER_STORE_CACHE.clear()
-    round16_ops._EMB_INGEST_CACHE.clear()
+    clear_memo_caches()
     sfd = str(fx)
     assert EI.sig_store(spark, sfd).count() == 0
     assert EI.pair_store(spark, sfd).count() == 0

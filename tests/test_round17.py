@@ -13,6 +13,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from programmers_data_spark import registry  # noqa: E402
+from programmers_data_spark.memo import clear_memo_caches  # noqa: E402
 from programmers_data_spark.testing import compare_to_oracle  # noqa: E402
 from tests.conftest import SF_ORACLE as SF_DIR  # noqa: E402
 
@@ -187,13 +188,11 @@ def test_text_cluster_store_publishes_once_and_rereads(
     from programmers_data_spark.queries import dedup_ops, round15_ops
 
     monkeypatch.setenv(dedup_ops.PAIR_STORE_ENV, str(tmp_path))
-    dedup_ops._STORE_CACHE.clear()
-    round15_ops._TEXT_CLUSTER_STORE_CACHE.clear()
     first = {
         (r.doc_id, r.cluster_id)
         for r in round15_ops.text_cluster_store(spark, SF_DIR).collect()
     }
-    round15_ops._TEXT_CLUSTER_STORE_CACHE.clear()
+    clear_memo_caches()
     second = {
         (r.doc_id, r.cluster_id)
         for r in round15_ops.text_cluster_store(spark, SF_DIR).collect()

@@ -15,6 +15,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from programmers_data_spark import registry  # noqa: E402
+from programmers_data_spark.memo import clear_memo_caches  # noqa: E402
 from tests.conftest import SF_ORACLE as SF_DIR  # noqa: E402
 
 registry.load_all()
@@ -34,13 +35,9 @@ def fresh_deriv_store(monkeypatch, tmp_path):
     from programmers_data_spark import derived_store as ds
 
     monkeypatch.setenv(ds.DERIV_STORE_ENV, str(tmp_path / "deriv"))
-    for attr in dir(ds):
-        if attr.endswith("_CACHE"):
-            getattr(ds, attr).clear()
+    clear_memo_caches()
     yield ds
-    for attr in dir(ds):
-        if attr.endswith("_CACHE"):
-            getattr(ds, attr).clear()
+    clear_memo_caches()
 
 
 def test_store_consumers_scan_store_not_fixture(spark, fresh_deriv_store):
@@ -129,7 +126,7 @@ def test_store_build_is_charged_once_per_version(spark, fresh_deriv_store, tmp_p
     ds.token_store(spark, SF_DIR)
     gens = glob.glob(str(tmp_path / "deriv" / "*" / "tokens" / "gen-*"))
     assert len(gens) == 1, gens
-    ds._TOKENS_CACHE.clear()
+    clear_memo_caches()
     ds.token_store(spark, SF_DIR)
     gens2 = glob.glob(str(tmp_path / "deriv" / "*" / "tokens" / "gen-*"))
     assert gens2 == gens

@@ -210,10 +210,10 @@ def test_pair_store_keys_on_fixture_identity(spark, sf_smoke, tmp_path):
     """The artifact is content-addressed: a different fixture dir (or
     a regenerated documents.parquet) maps to a different store table,
     so stale pairs can never serve a new corpus."""
-    from programmers_data_spark.queries.dedup_ops import _pair_store_table
+    from programmers_data_spark.queries.dedup_ops import pair_store_dir
 
-    a = _pair_store_table(sf_smoke)
-    b = _pair_store_table(str(tmp_path))
+    a = pair_store_dir(sf_smoke)
+    b = pair_store_dir(str(tmp_path))
     assert a != b
 
 

@@ -103,16 +103,16 @@ def test_publish_heartbeats_claim_while_write_in_flight(
 
 
 def test_pair_store_fingerprint_tracks_threshold(monkeypatch, tmp_path):
-    """_pair_store_table must derive its fingerprint from the LIVE
+    """pair_store_dir must derive its fingerprint from the LIVE
     JACCARD_THRESHOLD constant: changing the constant must change the
     store path (a stale hand-written literal would keep serving the
     old published pairs)."""
     import programmers_data_spark.queries.dedup_ops as dd
 
     monkeypatch.setenv(dd.PAIR_STORE_ENV, str(tmp_path))
-    p1 = dd._pair_store_table("/root/testdata/sf0.001")
+    p1 = dd.pair_store_dir("/root/testdata/sf0.001")
     monkeypatch.setattr(dd, "JACCARD_THRESHOLD", 0.7)
-    p2 = dd._pair_store_table("/root/testdata/sf0.001")
+    p2 = dd.pair_store_dir("/root/testdata/sf0.001")
     assert p1 != p2
 
 
