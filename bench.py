@@ -87,6 +87,17 @@ def control_median_ratio(
     return round(med, 4)
 
 
+def _isolate_stores(tag: str) -> None:
+    """Point every store base (storeutil.STORE_ENVS) at a fresh temp
+    dir, so nothing a previous run published is read back."""
+    import tempfile
+
+    from programmers_data_spark.storeutil import STORE_ENVS
+
+    for env in STORE_ENVS:
+        os.environ[env] = tempfile.mkdtemp(prefix=f"pds_{tag}_{env.lower()}_")
+
+
 def _reset(spark) -> None:
     """Per-query isolation: drop persisted tables, module-level memo
     caches, and accumulated heap garbage so each timed query pays its
@@ -98,13 +109,10 @@ def _reset(spark) -> None:
     from programmers_data_spark.memo import clear_memo_caches
 
     spark.catalog.clearCache()
-    # Derive the memo-cache list DYNAMICALLY (r5 advice: a hand-kept
-    # list missed _SEM_CACHE et al., letting some queries skip their
-    # driver-side training in the timed run): every module-level
-    # *_CACHE dict ANYWHERE in the package is cleared — the whole
-    # programmers_data_spark.* prefix, not just queries.* (r6 advice:
-    # a future cache in streaming/ etc. must not escape isolation).
-    # tests/test_round7.py asserts this sweep reaches every *_CACHE.
+    # every in-session memo lives in memo.py's one store (a hand-kept
+    # list once missed some, letting queries skip their driver-side
+    # training in the timed run); tests/test_round7.py checks that no
+    # module keeps a memo of its own
     clear_memo_caches()
     spark.sparkContext._jvm.System.gc()
 
@@ -180,12 +188,7 @@ def main() -> None:
     # charges each composer its marginal read-side work. A lingering
     # store from a previous run would hide the build cost entirely; an
     # isolated temp dir per base keeps the accounting honest.
-    import tempfile
-
-    from programmers_data_spark.storeutil import STORE_ENVS
-
-    for env in STORE_ENVS:
-        os.environ[env] = tempfile.mkdtemp(prefix=f"pds_bench_{env.lower()}_")
+    _isolate_stores("bench")
     spark = get_spark(app_name="pds-bench")
 
     registry.load_all()

@@ -46,6 +46,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .memo import memoized
 from .storeutil import artifact_dir, published, published_bucketed
 
 
@@ -90,15 +91,6 @@ class MediaIndexSpec:
         return self.ingest_prefix or f"{self.name}ingest_"
 
 
-# Memoized per _memo_key: (applicationId, sf_dir, spec.name,
-# resolved store table dir) — the last element makes a mid-session
-# SPARK_GRAFT_*_STORE change naturally miss the cache instead of
-# serving a result built over the previous store (r13 ADVICE #2).
-_MemoKey = tuple[str, str, str, str]
-_INCR_INDEX_CACHE: dict[_MemoKey, DataFrame] = {}
-_INGEST_CACHE: dict[_MemoKey, DataFrame] = {}
-
-
 def store_table_dir(
     spec: MediaIndexSpec, sf_dir: str, leaf: str = "hashes"
 ) -> str:
@@ -109,20 +101,6 @@ def store_table_dir(
     return artifact_dir(
         spec.store_env, f"spark_graft_{spec.name[:3]}_store", sf_dir,
         "documents.parquet", spec.algo_fp, f"{spec.name}_{leaf}",
-    )
-
-
-def _memo_key(
-    spark: SparkSession, sf_dir: str, spec: MediaIndexSpec
-) -> tuple[str, str, str, str]:
-    """Cache key for the per-batch memos: binds the RESOLVED store
-    table dir (env var + fixture fingerprint) so changing
-    SPARK_GRAFT_*_STORE mid-session misses the cache naturally."""
-    return (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        spec.name,
-        store_table_dir(spec, sf_dir),
     )
 
 
@@ -309,6 +287,33 @@ def _ham(prefix_a: str = "a", prefix_b: str = "b"):
     ).cast("int")
 
 
+# The memos below take the RESOLVED store table dir (env var + fixture
+# fingerprint) as an argument, so a mid-session SPARK_GRAFT_*_STORE
+# change misses the memo instead of serving a result built over the
+# previous store (r13 ADVICE #2).
+@memoized
+def _arrival_index(
+    spark: SparkSession, sf_dir: str, spec: MediaIndexSpec, table_dir: str
+) -> DataFrame:
+    """The published index with this batch's arrivals re-hashed in.
+    Persisted: it feeds THREE branches of incremental_delta (the band
+    table and both Hamming-lookup sides)."""
+    from .catalog import load_table
+    from .queries.round12_ops import _doc_count, _scene_count
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    scenes = _scene_count(_doc_count(spark, sf_dir))
+    existing = hash_store(spark, sf_dir, spec).filter(
+        F.col("media_id") % 3 != spec.arrival_residue
+    )
+    arrivals = spec.hash_frame(
+        spark,
+        docs.filter(F.col("doc_id") % 3 == spec.arrival_residue),
+        scenes,
+    )
+    return existing.unionByName(arrivals).persist()
+
+
 def incremental_delta(
     spark: SparkSession, sf_dir: str, spec: MediaIndexSpec
 ) -> DataFrame:
@@ -332,34 +337,9 @@ def incremental_delta(
     BUCKETED band table — no Exchange and no per-run band
     re-derivation on the index side; cost proportional to the ARRIVAL
     batch and its bucket mates, never the index size."""
-    from .catalog import load_table
-    from .queries.round12_ops import (
-        HAM_T,
-        _band_frame,
-        _doc_count,
-        _scene_count,
-    )
+    from .queries.round12_ops import HAM_T, _band_frame
 
-    # persisted: the unioned index feeds THREE branches (the band
-    # table and both Hamming-lookup sides). Memoized per (app,
-    # sf_dir, modality) so repeated invocations don't stack cached
-    # RDDs (the r12 ADVICE #1 discipline).
-    key = _memo_key(spark, sf_dir, spec)
-    h = _INCR_INDEX_CACHE.get(key)
-    if h is None:
-        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        scenes = _scene_count(_doc_count(spark, sf_dir))
-        stored = hash_store(spark, sf_dir, spec)
-        existing = stored.filter(
-            F.col("media_id") % 3 != spec.arrival_residue
-        )
-        arrivals = spec.hash_frame(
-            spark,
-            docs.filter(F.col("doc_id") % 3 == spec.arrival_residue),
-            scenes,
-        )
-        h = existing.unionByName(arrivals).persist()
-        _INCR_INDEX_CACHE[key] = h
+    h = _arrival_index(spark, sf_dir, spec, store_table_dir(spec, sf_dir))
     arrivals = h.filter(F.col("media_id") % 3 == spec.arrival_residue)
     ab = _band_frame(arrivals)
     # index bands come from the PUBLISHED bucketed band table (the
@@ -436,7 +416,16 @@ def streaming_ingest(
     Round 16: the replay loop itself lives in ``ingest.replay_ingest``
     (r15 VERDICT ask #7) — this wrapper supplies the media family's
     callbacks (Arrow dHash kernel, dHash band explode, Hamming
-    verify) and the memo."""
+    verify) and the memo. The checkpointed result is
+    location-independent once built, but its memo binds the store dir
+    like every memo in this module (r14 ADVICE #1)."""
+    return _ingest(spark, sf_dir, spec, store_table_dir(spec, sf_dir))
+
+
+@memoized
+def _ingest(
+    spark: SparkSession, sf_dir: str, spec: MediaIndexSpec, table_dir: str
+) -> DataFrame:
     from .catalog import load_table
     from .ingest import replay_ingest
     from .queries.round12_ops import (
@@ -445,15 +434,6 @@ def streaming_ingest(
         _doc_count,
         _scene_count,
     )
-
-    # Same _memo_key discipline as the four store memos (r14 ADVICE
-    # #1): the checkpointed result is location-independent once built,
-    # but the uniform key keeps the mid-session-env-change staleness
-    # class closed for every memo in this module.
-    key = _memo_key(spark, sf_dir, spec)
-    cached = _INGEST_CACHE.get(key)
-    if cached is not None:
-        return cached
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
@@ -484,7 +464,7 @@ def streaming_ingest(
             .select("media_a", "media_b", "ham_d")
         )
 
-    result = replay_ingest(
+    return replay_ingest(
         spark,
         docs,
         slice_col="doc_id",
@@ -504,5 +484,3 @@ def streaming_ingest(
         n_slices=spec.n_slices,
         n_buckets=spec.n_buckets,
     )
-    _INGEST_CACHE[key] = result
-    return result

@@ -1,43 +1,87 @@
-"""Memo-cache contract (see SCALE.md 'Memo-cache contract').
+"""Session memo — the one store for results reused inside a Spark
+session (see SCALE.md "Session memo").
 
-Several queries share expensive derived tables (MinHash signatures,
-exact near-dup pairs, SemDeDup verdicts, TF-IDF postings, BPE merge
-tables, tokenized projections). Each is memoized in a MODULE-LEVEL
-dict whose name ends in ``_CACHE``, keyed by
-``(spark.sparkContext.applicationId, sf_dir)`` so a stale entry can
-never leak across sessions or scale factors.
+Several queries share expensive derived frames (MinHash signatures,
+near-dup pairs, SemDeDup verdicts, TF-IDF postings, BPE merge tables,
+store read handles). The function that builds one is decorated with
+:func:`memoized`; a function that memoizes only part of its work
+moves that part into a decorated helper. Every entry lives in ONE
+dict keyed ``(function, applicationId, *remaining call args)``:
 
-The convention is load-bearing: ``bench.py``'s per-query ``_reset``
-clears every such dict via :func:`clear_memo_caches` so each timed
-query pays its own full cost. A shared-helper memo that does NOT
-follow the convention (different suffix, instance attribute, closure)
-silently escapes bench isolation — the exact failure mode the r5/r6
-driver advice flagged. tests/test_round7.py enforces it by importing
-every module in the package, planting sentinels in every ``*_CACHE``
-dict, and asserting this sweep empties them all.
+- the applicationId means an entry never serves another session;
+- the remaining arguments (``sf_dir``, plus the resolved store dir
+  where the result depends on one) mean two scale factors or two
+  store bases never share an entry.
+
+A hit returns the very object the miss built. A call that raises
+stores nothing, so "not published yet" (``FileNotFoundError``) is
+simply retried on the next call.
+
+:func:`clear_memo_caches` is the owner that releases what the memo
+holds: it unpersists every DataFrame kept for the live session and
+empties the dict. ``bench.py`` and ``perfbench/harness.py`` call it
+between timed ops so each op pays its own full cost.
+tests/test_round7.py checks that no package module keeps a memo of
+its own.
 """
 
 from __future__ import annotations
 
-import sys
+import functools
+import inspect
+from collections.abc import Callable
+from typing import TypeVar
+
+from pyspark import SparkContext
+from pyspark.sql import DataFrame
+
+T = TypeVar("T")
+
+_MEMO: dict[tuple, object] = {}
+
+
+def memoized(fn: Callable[..., T]) -> Callable[..., T]:
+    """Memoize ``fn(spark, *args)`` per session and argument values
+    (defaults filled in, so a keyword spelling shares the entry)."""
+    sig = inspect.signature(fn)
+
+    @functools.wraps(fn)
+    def wrapper(spark, *args, **kwargs):
+        bound = sig.bind(spark, *args, **kwargs)
+        bound.apply_defaults()
+        rest = tuple(bound.arguments.values())[1:]
+        key = (fn, spark.sparkContext.applicationId, *rest)
+        if key in _MEMO:
+            return _MEMO[key]
+        value = fn(spark, *args, **kwargs)
+        _MEMO[key] = value
+        return value
+
+    return wrapper
+
+
+def _release(value: object) -> None:
+    if isinstance(value, DataFrame):
+        if value.is_cached:
+            value.unpersist()
+    elif isinstance(value, dict):
+        for part in value.values():
+            _release(part)
+    elif isinstance(value, (tuple, list)):
+        for part in value:
+            _release(part)
 
 
 def clear_memo_caches() -> int:
-    """Clear every module-level ``*_CACHE`` dict in any imported
-    ``programmers_data_spark`` module; returns how many dicts were
-    cleared. Safe to call without an active SparkSession (it only
-    drops driver-side references — pair with
-    ``spark.catalog.clearCache()`` to release executor storage)."""
-    prefix = __name__.rsplit(".", 1)[0]
-    cleared = 0
-    for mod in list(sys.modules.values()):
-        name = getattr(mod, "__name__", "")
-        if name != prefix and not name.startswith(prefix + "."):
-            continue
-        for attr in dir(mod):
-            if attr.endswith("_CACHE") and isinstance(
-                getattr(mod, attr), dict
-            ):
-                getattr(mod, attr).clear()
-                cleared += 1
-    return cleared
+    """Drop every memo entry; returns how many were dropped. Entries
+    of the live session have their persisted DataFrames (also those
+    inside dict, tuple or list values) unpersisted first; entries of
+    a stopped session are dropped without touching the JVM."""
+    sc = SparkContext._active_spark_context
+    live = sc.applicationId if sc is not None else None
+    for key, value in _MEMO.items():
+        if key[1] == live:
+            _release(value)
+    dropped = len(_MEMO)
+    _MEMO.clear()
+    return dropped

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from . import sinks, sources
 from .functions.cleaning import clean_numeric
+from .memo import memoized
 from .publish import (
     full_refresh,
     incremental_distinct,
@@ -245,14 +246,11 @@ def sql_to_sheet(
     return sinks.export_rows(sources.read_sql(spark, sql), deliver, max_rows=max_rows)
 
 
-# stage-frame memo per (applicationId, sf_dir, strategy) — *_CACHE
-# contract (bench._reset sweeps every module-level *_CACHE): repeated
-# calls (the pipeline plus the registered funnel contract, or several
-# counts against the same frames) must not re-run the eager component
-# resolution inside connected_components_auto.
-_STAGES_CACHE: dict[tuple, dict] = {}
-
-
+# memoized per strategy: repeated calls (the pipeline plus the
+# registered funnel contract, or several counts against the same
+# frames) must not re-run the eager component resolution inside
+# connected_components_auto.
+@memoized
 def curation_stage_frames(
     spark: SparkSession,
     sf_dir: str,
@@ -275,10 +273,6 @@ def curation_stage_frames(
     every keeper strategy (greedy / canonical / best_quality) applies
     to the multimodal graph unchanged — one dedup engine, four
     modalities."""
-    key = (spark.sparkContext.applicationId, sf_dir, near_dup, media)
-    cached = _STAGES_CACHE.get(key)
-    if cached is not None:
-        return cached
     from .catalog import load_table
     from .queries.dedup_ops import verified_pair_store
     from .queries.sampling_ops import train_val_split
@@ -428,15 +422,13 @@ def curation_stage_frames(
     # stages (what curate_corpus's publish step does for the final
     # one); rows are corpus-bounded and spill-safe, and bench's
     # clearCache keeps per-query accounting honest.
-    frames = {
+    return {
         "raw": docs,
         "quality_gated": gated,  # persisted at construction (r18)
         "exact_deduped": exact,  # persisted at construction (r18)
         "near_deduped": survivors.persist(),
         "curated": curated.persist(),
     }
-    _STAGES_CACHE[key] = frames
-    return frames
 
 
 def curate_corpus(

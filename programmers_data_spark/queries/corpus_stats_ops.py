@@ -68,6 +68,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions import textfn
+from ..memo import memoized
 from ..operators import bounded_global_window
 from ..registry import query
 from ._oracle_shared import _DUCK_TOKS
@@ -79,11 +80,6 @@ DISCOUNT = 5
 # fixed-point scale for the lift ratio (milli-lifts).
 LIFT_SCALE = 1000
 TOP_COLLOCATIONS = 50
-
-# memoized persisted unigram count table per (applicationId, sf_dir):
-# collocation_lift reads it from three plan branches (*_CACHE
-# contract — bench _reset clears it)
-_COLL_UNI_CACHE: dict = {}
 
 # doc-id checkpoints for the growth curve.
 N_CHECKPOINTS = 10
@@ -117,6 +113,22 @@ _DUCK_BIGRAMS = """
       FROM d WHERE len(toks) >= 2
     )
 """
+
+
+# persisted + memoized: THREE plan branches of collocation_lift
+# consume the unigram table (the N anchor and both join sides) —
+# unpersisted, each branch re-ran the tokenize→explode→groupBy
+# pipeline (4 documents scans in the physical plan, r17 opt; the
+# table is vocabulary-sized, never corpus-sized)
+@memoized
+def _unigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return (
+        load_table(spark, sf_dir, "documents")
+        .select(F.explode(textfn.tokenize("text")).alias("tok"))
+        .groupBy("tok")
+        .agg(F.count(F.lit(1)).cast("long").alias("cu"))
+        .persist()
+    )
 
 
 def _bigrams(toked: DataFrame, *keep: str) -> DataFrame:
@@ -193,21 +205,7 @@ def collocation_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     is TakeOrdered, not a global sort."""
     docs = load_table(spark, sf_dir, "documents")
     toked = docs.select("doc_id", textfn.tokenize("text").alias("toks"))
-    # persisted + memoized (*_CACHE contract): THREE plan branches
-    # consume the unigram table (the N anchor and both join sides) —
-    # unpersisted, each branch re-ran the tokenize→explode→groupBy
-    # pipeline (4 documents scans in the physical plan, r17 opt;
-    # the table is vocabulary-sized, never corpus-sized)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    uni = _COLL_UNI_CACHE.get(key)
-    if uni is None:
-        uni = (
-            toked.select(F.explode("toks").alias("tok"))
-            .groupBy("tok")
-            .agg(F.count(F.lit(1)).cast("long").alias("cu"))
-            .persist()
-        )
-        _COLL_UNI_CACHE[key] = uni
+    uni = _unigram_counts(spark, sf_dir)
     n_occ = uni.agg(F.sum("cu").cast("long").alias("n_occ"))
     cand = (
         _bigrams(toked)

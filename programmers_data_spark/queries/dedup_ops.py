@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import load_table
+from ..memo import memoized
 from ..operators import salted_band_pairs
 from ..registry import query
 from ..storeutil import artifact_dir, published
@@ -189,15 +190,6 @@ def _band_cols_duck() -> str:
 _N_BANDS = N_HASHES // BAND_SIZE
 
 
-# One persisted signature table per (Spark app, dataset): dedup_minhash,
-# minhash_jaccard_estimate, and near_dup_rate_by_source all call
-# minhash_signatures, and without memoization a full driver run pinned
-# 3+ identical cached copies (r4 advice). Keyed by applicationId so a
-# restarted session (tests) gets a fresh table; entries for stopped
-# sessions are dead tiny handles, not leaked executors.
-_SIG_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def sig_frame(docs: DataFrame) -> DataFrame:
     """The Arrow MinHash signature pass over an ARBITRARY
     (doc_id, text) frame — tokenizing, 3-gram shingling, and 8×md5
@@ -246,6 +238,7 @@ def sig_frame(docs: DataFrame) -> DataFrame:
     ).mapInPandas(_sig_batches, schema=sig_schema)
 
 
+@memoized
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shingles + MinHash signature table over the augmented corpus —
     sig_frame applied to the full corpus. Interpreted Catalyst HOFs
@@ -254,23 +247,13 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     branches (pair-gen a/b sides, Jaccard verify, sketch-accuracy
     estimates) read it; at 100 TB this is the "write the signature
     table once, reuse per batch" pattern. Shared by dedup_minhash and
-    minhash_jaccard_estimate (round3_ops); memoized so they share one
-    cached copy."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SIG_CACHE.get(key)
-    if cached is not None:
-        return cached
-    sigs = sig_frame(_augmented_docs(spark, sf_dir)).persist()
-    _SIG_CACHE[key] = sigs
-    return sigs
+    minhash_jaccard_estimate (round3_ops) and near_dup_rate_by_source;
+    memoized so they share one cached copy (without it a full
+    run pinned 3+ identical cached copies)."""
+    return sig_frame(_augmented_docs(spark, sf_dir)).persist()
 
 
-_PAIR_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-# dedup_minhash's verified pair set, memoized for its five composers
-_VERIFIED_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@memoized
 def minhash_band_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH candidate pairs from the banded signature table, memoized
     like the signature table itself: dedup_minhash and
@@ -285,20 +268,14 @@ def minhash_band_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket work spreads over 8 tasks instead of one straggler; cold
     buckets take the plain path. Identical pair set by construction
     (operators.salted_band_pairs; skew test in test_scale)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _PAIR_CACHE.get(key)
-    if cached is not None:
-        return cached
     sigs = minhash_signatures(spark, sf_dir)
     banded = sigs.select(
         "doc_id",
         F.posexplode(F.array(*_band_cols_spark())).alias("band_idx", "band"),
     )
-    pairs = salted_band_pairs(
+    return salted_band_pairs(
         banded, band_cols=("band_idx", "band"), id_col="doc_id"
     )
-    _PAIR_CACHE[key] = pairs
-    return pairs
 
 
 @query(
@@ -340,6 +317,7 @@ def minhash_band_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY doc_a, doc_b
     """,
 )
+@memoized
 def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup detection: shingle → 8 MinHashes → 4 LSH
     bands → bucket-join candidates → exact Jaccard ≥ 0.5 verify.
@@ -348,17 +326,13 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket join) — linear in docs + bucket collisions, never an
     all-pairs product.
 
-    The verified pair set (dozens of rows) is persisted and memoized
-    per (applicationId, sf_dir): five composition queries consume it
-    (near_dup_rate_by_source, cross_source_dup_matrix,
-    split_neardup_leakage, lsh_neardup_recall, dedup cluster twins),
-    several through multi-branch plans that would otherwise re-run
-    the verify join per branch (*_CACHE contract).
+    The verified pair set (dozens of rows) is persisted and memoized:
+    five composition queries consume it (near_dup_rate_by_source,
+    cross_source_dup_matrix, split_neardup_leakage,
+    lsh_neardup_recall, dedup cluster twins), several through
+    multi-branch plans that would otherwise re-run the verify join
+    per branch.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _VERIFIED_CACHE.get(key)
-    if cached is not None:
-        return cached
     sigs = minhash_signatures(spark, sf_dir)
     pairs = minhash_band_pairs(spark, sf_dir)
 
@@ -369,15 +343,13 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     jac = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(
         F.array_union("sh_a", "sh_b")
     )
-    result = (
+    return (
         verified.withColumn("jaccard", F.floor(jac * 10000 + 0.5) / 10000)
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("doc_a", "doc_b", "jaccard")
         .orderBy("doc_a", "doc_b")
         .persist()
     )
-    _VERIFIED_CACHE[key] = result
-    return result
 
 
 # ---------------------------------------------------------------------------
@@ -608,17 +580,11 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # components materializes EAGERLY (per-round localCheckpoint), so an
 # unshared call re-runs the whole iterative resolution and re-persists
 # an identical shingle table (CacheManager 'already cached' noise).
-# Memoized like the signature table: one cluster table per (app,
-# dataset), exactly the production shape — resolve components once,
-# every downstream keep/filter step reads the same table.
-_CLUSTERS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# Memoized like the signature table: one cluster table per session
+# and dataset, exactly the production shape — resolve components
+# once, every downstream keep/filter step reads the same table.
+@memoized
 def _clusters_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _CLUSTERS_CACHE.get(key)
-    if cached is not None:
-        return cached
     from ..operators import connected_components_auto
 
     sub = _augmented_docs(spark, sf_dir).filter(F.col("doc_id") % 1000000 < 120)
@@ -638,7 +604,7 @@ def _clusters_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     # graph exhausts the propagation cap (operators docstring has the
     # full choice rule)
     labels = connected_components_auto(edges, "doc_a", "doc_b")
-    clusters = (
+    return (
         shingled.select("doc_id")
         .join(labels, shingled["doc_id"] == labels["vertex"], "left")
         .select(
@@ -647,8 +613,6 @@ def _clusters_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("doc_id")
     )
-    _CLUSTERS_CACHE[key] = clusters
-    return clusters
 
 
 @query(

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..memo import memoized
 from ..operators import (
     anti_join,
     approx_distinct,
@@ -1218,12 +1219,9 @@ def event_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 # customer count
 _RFM_Q = 4
 
-# memoized result per (applicationId, sf_dir): the per-customer base
-# table persists for its three rank passes + final join (*_CACHE
-# contract — bench _reset clears it)
-_RFM_CACHE: dict = {}
 
-
+# memoized: the per-customer base table persists for its three rank
+# passes + final join
 @query(
     "rfm_segments",
     oracle=f"""
@@ -1262,6 +1260,7 @@ _RFM_CACHE: dict = {}
     ORDER BY r_q, f_q, m_q
     """,
 )
+@memoized
 def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM customer segmentation — the BI classic behind every CRM
     summary table: each customer scored into recency / frequency /
@@ -1282,10 +1281,6 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators import distributed_rank
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _RFM_CACHE.get(key)
-    if cached is not None:
-        return cached
     orders = load_table(spark, sf_dir, "orders")
     # persisted: the global "now" anchor derives from base's own
     # last_d (max over per-customer maxes == the global max — exact),
@@ -1333,5 +1328,4 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("n_customers"))
         .orderBy("r_q", "f_q", "m_q")
     )
-    _RFM_CACHE[key] = result
     return result

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..memo import memoized
 from ..registry import query
 from ..storeutil import store_base
 
@@ -36,9 +37,6 @@ N_SHARDS = 8
 # not just unit tests. Chosen without single quotes so the oracle can
 # embed them as SQL literals verbatim.
 _BAD_LINES = ('{"doc_id": "truncated', "plain garbage not json")
-
-# roundtrip result memo per (applicationId, sf_dir) — *_CACHE contract
-_JSONL_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 _DIGEST_DUCK = (
     "md5(concat_ws('|', CAST(doc_id AS VARCHAR), text, lang, source, "
@@ -78,6 +76,7 @@ def _digest_spark() -> F.Column:
 
 
 @query("jsonl_shard_roundtrip", oracle=_ORACLE)
+@memoized
 def jsonl_shard_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write → read → verify for the JSONL interchange layout.
 
@@ -101,11 +100,6 @@ def jsonl_shard_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..sinks import write_jsonl_shards
     from ..sources import parse_jsonl_with_rejects
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _JSONL_CACHE.get(key)
-    if cached is not None:
-        return cached
 
     base = store_base(JSONL_STORE_ENV, "spark_graft_jsonl")
     os.makedirs(base, exist_ok=True)  # an env-overridden base may be new
@@ -146,7 +140,6 @@ def jsonl_shard_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("shard")
         .persist()
     )
-    _JSONL_CACHE[key] = result
     return result
 
 
@@ -155,9 +148,6 @@ def jsonl_shard_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Operator-overridable base for the written ORC trees (bench pins a
 # fresh one per run; default is the per-uid tempdir base).
 ORC_STORE_ENV = "SPARK_GRAFT_ORC_STORE"
-
-# roundtrip result memo per (applicationId, sf_dir) — *_CACHE contract
-_ORC_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 _ORC_ORACLE = f"""
     SELECT lang,
@@ -169,6 +159,7 @@ _ORC_ORACLE = f"""
 
 
 @query("orc_partitioned_roundtrip", oracle=_ORC_ORACLE)
+@memoized
 def orc_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write → read → verify for Spark's native ORC format with a
     Hive-style partition layout — the second columnar interchange
@@ -194,11 +185,6 @@ def orc_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     a parallel columnar scan; digests partial-aggregate per
     partition. One extra pass over the corpus — the certification
     price, paid once per handoff."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _ORC_CACHE.get(key)
-    if cached is not None:
-        return cached
-
     base = store_base(ORC_STORE_ENV, "spark_graft_orc")
     os.makedirs(base, exist_ok=True)  # an env-overridden base may be new
     out = os.path.join(tempfile.mkdtemp(prefix="orc_rt_", dir=base), "docs")
@@ -220,5 +206,4 @@ def orc_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("lang")
         .persist()
     )
-    _ORC_CACHE[key] = result
     return result

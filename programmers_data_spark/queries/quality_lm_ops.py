@@ -60,14 +60,10 @@ from pyspark.sql.window import Window
 
 from ..catalog import load_table
 from ..functions import textfn
+from ..memo import memoized
 from ..operators import distributed_rank
 from ..registry import query
 from ._oracle_shared import _DUCK_TOKS
-
-# per-(applicationId, sf_dir) memo of the UNORDERED per-doc score
-# frame shared by both registered queries — *_CACHE contract: keyed
-# by applicationId so a fresh session never sees another's plan.
-_SCORES_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 _BAND_LABELS = ("head", "middle", "tail")
 
@@ -125,13 +121,11 @@ _DUCK_SCORES = f"""
 """
 
 
+@memoized
 def _doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unordered per-doc (doc_id, source, n_bigrams, surprisal_bits,
-    mean_millibits) frame — the shared LM-scoring pipeline."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SCORES_CACHE.get(key)
-    if cached is not None:
-        return cached
+    mean_millibits) frame — the LM-scoring pipeline both registered
+    queries share."""
     docs = load_table(spark, sf_dir, "documents")
     # map-side bigram build: slice the token array against its own
     # 1-shift and zip — pure codegen'd builtins, zero shuffles before
@@ -212,7 +206,6 @@ def _doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         # three times (rank window, band counts, total count)
         .persist()
     )
-    _SCORES_CACHE[key] = result
     return result
 
 

@@ -41,6 +41,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import load_table
 from ..functions import textfn
+from ..memo import memoized
 from ..operators import bounded_global_window, top_k
 from ..functions.vectors import as_double_array
 from ..registry import query
@@ -437,15 +438,12 @@ def _train_cells(spark: SparkSession, emb: DataFrame):
     return spark.sparkContext.broadcast(centroids)
 
 
-# Verdict-table memo per (application, sf_dir): semantic_dedup_recall
-# composes dedup_semantic, and the driver/bench call both — without
-# this the kmeans training, assignment pass, and per-cell GEMMs run
-# once per caller (the round-5 memoization learning, same shape as
-# dedup_ops._SIG_CACHE).
-_SEM_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# Memoized verdict table: semantic_dedup_recall composes
+# dedup_semantic, and the correctness run and bench call both —
+# without the memo the kmeans training, assignment pass, and per-cell
+# GEMMs run once per caller.
 @query("dedup_semantic")  # rows-only: k-means cell assignment isn't ANSI SQL
+@memoized
 def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic dedup: a k-means coarse quantizer
     scopes candidate pairs to cells, exact cosine within the cell
@@ -464,10 +462,6 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair volume subquadratic and each cell's block fits one task.
     Accuracy is driver-visible via semantic_dedup_recall.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SEM_CACHE.get(key)
-    if cached is not None:
-        return cached
     emb = load_vectors(spark, sf_dir)
     bc = _train_cells(spark, emb)
 
@@ -516,7 +510,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("is_dup", F.lit(True))
     )
-    verdicts = (
+    return (
         emb.select("vec_id")
         .join(dropped, "vec_id", "left")
         .select(
@@ -525,8 +519,6 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("vec_id")
         .persist()
     )
-    _SEM_CACHE[key] = verdicts
-    return verdicts
 
 
 _DUCK_COS_AB = (
@@ -699,13 +691,9 @@ def embedding_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
 TFIDF_DF_CAP = 10
 TFIDF_COS_THRESH = 0.25
 
-# memoized result per (applicationId, sf_dir): the query persists its
-# weighted-postings table for the three consuming branches, and
-# re-invocations must reuse that cached plan rather than stack a new
-# persist each call (the round-5 shared-helper memoization rule)
-_TFIDF_CACHE: dict = {}
 
-
+# memoized: the persisted weighted-postings table feeds three
+# branches, and a repeat call must reuse it, not stack a new persist
 @query(
     "tfidf_shingle_pairs",
     oracle=f"""
@@ -755,6 +743,7 @@ _TFIDF_CACHE: dict = {}
     ORDER BY doc_a, doc_b
     """,
 )
+@memoized
 def tfidf_shingle_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sparse TF-IDF cosine similarity over rare word-3-gram
     shingles: the lexical near-dup detector that complements the
@@ -783,10 +772,6 @@ def tfidf_shingle_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (df + pair join), one on (doc_a, doc_b); norms join back keyed by
     doc. Nothing is collected at all.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _TFIDF_CACHE.get(key)
-    if cached is not None:
-        return cached
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", textfn.tokenize("text").alias("toks")
     )
@@ -926,7 +911,6 @@ def tfidf_shingle_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("cos") >= F.lit(TFIDF_COS_THRESH))
         .orderBy("doc_a", "doc_b")
     )
-    _TFIDF_CACHE[key] = result
     return result
 
 
@@ -1229,13 +1213,6 @@ def mrl_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # regenerated fixture, unlike hand-written literals).
 N_PHRASES = 2
 
-# result memo per (applicationId, sf_dir): the query persists its
-# phrase table and phrase-postings match set for the positional
-# intersection's two sides — repeated calls must reuse the cached
-# plan, not stack new persisted copies (r17 ADVICE #2; the
-# *_CACHE contract, swept by bench._reset)
-_PHRASE_CACHE: dict = {}
-
 _PHRASE_TRI_DUCK = f"""
       SELECT doc_id,
              unnest(list_transform(
@@ -1264,6 +1241,7 @@ _PHRASE_TRI_DUCK = f"""
     ORDER BY phrase, doc_id
     """,
 )
+@memoized
 def phrase_match_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT PHRASE SEARCH over an inverted POSITIONAL index — the
     retrieval primitive behind quoted-query search: a phrase longer
@@ -1289,14 +1267,9 @@ def phrase_match_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
     selection is one vocabulary-cardinality groupBy + TakeOrdered.
     At 100 TB the same plan serves ad-hoc phrases with zero
     recompute of the index stream."""
-    # result memo per (applicationId, sf_dir) — *_CACHE contract
-    # (r17 ADVICE #2): the query persists two frames (phrases,
-    # matches), and repeated calls in one session must reuse the
-    # cached plan rather than stack fresh persisted copies
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _PHRASE_CACHE.get(key)
-    if cached is not None:
-        return cached
+    # memoized (r17 ADVICE #2): the query persists two frames
+    # (phrases, matches), and repeated calls in one session must reuse
+    # the cached plan rather than stack fresh persisted copies
     docs = load_table(spark, sf_dir, "documents")
     toked = docs.select("doc_id", textfn.tokenize("text").alias("toks"))
 
@@ -1383,7 +1356,6 @@ def phrase_match_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("n_occurrences"))
         .orderBy("phrase", "doc_id")
     )
-    _PHRASE_CACHE[key] = result
     return result
 
 

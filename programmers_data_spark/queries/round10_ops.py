@@ -60,6 +60,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions import textfn
+from ..memo import memoized
 from ..registry import ORACLE, query
 # dedup_ops registers EARLIER in registry._QUERY_MODULES, so both the
 # ORACLE["dedup_minhash"] composition and this import are safe (the
@@ -502,25 +503,17 @@ def cdc_apply_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -------------------------------------------- dup-cluster profile
 
-# Resolved component labels over the published verified pair set,
-# memoized per (applicationId, sf_dir): component resolution
-# localCheckpoints per round (eager), so two consumers
-# (neardup_cluster_profile, dedup_keep_best_quality) must share one
-# resolution — the *_CACHE contract (bench._reset clears it).
-_LABELS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# Resolved component labels over the published verified pair set:
+# component resolution localCheckpoints per round (eager), so its two
+# consumers (neardup_cluster_profile, dedup_keep_best_quality) must
+# share one resolution.
+@memoized
 def _pair_store_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _LABELS_CACHE.get(key)
-    if cached is not None:
-        return cached
     from ..operators import connected_components_auto
     from .dedup_ops import verified_pair_store
 
     pairs = verified_pair_store(spark, sf_dir).select("doc_a", "doc_b")
     labels = connected_components_auto(pairs, "doc_a", "doc_b")
-    _LABELS_CACHE[key] = labels
     return labels
 
 
@@ -656,8 +649,7 @@ def dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines.
 
     Scale shape: the component labels are memoized and shared with
-    neardup_cluster_profile (one resolution per run — the *_CACHE
-    contract); scoring is the classifier's one map-side pass; keeper
+    neardup_cluster_profile (one resolution per session); scoring is the classifier's one map-side pass; keeper
     selection is one window over the PAIR-BOUNDED member table
     (vertices of the dup graph, never the corpus)."""
     from . import dedup_ops

@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..memo import memoized
 from ..registry import ORACLE, query
 from .round12_ops import (
     _audio_frame,
@@ -63,6 +64,7 @@ from .round12_ops import (
     _pair_cte,
     _pairs_from,
     _scene_count,
+    _scene_truth,
     _xmodal_hash_table,
 )
 
@@ -122,9 +124,8 @@ def audio_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # same-audio-scene are independent events for unrelated documents.
 XMODAL_AUDIO_SCENE_EXTRA = 1
 
-_XMODAL_AUDIO_CACHE: dict[tuple[str, str], DataFrame] = {}
 
-
+@memoized
 def _xmodal_audio_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio fingerprints over the AUGMENTED corpus with canonical
     clip keying (the _xmodal_hash_table discipline for audio):
@@ -132,10 +133,6 @@ def _xmodal_audio_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-duplicate CLIP of its original while the partition differs
     from the image side's. Persisted + memoized (pair join
     branches)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _XMODAL_AUDIO_CACHE.get(key)
-    if cached is not None:
-        return cached
     from .dedup_ops import _augmented_docs
 
     n, n20, max_doc = _doc_stats(spark, sf_dir)
@@ -148,7 +145,6 @@ def _xmodal_audio_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _augmented_docs(spark, sf_dir)
     scenes = _scene_count(n + n20) + XMODAL_AUDIO_SCENE_EXTRA
     table = _audio_frame(spark, docs, scenes, canon_mod=1_000_000).persist()
-    _XMODAL_AUDIO_CACHE[key] = table
     return table
 
 
@@ -168,8 +164,6 @@ def _xmodal_audio_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pair is <= 8 = HAM_T apart and the SAME banded pair machinery
 # applies unchanged (measured: within-scene 0-4, cross-scene ~28-37).
 VIDEO_FRAMES = 4
-
-_VIDEO_HASH_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def _video_frame_buffer(
@@ -247,20 +241,16 @@ def _video_hash_frame(
     )
 
 
+@memoized
 def _video_hash_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-clip XOR-fold fingerprints through the real PNG codec path
     (one encode->decode roundtrip PER FRAME — the production shape:
     frame-sample, decode, hash, fold). Persisted + memoized; generic
     (media_id, scene, dhash_lo, dhash_hi) columns so _pairs_from /
     _pair_cte serve this modality verbatim like image and audio."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _VIDEO_HASH_CACHE.get(key)
-    if cached is not None:
-        return cached
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     scenes = _scene_count(_doc_stats(spark, sf_dir)[0])
     table = _video_hash_frame(spark, docs, scenes).persist()
-    _VIDEO_HASH_CACHE[key] = table
     return table
 
 
@@ -356,9 +346,8 @@ def _video_hash_cte(
 # their original canonically.
 XMODAL_VIDEO_SCENE_EXTRA = 2
 
-_XMODAL_VIDEO_CACHE: dict[tuple[str, str], DataFrame] = {}
 
-
+@memoized
 def _xmodal_video_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video fingerprints over the AUGMENTED corpus with canonical
     clip keying (the _xmodal_hash_table discipline for video):
@@ -366,10 +355,6 @@ def _xmodal_video_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-duplicate CLIP of its original while the partition differs
     from both the image and audio sides'. Persisted + memoized (pair
     join branches)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _XMODAL_VIDEO_CACHE.get(key)
-    if cached is not None:
-        return cached
     from .dedup_ops import _augmented_docs
 
     n, n20, max_doc = _doc_stats(spark, sf_dir)
@@ -385,7 +370,6 @@ def _xmodal_video_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     table = _video_hash_frame(
         spark, docs, scenes, canon_mod=1_000_000
     ).persist()
-    _XMODAL_VIDEO_CACHE[key] = table
     return table
 
 
@@ -691,8 +675,6 @@ def multimodal_funnel_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------ audio recall twin
 
-_AUDIO_TRUTH_CACHE: dict[tuple[str, str], DataFrame] = {}
-
 
 def _audio_recall_oracle() -> str:
     from .round12_ops import HAM_T
@@ -738,38 +720,8 @@ def audio_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     SF (a one-sample perturbation flips <= 2 fingerprint bits, so
     within-scene pairs spread <= 4 bits over 4 bands — some band is
     always exact)."""
-    from .round12_ops import HAM_T
-
     h = _audio_hash_table(spark, sf_dir)
-    ha = h.select(
-        "scene",
-        F.col("media_id").alias("media_a"),
-        F.col("dhash_lo").alias("lo_a"),
-        F.col("dhash_hi").alias("hi_a"),
-    )
-    hb = h.select(
-        F.col("scene").alias("scene_b"),
-        F.col("media_id").alias("media_b"),
-        F.col("dhash_lo").alias("lo_b"),
-        F.col("dhash_hi").alias("hi_b"),
-    )
-    ham = (
-        F.bit_count(F.col("lo_a").bitwiseXOR(F.col("lo_b")))
-        + F.bit_count(F.col("hi_a").bitwiseXOR(F.col("hi_b")))
-    )
-    # persisted (count aggregate + found join) and memoized per
-    # (app, sf_dir) — the image_lsh_recall discipline
-    truth_key = (spark.sparkContext.applicationId, sf_dir)
-    truth = _AUDIO_TRUTH_CACHE.get(truth_key)
-    if truth is None:
-        truth = (
-            ha.join(hb, (F.col("scene") == F.col("scene_b"))
-                    & (F.col("media_a") < F.col("media_b")))
-            .filter(ham <= HAM_T)
-            .select("scene", "media_a", "media_b")
-            .persist()
-        )
-        _AUDIO_TRUTH_CACHE[truth_key] = truth
+    truth = _scene_truth(spark, sf_dir, _audio_hash_table)
     found = (
         truth.join(_pairs_from(h), ["media_a", "media_b"])
         .groupBy("scene")
@@ -1040,8 +992,6 @@ def video_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_VIDEO_TRUTH_CACHE: dict[tuple[str, str], DataFrame] = {}
-
 
 def _video_recall_oracle() -> str:
     from .round12_ops import HAM_T
@@ -1085,36 +1035,8 @@ def video_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer percentages. A one-frame perturbation spreads <= 4 fold
     bits over 4 bands, so some band is always exact — recall_pct is
     structurally <= 100 and measured 100 at every SF."""
-    from .round12_ops import HAM_T
-
     h = _video_hash_table(spark, sf_dir)
-    ha = h.select(
-        "scene",
-        F.col("media_id").alias("media_a"),
-        F.col("dhash_lo").alias("lo_a"),
-        F.col("dhash_hi").alias("hi_a"),
-    )
-    hb = h.select(
-        F.col("scene").alias("scene_b"),
-        F.col("media_id").alias("media_b"),
-        F.col("dhash_lo").alias("lo_b"),
-        F.col("dhash_hi").alias("hi_b"),
-    )
-    ham = (
-        F.bit_count(F.col("lo_a").bitwiseXOR(F.col("lo_b")))
-        + F.bit_count(F.col("hi_a").bitwiseXOR(F.col("hi_b")))
-    )
-    truth_key = (spark.sparkContext.applicationId, sf_dir)
-    truth = _VIDEO_TRUTH_CACHE.get(truth_key)
-    if truth is None:
-        truth = (
-            ha.join(hb, (F.col("scene") == F.col("scene_b"))
-                    & (F.col("media_a") < F.col("media_b")))
-            .filter(ham <= HAM_T)
-            .select("scene", "media_a", "media_b")
-            .persist()
-        )
-        _VIDEO_TRUTH_CACHE[truth_key] = truth
+    truth = _scene_truth(spark, sf_dir, _video_hash_table)
     found = (
         truth.join(_pairs_from(h), ["media_a", "media_b"])
         .groupBy("scene")

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..memo import memoized
 from ..registry import ORACLE, query
 from .dedup_ops import (
     _AUG_SQL,
@@ -176,15 +177,12 @@ TEXT_INGEST_ENV = "SPARK_GRAFT_TEXT_INGEST_STORE"
 # Replay micro-batch count (the media engine's n_slices protocol).
 N_TEXT_SLICES = 3
 
-# result handles per (applicationId, sf_dir) — *_CACHE contract
-# (bench._reset's package sweep reaches this dict by name)
-_TEXT_INGEST_CACHE: dict[tuple[str, str], DataFrame] = {}
-
 
 @query(
     "stream_text_neardup_ingest",
     oracle=ORACLE["dedup_minhash"],
 )
+@memoized
 def stream_text_neardup_ingest(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -216,11 +214,6 @@ def stream_text_neardup_ingest(
     from ..ingest import replay_ingest
     from .dedup_ops import _augmented_docs, sig_frame
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _TEXT_INGEST_CACHE.get(key)
-    if cached is not None:
-        return cached
-
     aug = _augmented_docs(spark, sf_dir)
 
     def verify(cand: DataFrame, index: DataFrame) -> DataFrame:
@@ -241,7 +234,7 @@ def stream_text_neardup_ingest(
             .select("doc_a", "doc_b", "jaccard")
         )
 
-    result = replay_ingest(
+    return replay_ingest(
         spark,
         aug,
         slice_col="doc_id",
@@ -263,8 +256,6 @@ def stream_text_neardup_ingest(
         table_prefix="textingest_bands_",
         n_slices=N_TEXT_SLICES,
     )
-    _TEXT_INGEST_CACHE[key] = result
-    return result
 
 
 # --------------------------------- incremental cluster maintenance

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..embedding_index import EMB_ARRIVAL_RESIDUE
+from ..memo import memoized
 from ..registry import ORACLE, query
 from ._oracle_shared import _DUCK_NONZERO
 from .similarity_ops import (
@@ -195,9 +196,6 @@ def embedding_neardup_clusters_incremental(
     ).orderBy("vec_id")
 
 
-# result handles per (applicationId, sf_dir) — *_CACHE contract
-_EMB_INGEST_CACHE: dict[tuple[str, str], DataFrame] = {}
-
 # Replay micro-batch count (the engine's n_slices protocol).
 N_EMB_SLICES = 3
 
@@ -206,6 +204,7 @@ N_EMB_SLICES = 3
     "stream_embedding_neardup_ingest",
     oracle=ORACLE["embedding_neardup_lsh"],
 )
+@memoized
 def stream_embedding_neardup_ingest(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -231,17 +230,12 @@ def stream_embedding_neardup_ingest(
     from ..embedding_index import EMB_INGEST_ENV, verify_pairs
     from ..ingest import replay_ingest
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _EMB_INGEST_CACHE.get(key)
-    if cached is not None:
-        return cached
-
     kernel = _signature_kernel(_ND_SALT, _ND_TABLES, _ND_BITS)
 
     def verify(cand: DataFrame, index: DataFrame) -> DataFrame:
         return verify_pairs(cand, index)
 
-    result = replay_ingest(
+    return replay_ingest(
         spark,
         load_vectors(spark, sf_dir),
         slice_col="vec_id",
@@ -265,8 +259,6 @@ def stream_embedding_neardup_ingest(
         table_prefix="embingest_bands_",
         n_slices=N_EMB_SLICES,
     )
-    _EMB_INGEST_CACHE[key] = result
-    return result
 
 
 # ----------------------------------- published-store report reads

@@ -15,6 +15,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import load_table
 from ..functions import textfn
+from ..memo import memoized
 from ..operators import bounded_global_window
 from ..registry import ORACLE, query
 from ._oracle_shared import _DUCK_TOKS
@@ -32,13 +33,29 @@ _SPLIT_HEX_BOUND = "f3"
 # generation
 TOKEN_BUDGET = 10_000
 
-# token_budget_sample's persisted tokenized projection, memoized per
-# (applicationId, sf_dir) so repeated calls in one session reuse ONE
-# persisted DataFrame instead of stacking a new persist per call
-# (r6 driver advice: the old bare .persist() had no release path
-# outside bench's clearCache). Follows the package-wide *_CACHE
-# contract (SCALE.md 'Memo-cache contract').
-_TOKDOCS_CACHE: dict[tuple[str, str], DataFrame] = {}
+@memoized
+def _token_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """token_budget_sample's tokenized projection (doc_id, n_tokens,
+    k, bucket) — no text column, tiny at any SF. Persisted: BOTH of
+    its branches (the per-bucket window and the bucket-totals
+    aggregate) consume it, and without the persist each re-ran the
+    scan + tokenize — the dominant cost of the query (r5 bench: 6.4s,
+    almost all of it split()+size() arithmetic paid twice). Memoized
+    so repeated calls in one session reuse ONE persisted DataFrame
+    instead of stacking a new persist per call (r6 advice)."""
+    k = F.md5(
+        F.concat(F.lit(f"{SHUFFLE_SALT}|"), F.col("doc_id").cast("string"))
+    )
+    return (
+        load_table(spark, sf_dir, "documents")
+        .select(
+            "doc_id",
+            textfn.token_count("text").cast("long").alias("n_tokens"),
+            k.alias("k"),
+        )
+        .withColumn("bucket", F.substring("k", 1, 2))
+        .persist()
+    )
 
 
 @query(
@@ -114,31 +131,7 @@ def token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     in a 256-row bounded window. Bucket order is a prefix of the full
     (k, doc_id) order, so local + offset equals the global cumsum at
     any scale — no single-partition pass over the corpus."""
-    k = F.md5(
-        F.concat(F.lit(f"{SHUFFLE_SALT}|"), F.col("doc_id").cast("string"))
-    )
-    # persist the tokenized projection: BOTH branches below (the
-    # per-bucket window and the bucket-totals aggregate) consume it,
-    # and without the persist each re-runs the scan + tokenize —
-    # the dominant cost of this query (r5 bench: 6.4s, almost all of
-    # it split()+size() arithmetic paid twice). The cached form is
-    # (doc_id, n_tokens, k, bucket) — no text column, tiny at any SF.
-    # Memoized per (applicationId, sf_dir): repeated calls reuse one
-    # persisted DF rather than persisting a fresh copy each time.
-    ckey = (spark.sparkContext.applicationId, sf_dir)
-    docs = _TOKDOCS_CACHE.get(ckey)
-    if docs is None:
-        docs = (
-            load_table(spark, sf_dir, "documents")
-            .select(
-                "doc_id",
-                textfn.token_count("text").cast("long").alias("n_tokens"),
-                k.alias("k"),
-            )
-            .withColumn("bucket", F.substring("k", 1, 2))
-            .persist()
-        )
-        _TOKDOCS_CACHE[ckey] = docs
+    docs = _token_docs(spark, sf_dir)
     w_local = (
         Window.partitionBy("bucket")
         .orderBy("k", "doc_id")
@@ -362,13 +355,10 @@ def source_temperature_weights(
 # fixture generation
 ALLOCATION_BUDGET = 99_991
 
-# memoized result per (applicationId, sf_dir): the bounded per-source
-# frame persists for its two consumers (shortfall aggregate + rank
-# window), so the corpus-count scan runs once per session instead of
-# twice per call (*_CACHE contract — bench _reset clears it)
-_ALLOC_CACHE: dict = {}
 
-
+# memoized: the bounded per-source frame persists for its two
+# consumers (shortfall aggregate + rank window), so the corpus-count
+# scan runs once per session instead of twice per call.
 # the oracle composes source_temperature_weights' registered oracle
 # as a CTE (the r4 rule: composition queries pull sub-oracles from
 # registry.ORACLE so hand-rolled copies can't drift)
@@ -398,6 +388,7 @@ _ALLOC_CACHE: dict = {}
     ORDER BY source
     """.format(temperature_weights=ORACLE["source_temperature_weights"]),
 )
+@memoized
 def token_budget_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Turn the temperature mixture into an actual integer budget:
     allocate ALLOCATION_BUDGET tokens across sources by the
@@ -415,10 +406,6 @@ def token_budget_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     few-thousand-row frame (one source row each), so the global
     window and the 1-row shortfall aggregate are bounded by the
     source-catalog size, not the corpus."""
-    ckey = (spark.sparkContext.applicationId, sf_dir)
-    cached = _ALLOC_CACHE.get(ckey)
-    if cached is not None:
-        return cached
     w = source_temperature_weights(spark, sf_dir)
     wb = F.col("weight") * F.lit(float(ALLOCATION_BUDGET))
     # persist: BOTH the shortfall aggregate and the rank window read
@@ -450,7 +437,6 @@ def token_budget_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("source")
     )
-    _ALLOC_CACHE[ckey] = result
     return result
 
 
@@ -660,12 +646,6 @@ def training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# memoized result per (applicationId, sf_dir): the query persists its
-# (doc, bucket) count table for the distribution and scoring branches,
-# and the memo keeps repeated calls from stacking a fresh persist each
-# time (the *_CACHE contract — bench _reset clears every such dict)
-_DSIR_CACHE: dict = {}
-
 # DSIR hashed-feature space: unigrams hashed into this many buckets.
 # 1024 keeps the weight table broadcast-trivial while leaving bucket
 # collisions rare on the fixture vocab (the method is defined ON a
@@ -676,6 +656,8 @@ DSIR_BUCKETS = 1024
 DSIR_FP_SCALE = 1 << 20
 
 
+# memoized: the persisted (doc, bucket) count table feeds the
+# distribution and scoring branches; a repeat call must reuse it
 @query(
     "dsir_importance_proxy",
     oracle=f"""
@@ -729,6 +711,7 @@ DSIR_FP_SCALE = 1 << 20
     ORDER BY d.doc_id
     """,
 )
+@memoized
 def dsir_importance_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data Selection via Importance Resampling, linearized: score
     every document by how much its hashed-unigram profile leans toward
@@ -757,10 +740,6 @@ def dsir_importance_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
     join + a per-doc aggregate. Linear in corpus tokens at 100 TB,
     and the weight table is reusable across incoming batches the way
     production DSIR reuses its trained importance estimator."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _DSIR_CACHE.get(key)
-    if cached is not None:
-        return cached
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", "source", F.explode(textfn.tokenize("text")).alias("tok")
@@ -828,7 +807,6 @@ def dsir_importance_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("doc_id")
     )
-    _DSIR_CACHE[key] = result
     return result
 
 

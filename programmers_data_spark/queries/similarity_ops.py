@@ -37,6 +37,7 @@ from pyspark.sql.window import Window
 from ..catalog import load_table
 from ..functions.vectors import as_double_array, cosine, sq_norm
 from ..functions.vectors import dot as vdot
+from ..memo import memoized
 from ..registry import query
 from ._oracle_shared import _DUCK_NONZERO
 
@@ -52,9 +53,6 @@ NEARDUP_THRESHOLD = 0.42
 # GEMM; ~50 GB of 64-dim float64 ≈ 100M rows is the physical ceiling,
 # capped well below it so the guard fires before memory pressure does.
 NEARDUP_COLLECT_CAP = 10_000_000
-
-# memoized exact near-dup pair tables, keyed (applicationId, sf_dir)
-_PAIR_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 _DUCK_COS = (
     "list_dot_product(a.emb, b.emb)"
@@ -348,6 +346,7 @@ def embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY vec_a, vec_b
     """,
 )
+@memoized
 def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs (threshold NEARDUP_THRESHOLD).
 
@@ -367,18 +366,12 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     count()+collect() pair), pointing at the LSH twin — a library
     call can't silently OOM the driver.
 
-    The pair table is memoized per (application, sf_dir): three
-    registered queries consume it (this one, lsh_neardup_recall,
-    semantic_dedup_recall), and without the memo each re-collects the
-    corpus and re-runs the GEMM pass (the round-5 shared-helper
-    memoization learning, same shape as dedup_ops._SIG_CACHE).
+    The pair table is memoized: three registered queries consume it
+    (this one, lsh_neardup_recall, semantic_dedup_recall), and without
+    the memo each re-collects the corpus and re-runs the GEMM pass.
     """
     import numpy as np
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _PAIR_CACHE.get(key)
-    if cached is not None:
-        return cached
     emb = load_vectors(spark, sf_dir)
     # One action, bounded driver memory (r4 advice): LIMIT cap+1 so an
     # oversized corpus trips the guard after materializing at most
@@ -413,13 +406,11 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             keep = a < b
             yield pd.DataFrame({"vec_a": a[keep], "vec_b": b[keep]})
 
-    pairs = (
+    return (
         emb.mapInPandas(block, schema="vec_a long, vec_b long")
         .orderBy("vec_a", "vec_b")
         .persist()
     )
-    _PAIR_CACHE[key] = pairs
-    return pairs
 
 
 _N_TABLES = 8  # L hash tables ...
@@ -1270,11 +1261,6 @@ def contrastive_training_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 21-bit integer and per-(label, dim) sums far below long overflow
 CENTROID_FP_SCALE = 1 << 20
 
-# memoized result per (applicationId, sf_dir): the per-(label, dim)
-# integer-sum table persists for its two consumers (corpus rollup +
-# join); *_CACHE naming keeps bench _reset isolation honest
-_CDRIFT_CACHE: dict = {}
-
 _DUCK_CDRIFT = f"""
     WITH q AS (
       SELECT label, pos,
@@ -1316,7 +1302,10 @@ _DUCK_CDRIFT = f"""
 """
 
 
+# memoized: the per-(label, dim) integer-sum table persists for its
+# two consumers (corpus rollup + join)
 @query("label_centroid_drift", oracle=_DUCK_CDRIFT)
+@memoized
 def label_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-space drift profile: each label's centroid direction
     compared (cosine) to the corpus-wide centroid — the cluster-health
@@ -1341,10 +1330,6 @@ def label_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     The corpus centroid derives from the label sums (one more tiny
     aggregate), never a second corpus pass.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _CDRIFT_CACHE.get(key)
-    if cached is not None:
-        return cached
     q = (
         load_table(spark, sf_dir, "embeddings")
         .select(
@@ -1400,7 +1385,7 @@ def label_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             _fold("bb").alias("nb"),
         )
     )
-    result = folds.select(
+    return folds.select(
         "label",
         "n_vecs",
         F.when((F.col("na") == 0) | (F.col("nb") == 0), F.lit(0.0))
@@ -1409,5 +1394,3 @@ def label_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .alias("cos_to_corpus"),
     ).orderBy("label")
-    _CDRIFT_CACHE[key] = result
-    return result

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..memo import memoized
 from ..registry import query
 from ._oracle_shared import _DUCK_TOKS
 
@@ -43,12 +44,6 @@ HLL_REL_BOUND = 0.08
 # intersections are tight — use exact counts when the overlap itself
 # is the product.
 OVERLAP_UNION_BOUND = 0.1
-
-# result memo per (applicationId, sf_dir): segment_overlap_sketch
-# persists its distinct membership frame — repeated calls must reuse
-# the cached plan, not stack persists (r17 ADVICE #2; the *_CACHE
-# contract, swept by bench._reset)
-_SEGOVL_CACHE: dict = {}
 
 _SEGMENT_PAIRS = (("view", "purchase"), ("click", "purchase"), ("signup", "view"))
 
@@ -128,6 +123,7 @@ def mau_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY p.seg_a, p.seg_b
     """,
 )
+@memoized
 def segment_overlap_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch set-algebra: distinct-user overlap between event
     segments estimated as |A| + |B| - |A u B| from three HLL
@@ -143,13 +139,9 @@ def segment_overlap_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     layer); every pair question merges TWO sketch blobs. The exact
     side here exists only to verify; production asks the sketches.
     """
-    # result memo per (applicationId, sf_dir) — *_CACHE contract
-    # (r17 ADVICE #2): the distinct membership frame is persisted;
-    # repeated calls must reuse the cached plan, not stack persists
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SEGOVL_CACHE.get(key)
-    if cached is not None:
-        return cached
+    # memoized (r17 ADVICE #2): the distinct membership frame is
+    # persisted; repeated calls must reuse the cached plan, not stack
+    # persists
     events = load_table(spark, sf_dir, "events")
     segs = [s for pair in _SEGMENT_PAIRS for s in pair]
     # Distinct BEFORE the exact-anchor self-join below (mirrors the
@@ -214,7 +206,7 @@ def segment_overlap_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.countDistinct("user_id").alias("overlap_exact"))
     )
     union_exact = F.col("n_a") + F.col("n_b") - F.col("overlap_exact")
-    result = (
+    return (
         est.join(exact, ["seg_a", "seg_b"])
         .select(
             "seg_a",
@@ -227,8 +219,6 @@ def segment_overlap_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("seg_a", "seg_b")
     )
-    _SEGOVL_CACHE[key] = result
-    return result
 
 
 # Count-min sketch geometry. Width 512 gives eps = e/512 ~ 0.5% of

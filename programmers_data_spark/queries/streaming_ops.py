@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..memo import memoized
 from ..registry import query
 from ..streaming import (
     dedup_within_watermark,
@@ -631,9 +632,6 @@ def stream_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 LATE_AUDIT_DELAY_DAYS = 7
 _DELAY_US = LATE_AUDIT_DELAY_DAYS * 86_400_000_000
 
-# audit result memo per (applicationId, sf_dir) — *_CACHE contract
-_LATE_AUDIT_CACHE: dict[tuple[str, str], DataFrame] = {}
-
 
 @query(
     "stream_late_data_audit",
@@ -670,6 +668,7 @@ _LATE_AUDIT_CACHE: dict[tuple[str, str], DataFrame] = {}
     ORDER BY window_start_us
     """,
 )
+@memoized
 def stream_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermark late-data accounting — the operational view behind
     choosing a watermark delay: per daily window, how many rows the
@@ -696,11 +695,6 @@ def stream_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..catalog import load_table
     from ..storeutil import store_base
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _LATE_AUDIT_CACHE.get(key)
-    if cached is not None:
-        return cached
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts")
     base = store_base("SPARK_GRAFT_LATE_STORE", "spark_graft_late")
@@ -782,7 +776,6 @@ def stream_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     result.count()  # materialize, then free the memory-sink view
     spark.catalog.dropTempView(sink)
-    _LATE_AUDIT_CACHE[key] = result
     return result
 
 
@@ -793,9 +786,6 @@ def stream_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # occur. Interpolated into BOTH engines (micros in the oracle).
 DEDUP_HORIZON_DAYS = 7
 _HORIZON_US = DEDUP_HORIZON_DAYS * 86_400_000_000
-
-# audit result memo per (applicationId, sf_dir) — *_CACHE contract
-_DEDUP_AUDIT_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 @query(
@@ -838,6 +828,7 @@ _DEDUP_AUDIT_CACHE: dict[tuple[str, str], DataFrame] = {}
     ORDER BY dedup_key
     """,
 )
+@memoized
 def stream_dedup_horizon_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dropDuplicatesWithinWatermark under watermark MOVEMENT — the
     semantics stream_dedup's single doubled batch cannot exercise: a
@@ -880,11 +871,6 @@ def stream_dedup_horizon_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..catalog import load_table
     from ..storeutil import store_base
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _DEDUP_AUDIT_CACHE.get(key)
-    if cached is not None:
-        return cached
 
     ev = load_table(spark, sf_dir, "events").select(
         F.expr("event_id div 2").alias("dedup_key"),
@@ -944,5 +930,4 @@ def stream_dedup_horizon_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     result.count()  # materialize, then free the memory-sink view
     spark.catalog.dropTempView(sink)
-    _DEDUP_AUDIT_CACHE[key] = result
     return result

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions import textfn
+from ..memo import memoized
 from ..registry import query
 from ._oracle_shared import _DUCK_TOKS, _DUCK_VDIV, VDIV_VOCAB_K
 
@@ -453,17 +454,13 @@ def code_fraction_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# memoized result per (applicationId, sf_dir): the query persists its
-# (source, tok) count table for two consuming branches, and the memo
-# keeps repeated calls from stacking a fresh persist each time (the
-# *_CACHE naming contract — bench _reset clears every such dict)
-_VDIV_CACHE: dict = {}
-
-
+# memoized: the persisted (source, tok) count table feeds two
+# branches, and a repeat call must reuse it, not stack a new persist
 @query(
     "source_vocab_divergence",
     oracle=_DUCK_VDIV.format(k=VDIV_VOCAB_K),
 )
+@memoized
 def source_vocab_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution-drift profile: each source's total-variation
     distance from the corpus-wide unigram distribution, both
@@ -488,10 +485,6 @@ def source_vocab_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts. Nothing here grows with document count except the
     first token-count aggregate, which is partial-aggregable.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _VDIV_CACHE.get(key)
-    if cached is not None:
-        return cached
     st = (
         load_table(spark, sf_dir, "documents")
         .select("source", F.explode(textfn.tokenize("text")).alias("tok"))
@@ -547,5 +540,4 @@ def source_vocab_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("source")
     )
-    _VDIV_CACHE[key] = result
     return result

@@ -23,6 +23,8 @@ import stat
 import tempfile
 from collections.abc import Callable
 
+from .memo import memoized
+
 # Every env var that names a store base: the published artifacts and
 # the scratch trees of ingest, interchange and audit queries. bench.py
 # isolates each one per run; tests/test_artifacts.py checks that every
@@ -37,10 +39,6 @@ STORE_ENVS = (
     "SPARK_GRAFT_LATE_STORE", "SPARK_GRAFT_DEDUP_AUDIT_STORE",
     "SPARK_GRAFT_AUDIO_INGEST_STORE", "SPARK_GRAFT_VIDEO_INGEST_STORE",
 )
-
-# store-read handles per (applicationId, table dir) — *_CACHE contract
-_ARTIFACT_CACHE: dict = {}
-
 
 def store_base(env_var: str, name: str) -> str:
     """Resolve the base directory for a named shared-artifact store.
@@ -96,31 +94,55 @@ def artifact_dir(
     return os.path.join(base, fp, leaf)
 
 
-def _is_empty(df) -> bool:
-    return df.limit(1).count() == 0  # bounded 1-value scalar
+def _build_on_miss(read: Callable, build: Callable, write: Callable):
+    """``read()``; if the artifact is not there yet, ``write(build())``
+    and read it back. An empty build is returned as it is, unwritten:
+    publish_versioned rejects empty tables by design."""
+    try:
+        return read()
+    except FileNotFoundError:
+        computed = build()
+        if computed.limit(1).count() == 0:  # bounded 1-value scalar
+            return computed
+        write(computed)
+        return read()
+
+
+@memoized
+def _read_published(spark, table_dir: str):
+    from .publish import read_versioned
+
+    return read_versioned(spark, table_dir)
 
 
 def published(spark, table_dir: str, build: Callable):
     """Read the artifact at ``table_dir``; on a miss, publish
     ``build()`` through the K8 validated swap (publish_versioned) and
-    read it back. An empty build is returned unpublished
-    (publish_versioned rejects empty tables by design)."""
-    key = (spark.sparkContext.applicationId, table_dir)
-    cached = _ARTIFACT_CACHE.get(key)
-    if cached is not None:
-        return cached
-    from .publish import publish_versioned, read_versioned
+    read it back."""
+    from .publish import publish_versioned
 
-    try:
-        stored = read_versioned(spark, table_dir)
-    except FileNotFoundError:
-        computed = build()
-        if _is_empty(computed):
-            return computed
-        publish_versioned(computed, table_dir)
-        stored = read_versioned(spark, table_dir)
-    _ARTIFACT_CACHE[key] = stored
-    return stored
+    return _build_on_miss(
+        lambda: _read_published(spark, table_dir),
+        build,
+        lambda df: publish_versioned(df, table_dir),
+    )
+
+
+@memoized
+def _registered_bucketed(
+    spark, path: str, name: str, ddl: str, bucket_by: tuple, n_buckets: int
+):
+    if not spark.catalog.tableExists(name):
+        if not (os.path.isdir(path) and any(
+            f.endswith(".parquet") for f in os.listdir(path)
+        )):
+            raise FileNotFoundError(path)
+        spark.sql(
+            f"CREATE TABLE {name} ({ddl}) USING PARQUET "
+            f"CLUSTERED BY ({', '.join(bucket_by)}) "
+            f"INTO {n_buckets} BUCKETS LOCATION '{path}'"
+        )
+    return spark.table(name)
 
 
 def published_bucketed(
@@ -139,32 +161,18 @@ def published_bucketed(
     (columns ``ddl``); otherwise ``build()`` is written via
     sinks.save_bucketed. The catalog name binds the FULL path, so two
     store bases in one session never share a table entry."""
-    key = (spark.sparkContext.applicationId, path)
-    cached = _ARTIFACT_CACHE.get(key)
-    if cached is not None:
-        return cached
-    name = f"{prefix}_" + hashlib.md5(path.encode()).hexdigest()[:12]
-    if not spark.catalog.tableExists(name):
-        if os.path.isdir(path) and any(
-            f.endswith(".parquet") for f in os.listdir(path)
-        ):
-            spark.sql(
-                f"CREATE TABLE {name} ({ddl}) USING PARQUET "
-                f"CLUSTERED BY ({', '.join(bucket_by)}) "
-                f"INTO {n_buckets} BUCKETS LOCATION '{path}'"
-            )
-        else:
-            from . import sinks
+    from . import sinks
 
-            computed = build()
-            if _is_empty(computed):
-                return computed
-            sinks.save_bucketed(
-                computed, name, path,
-                bucket_by=bucket_by,
-                n_buckets=n_buckets,
-                sort_by=bucket_by,
-            )
-    table = spark.table(name)
-    _ARTIFACT_CACHE[key] = table
-    return table
+    name = f"{prefix}_" + hashlib.md5(path.encode()).hexdigest()[:12]
+    return _build_on_miss(
+        lambda: _registered_bucketed(
+            spark, path, name, ddl, tuple(bucket_by), n_buckets
+        ),
+        build,
+        lambda df: sinks.save_bucketed(
+            df, name, path,
+            bucket_by=bucket_by,
+            n_buckets=n_buckets,
+            sort_by=bucket_by,
+        ),
+    )

@@ -17,46 +17,13 @@ import argparse
 import json
 import os
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from programmers_data_spark import registry
 from programmers_data_spark.session import get_spark
-
-
-def _force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def _fresh_stores() -> None:
-    from programmers_data_spark.embedding_index import EMB_STORE_ENV
-    from programmers_data_spark.queries.dedup_ops import PAIR_STORE_ENV
-    from programmers_data_spark.queries.interchange_ops import JSONL_STORE_ENV
-    from programmers_data_spark.queries.media_lifecycle_ops import (
-        AUDIO_SPEC,
-        VIDEO_SPEC,
-    )
-    from programmers_data_spark.queries.round12_ops import IMG_STORE_ENV
-
-    for env, pfx in [
-        (PAIR_STORE_ENV, "pds_ab_pairs_"),
-        (JSONL_STORE_ENV, "pds_ab_jsonl_"),
-        (IMG_STORE_ENV, "pds_ab_img_"),
-        (AUDIO_SPEC.store_env, "pds_ab_aud_"),
-        (VIDEO_SPEC.store_env, "pds_ab_vid_"),
-        (EMB_STORE_ENV, "pds_ab_emb_"),
-    ]:
-        os.environ[env] = tempfile.mkdtemp(prefix=pfx)
-
-
-def _reset(spark) -> None:
-    from programmers_data_spark.memo import clear_memo_caches
-
-    spark.catalog.clearCache()
-    clear_memo_caches()
-    spark.sparkContext._jvm.System.gc()
+from bench import _force, _isolate_stores, _reset
 
 
 def _session(extra: dict[str, str]):
@@ -112,7 +79,7 @@ def main() -> int:
     args = ap.parse_args()
 
     conf_b = dict(kv.split("=", 1) for kv in args.conf.split(","))
-    _fresh_stores()
+    _isolate_stores("ab")
     registry.load_all()
 
     a_best: dict[str, float] = {}

@@ -22,6 +22,7 @@ from programmers_data_spark.queries.round10_ops import (
     WINDOW,
 )
 from programmers_data_spark.session import get_spark
+from bench import _force, _reset
 
 from programmers_data_spark.functions import textfn
 
@@ -56,18 +57,6 @@ def old_form(spark, sf_dir):
         .orderBy(F.desc("weight_milli"), F.desc("n_pairs"), "tok_a", "tok_b")
         .limit(TOP_SKIPGRAMS)
     )
-
-
-def _force(df):
-    df.write.format("noop").mode("overwrite").save()
-
-
-def _reset(spark):
-    from programmers_data_spark.memo import clear_memo_caches
-
-    spark.catalog.clearCache()
-    clear_memo_caches()
-    spark.sparkContext._jvm.System.gc()
 
 
 def main():

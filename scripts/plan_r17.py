@@ -18,46 +18,13 @@ import io
 import json
 import os
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from programmers_data_spark import registry
 from programmers_data_spark.session import get_spark
-
-
-def _force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def _fresh_stores() -> None:
-    from programmers_data_spark.embedding_index import EMB_STORE_ENV
-    from programmers_data_spark.queries.dedup_ops import PAIR_STORE_ENV
-    from programmers_data_spark.queries.interchange_ops import JSONL_STORE_ENV
-    from programmers_data_spark.queries.media_lifecycle_ops import (
-        AUDIO_SPEC,
-        VIDEO_SPEC,
-    )
-    from programmers_data_spark.queries.round12_ops import IMG_STORE_ENV
-
-    for env, pfx in [
-        (PAIR_STORE_ENV, "pds_plan_pairs_"),
-        (JSONL_STORE_ENV, "pds_plan_jsonl_"),
-        (IMG_STORE_ENV, "pds_plan_img_"),
-        (AUDIO_SPEC.store_env, "pds_plan_aud_"),
-        (VIDEO_SPEC.store_env, "pds_plan_vid_"),
-        (EMB_STORE_ENV, "pds_plan_emb_"),
-    ]:
-        os.environ[env] = tempfile.mkdtemp(prefix=pfx)
-
-
-def _reset(spark) -> None:
-    from programmers_data_spark.memo import clear_memo_caches
-
-    spark.catalog.clearCache()
-    clear_memo_caches()
-    spark.sparkContext._jvm.System.gc()
+from bench import _force, _isolate_stores, _reset
 
 
 def main() -> int:
@@ -71,7 +38,7 @@ def main() -> int:
     ap.add_argument("names", nargs="+")
     args = ap.parse_args()
 
-    _fresh_stores()
+    _isolate_stores("plan")
     spark = get_spark(app_name="pds-plan-r17")
     registry.load_all()
     os.makedirs(args.out, exist_ok=True)

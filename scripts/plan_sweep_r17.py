@@ -23,29 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from programmers_data_spark import registry
 from programmers_data_spark.session import get_spark
-
-
-def _fresh_stores() -> None:
-    import tempfile
-
-    from programmers_data_spark.embedding_index import EMB_STORE_ENV
-    from programmers_data_spark.queries.dedup_ops import PAIR_STORE_ENV
-    from programmers_data_spark.queries.interchange_ops import JSONL_STORE_ENV
-    from programmers_data_spark.queries.media_lifecycle_ops import (
-        AUDIO_SPEC,
-        VIDEO_SPEC,
-    )
-    from programmers_data_spark.queries.round12_ops import IMG_STORE_ENV
-
-    for env, pfx in [
-        (PAIR_STORE_ENV, "pds_sweep_pairs_"),
-        (JSONL_STORE_ENV, "pds_sweep_jsonl_"),
-        (IMG_STORE_ENV, "pds_sweep_img_"),
-        (AUDIO_SPEC.store_env, "pds_sweep_aud_"),
-        (VIDEO_SPEC.store_env, "pds_sweep_vid_"),
-        (EMB_STORE_ENV, "pds_sweep_emb_"),
-    ]:
-        os.environ[env] = tempfile.mkdtemp(prefix=pfx)
+from bench import _isolate_stores
 
 
 def main() -> int:
@@ -54,7 +32,7 @@ def main() -> int:
     ap.add_argument("--out", default="plans/r17/plan_sweep_r17opt1_s3.json")
     args = ap.parse_args()
 
-    _fresh_stores()
+    _isolate_stores("sweep")
     spark = get_spark(app_name="pds-plan-sweep-r17")
     registry.load_all()
     from programmers_data_spark.memo import clear_memo_caches

@@ -10,48 +10,13 @@ from __future__ import annotations
 
 import os
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from programmers_data_spark import registry
 from programmers_data_spark.session import get_spark
-
-
-def _force(df):
-    df.write.format("noop").mode("overwrite").save()
-
-
-def _reset(spark):
-    from programmers_data_spark.memo import clear_memo_caches
-
-    spark.catalog.clearCache()
-    clear_memo_caches()
-    spark.sparkContext._jvm.System.gc()
-
-
-def _fresh_stores():
-    from programmers_data_spark.derived_store import DERIV_STORE_ENV
-    from programmers_data_spark.embedding_index import EMB_STORE_ENV
-    from programmers_data_spark.queries.dedup_ops import PAIR_STORE_ENV
-    from programmers_data_spark.queries.interchange_ops import JSONL_STORE_ENV
-    from programmers_data_spark.queries.media_lifecycle_ops import (
-        AUDIO_SPEC,
-        VIDEO_SPEC,
-    )
-    from programmers_data_spark.queries.round12_ops import IMG_STORE_ENV
-
-    for env, pfx in [
-        (PAIR_STORE_ENV, "pds_prof_pairs_"),
-        (JSONL_STORE_ENV, "pds_prof_jsonl_"),
-        (IMG_STORE_ENV, "pds_prof_img_"),
-        (AUDIO_SPEC.store_env, "pds_prof_aud_"),
-        (VIDEO_SPEC.store_env, "pds_prof_vid_"),
-        (EMB_STORE_ENV, "pds_prof_emb_"),
-        (DERIV_STORE_ENV, "pds_prof_der_"),
-    ]:
-        os.environ[env] = tempfile.mkdtemp(prefix=pfx)
+from bench import _force, _isolate_stores, _reset
 
 
 def timed(label, fn, spark, n=2):
@@ -67,7 +32,7 @@ def timed(label, fn, spark, n=2):
 
 def main():
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    _fresh_stores()
+    _isolate_stores("prof")
     spark = get_spark(app_name="pds-profile-funnel-r18")
     registry.load_all()
     from pyspark.sql import functions as F

@@ -14,35 +14,19 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# bench's main() sets up per-run store envs; we need the same
-# isolation without its timed loop, so replicate the env pinning
-# before any query module loads.
-import tempfile
-
-from programmers_data_spark.queries.dedup_ops import PAIR_STORE_ENV
-from programmers_data_spark.queries.interchange_ops import JSONL_STORE_ENV
-from programmers_data_spark.queries.media_lifecycle_ops import (
-    AUDIO_SPEC,
-    VIDEO_SPEC,
-)
-from programmers_data_spark.queries.round12_ops import IMG_STORE_ENV
-
-os.environ[PAIR_STORE_ENV] = tempfile.mkdtemp(prefix="pds_reprice_pairs_")
-os.environ[JSONL_STORE_ENV] = tempfile.mkdtemp(prefix="pds_reprice_jsonl_")
-os.environ[IMG_STORE_ENV] = tempfile.mkdtemp(prefix="pds_reprice_img_")
-os.environ[AUDIO_SPEC.store_env] = tempfile.mkdtemp(prefix="pds_reprice_aud_")
-os.environ[VIDEO_SPEC.store_env] = tempfile.mkdtemp(prefix="pds_reprice_vid_")
-
 from bench import (  # noqa: E402
     CONTROL_POLLUTED_RATIO,
     CONTROLS,
     _force,
     _host_speed_index,
+    _isolate_stores,
     _reset,
     control_median_ratio,
 )
 from programmers_data_spark import registry  # noqa: E402
 from programmers_data_spark.session import get_spark  # noqa: E402
+
+_isolate_stores("reprice")
 
 DISPUTED = [
     "multimodal_funnel_contract",

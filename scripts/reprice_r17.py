@@ -27,35 +27,20 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import tempfile
-
-from programmers_data_spark.embedding_index import EMB_STORE_ENV
-from programmers_data_spark.queries.dedup_ops import PAIR_STORE_ENV
-from programmers_data_spark.queries.interchange_ops import JSONL_STORE_ENV
-from programmers_data_spark.queries.media_lifecycle_ops import (
-    AUDIO_SPEC,
-    VIDEO_SPEC,
-)
-from programmers_data_spark.queries.round12_ops import IMG_STORE_ENV
-
-os.environ[PAIR_STORE_ENV] = tempfile.mkdtemp(prefix="pds_price17_pairs_")
-os.environ[JSONL_STORE_ENV] = tempfile.mkdtemp(prefix="pds_price17_jsonl_")
-os.environ[IMG_STORE_ENV] = tempfile.mkdtemp(prefix="pds_price17_img_")
-os.environ[AUDIO_SPEC.store_env] = tempfile.mkdtemp(prefix="pds_price17_aud_")
-os.environ[VIDEO_SPEC.store_env] = tempfile.mkdtemp(prefix="pds_price17_vid_")
-os.environ[EMB_STORE_ENV] = tempfile.mkdtemp(prefix="pds_price17_emb_")
-
 from bench import (  # noqa: E402
     CONTROL_POLLUTED_RATIO,
     CONTROLS,
     _force,
     _host_speed_index,
     _host_steal_under_load,
+    _isolate_stores,
     _reset,
     control_median_ratio,
 )
 from programmers_data_spark import registry  # noqa: E402
 from programmers_data_spark.session import get_spark  # noqa: E402
+
+_isolate_stores("price17")
 
 # The x6.3 outlier and the three alongside-it anomalies from the
 # polluted r16 driver run (VERDICT watch item), plus first prices

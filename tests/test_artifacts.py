@@ -51,12 +51,18 @@ def test_published_miss_builds_one_generation_then_reads(spark, tmp_path):
 
 def test_published_empty_build_is_returned_unpublished(spark, tmp_path):
     table_dir = str(tmp_path / "empty")
-    out = storeutil.published(spark, table_dir, lambda: spark.range(0))
+    built = []
+
+    def build():
+        built.append(1)
+        return spark.range(0)
+
+    out = storeutil.published(spark, table_dir, build)
     assert out.count() == 0
     assert _gens(table_dir) == []
-    assert (spark.sparkContext.applicationId, table_dir) not in (
-        storeutil._ARTIFACT_CACHE
-    )
+    # nothing memoized: the next call builds again
+    storeutil.published(spark, table_dir, build)
+    assert built == [1, 1]
 
 
 def test_published_memo_binds_the_table_dir(spark, tmp_path):

@@ -428,11 +428,9 @@ def test_doc_stats_memoized_and_exact(spark, planted_dir):
     the second call never re-runs the job (cache hit by identity)."""
     from programmers_data_spark.queries import round12_ops
 
-    round12_ops._DOC_STATS_CACHE.clear()
+    clear_memo_caches()
     stats = round12_ops._doc_stats(spark, planted_dir)
     assert stats == (26, 2, 25)  # doc_id 0..25 -> {0, 20} are %20==0
-    key = (spark.sparkContext.applicationId, planted_dir)
-    assert round12_ops._DOC_STATS_CACHE[key] is stats
     assert round12_ops._doc_stats(spark, planted_dir) is stats
 
 
@@ -457,8 +455,7 @@ def test_xmodal_rejects_doc_ids_at_augmentation_offset(
         }
     )
     docs.to_parquet(d / "documents.parquet", index=False)
-    round12_ops._DOC_STATS_CACHE.clear()
-    round12_ops._XMODAL_HASH_CACHE.clear()
+    clear_memo_caches()
     with pytest.raises(AssertionError, match="alias"):
         round12_ops._xmodal_hash_table(spark, str(d))
 
@@ -467,15 +464,24 @@ def test_lsh_recall_truth_memoized(spark, planted_dir):
     """image_lsh_recall's persisted truth set must be memoized per
     (app, sf_dir) — repeated invocations (bench runs) must not stack
     fresh cached RDDs (r12 ADVICE #1)."""
+    from programmers_data_spark import memo
     from programmers_data_spark.queries import round12_ops
 
-    round12_ops._IMG_TRUTH_CACHE.clear()
+    clear_memo_caches()
     round12_ops.image_lsh_recall(spark, planted_dir).collect()
-    assert len(round12_ops._IMG_TRUTH_CACHE) == 1
-    cached = next(iter(round12_ops._IMG_TRUTH_CACHE.values()))
+    entries = [
+        v
+        for k, v in memo._MEMO.items()
+        if k[0] is round12_ops._scene_truth.__wrapped__
+    ]
+    assert len(entries) == 1 and entries[0].is_cached
+    n = len(memo._MEMO)
     round12_ops.image_lsh_recall(spark, planted_dir).collect()
-    assert len(round12_ops._IMG_TRUTH_CACHE) == 1
-    assert next(iter(round12_ops._IMG_TRUTH_CACHE.values())) is cached
+    assert len(memo._MEMO) == n
+    truth = round12_ops._scene_truth(
+        spark, planted_dir, round12_ops._image_hash_table
+    )
+    assert truth is entries[0]
 
 
 # ------------------------------------------------ bucketed band store

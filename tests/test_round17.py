@@ -235,9 +235,7 @@ def test_frequent_pair_mining_scans_fact_table_once(spark):
     lineitem scan. The groupBy+join-back form it replaced evaluated
     the scan→distinct→support pipeline once per join side (4 scans,
     plan-string verified in plans/r17/copurchase_pairs_before.txt)."""
-    from programmers_data_spark.queries import round11_ops
-
-    round11_ops._PAIR_EDGE_CACHE.clear()
+    clear_memo_caches()
     spark.catalog.clearCache()
     plan = _formatted_plan(
         registry.QUERIES["copurchase_pairs"](spark, SF_DIR)
@@ -251,9 +249,7 @@ def test_one_pass_anchor_queries_scan_fact_table_once(spark):
     the fact table — rfm_segments (orders), ingest_freshness
     (events), cross_source_dup_matrix (documents via the pair read's
     two dimension joins, evaluated once)."""
-    from programmers_data_spark.queries import extras
-
-    extras._RFM_CACHE.clear()
+    clear_memo_caches()
     spark.catalog.clearCache()
     assert _formatted_plan(
         registry.QUERIES["rfm_segments"](spark, SF_DIR)

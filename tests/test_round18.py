@@ -176,9 +176,7 @@ def test_tfidf_df_window_single_exchange(spark):
     window over the tf rows — no df aggregate+join pair, ONE
     persisted table (the weighted postings), and the tokenize+RLE
     pass feeds a single subtree."""
-    from programmers_data_spark.queries import retrieval_ops
-
-    retrieval_ops._TFIDF_CACHE.clear()
+    clear_memo_caches()
     spark.catalog.clearCache()
     plan = _formatted_plan(
         registry.QUERIES["tfidf_shingle_pairs"](spark, SF_DIR)
@@ -189,4 +187,4 @@ def test_tfidf_df_window_single_exchange(spark):
     # term-keyed df table remains (the old plan broadcast dfreq into
     # the postings join)
     assert plan.count("Window") >= 1
-    retrieval_ops._TFIDF_CACHE.clear()
+    clear_memo_caches()

@@ -1,15 +1,17 @@
-"""Round-7 additions: the memo-cache contract made enforceable
+"""Round-7 additions: the session memo made enforceable
 (VERDICT r6 ask #6 + ADVICE r6 items 1-3)."""
 
 from __future__ import annotations
 
 import importlib
 import pkgutil
+from pathlib import Path
+from types import SimpleNamespace
 
 import pytest
 
 import programmers_data_spark as pkg
-from programmers_data_spark import registry
+from programmers_data_spark import memo, registry
 from programmers_data_spark.memo import clear_memo_caches
 
 registry.load_all()
@@ -30,34 +32,55 @@ def _all_package_modules():
 
 
 def test_every_memo_cache_is_swept():
-    """The contract: every shared-helper memo is a module-level dict
-    named *_CACHE, and bench.py's per-query _reset (via
-    clear_memo_caches) empties ALL of them. A cache that escapes the
-    sweep gives its consumers a free ride in the bench."""
-    caches = []
-    for mod in _all_package_modules():
-        for attr in dir(mod):
-            obj = getattr(mod, attr)
-            if attr.endswith("_CACHE") and isinstance(obj, dict):
-                caches.append((mod.__name__, attr, obj))
-    # the known fleet as of round 7 — update when adding a cache
-    assert len(caches) >= 9, [f"{m}.{a}" for m, a, _ in caches]
-    for _, _, c in caches:
-        c["__sentinel__"] = object()
-    cleared = clear_memo_caches()
-    assert cleared >= len(caches)
-    leaked = [f"{m}.{a}" for m, a, c in caches if c]
-    assert not leaked, f"caches not reached by the sweep: {leaked}"
+    """The one-store rule: every in-session memo lives in memo.py's
+    single store, which bench.py's per-query _reset (via
+    clear_memo_caches) empties. A hand memo escapes the sweep and
+    gives its consumers a free ride in the bench, so none may exist:
+    no module-level *_CACHE dict, and no memo key built from the
+    applicationId outside memo.py."""
+    hand_dicts = [
+        f"{mod.__name__}.{attr}"
+        for mod in _all_package_modules()
+        for attr, obj in vars(mod).items()
+        if attr.endswith("_CACHE") and isinstance(obj, dict)
+    ]
+    assert not hand_dicts, f"hand memo dicts: {hand_dicts}"
+    root = Path(pkg.__file__).parent
+    keyed = [
+        str(p.relative_to(root))
+        for p in sorted(root.rglob("*.py"))
+        if p != root / "memo.py"
+        and "sparkContext.applicationId" in p.read_text()
+    ]
+    assert not keyed, f"session keys built outside memo.py: {keyed}"
+
+    @memo.memoized
+    def planted(spark, sf_dir):
+        return object()
+
+    spark = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="x"))
+    first = planted(spark, "sf")
+    assert planted(spark, "sf") is first
+    clear_memo_caches()
+    assert planted(spark, "sf") is not first
 
 
 def test_bench_reset_uses_the_shared_sweep():
     """bench.py must clear memos through memo.clear_memo_caches, not a
-    private copy that could drift from the tested contract."""
+    private copy that could drift from the tested contract — and the
+    scripts reuse bench's _reset/_force instead of carrying copies."""
     import inspect
     import bench
 
     src = inspect.getsource(bench._reset)
     assert "clear_memo_caches" in src
+    scripts = Path(bench.__file__).parent / "scripts"
+    copies = [
+        p.name
+        for p in sorted(scripts.glob("*.py"))
+        if "def _reset(" in p.read_text() or "def _force(" in p.read_text()
+    ]
+    assert not copies, f"scripts defining their own _reset/_force: {copies}"
 
 
 def test_token_budget_sample_memoizes_persist(spark, sf_oracle):
@@ -65,16 +88,22 @@ def test_token_budget_sample_memoizes_persist(spark, sf_oracle):
     tokenized projection instead of stacking a new persist per call."""
     from programmers_data_spark.queries import sampling_ops
 
-    sampling_ops._TOKDOCS_CACHE.clear()
+    from programmers_data_spark import memo
+
+    clear_memo_caches()
     sampling_ops.token_budget_sample(spark, sf_oracle)
-    assert len(sampling_ops._TOKDOCS_CACHE) == 1
-    (cached,) = sampling_ops._TOKDOCS_CACHE.values()
+    entries = [
+        v
+        for k, v in memo._MEMO.items()
+        if k[0] is sampling_ops._token_docs.__wrapped__
+    ]
+    assert len(entries) == 1 and entries[0].is_cached
+    n = len(memo._MEMO)
     sampling_ops.token_budget_sample(spark, sf_oracle)
-    assert len(sampling_ops._TOKDOCS_CACHE) == 1
-    (cached2,) = sampling_ops._TOKDOCS_CACHE.values()
-    assert cached2 is cached
-    cached.unpersist()
-    sampling_ops._TOKDOCS_CACHE.clear()
+    assert len(memo._MEMO) == n
+    assert sampling_ops._token_docs(spark, sf_oracle) is entries[0]
+    clear_memo_caches()
+    assert not entries[0].is_cached
 
 
 def test_bpe_contract_rejects_degenerate_merge_table(

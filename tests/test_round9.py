@@ -15,12 +15,14 @@
 
 from __future__ import annotations
 
+import inspect
 import os
 import time
 
 import pytest
 
 from programmers_data_spark.catalog import load_table
+from programmers_data_spark.memo import clear_memo_caches
 
 
 @pytest.fixture()
@@ -301,7 +303,7 @@ def test_jsonl_roundtrip_detects_row_loss(spark, tmp_path, monkeypatch):
 
     monkeypatch.setenv(io9.JSONL_STORE_ENV, str(tmp_path / "a"))
     sf = "/root/testdata/sf0.001"
-    io9._JSONL_CACHE.clear()
+    clear_memo_caches()
     intact = {
         r.shard: (r.n_rows, r.content_md5)
         for r in io9.jsonl_shard_roundtrip(spark, sf).collect()
@@ -357,7 +359,7 @@ def test_jsonl_roundtrip_detects_row_loss(spark, tmp_path, monkeypatch):
         if redone[s] != intact.get(s, (None, None))
     ]
     assert len(diverged) == 1, (intact, redone)
-    io9._JSONL_CACHE.clear()
+    clear_memo_caches()
 
 
 # --------------------------------------------------- rotation arithmetic
@@ -478,7 +480,7 @@ def test_rotation_backlog_arithmetic():
         registry.QUERIES,
         key=lambda n: (
             mod_idx[registry.QUERIES[n].__module__.rsplit(".", 1)[-1]],
-            registry.QUERIES[n].__code__.co_firstlineno,
+            inspect.unwrap(registry.QUERIES[n]).__code__.co_firstlineno,
         ),
     )
 
@@ -970,7 +972,7 @@ def test_orc_roundtrip_tree_prunes_partitions(spark, sf_smoke, tmp_path,
     from programmers_data_spark import registry
 
     monkeypatch.setenv(ic.ORC_STORE_ENV, str(tmp_path))
-    ic._ORC_CACHE.clear()
+    clear_memo_caches()
     registry.QUERIES["orc_partitioned_roundtrip"](spark, sf_smoke).collect()
 
     trees = [
@@ -984,7 +986,7 @@ def test_orc_roundtrip_tree_prunes_partitions(spark, sf_smoke, tmp_path,
     assert "PartitionFilters" in plan and "lang" in plan.split(
         "PartitionFilters"
     )[1].split("]")[0]
-    ic._ORC_CACHE.clear()
+    clear_memo_caches()
 
 
 # --------------------------------------------------- dup_span_scrub

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from programmers_data_spark.catalog import load_table
+from programmers_data_spark.memo import clear_memo_caches
 
 
 def _plan(df) -> str:
@@ -366,9 +367,9 @@ def test_embedding_neardup_collect_guard(spark, sf_oracle, monkeypatch):
     from programmers_data_spark.queries import similarity_ops
 
     monkeypatch.setattr(similarity_ops, "NEARDUP_COLLECT_CAP", 10)
-    # the memoized pair table is built under the real cap, so a cache
-    # hit legitimately skips the guard — start from an empty cache
-    monkeypatch.setattr(similarity_ops, "_PAIR_CACHE", {})
+    # the memoized pair table is built under the real cap, so a memo
+    # hit legitimately skips the guard — start from an empty memo
+    clear_memo_caches()
     with pytest.raises(ValueError, match="embedding_neardup_lsh"):
         similarity_ops.embedding_neardup(spark, sf_oracle)
 
