@@ -1,17 +1,25 @@
 """Fixture-table catalog: parquet scans + temp-view registration.
 
 The driver fixtures (TESTDATA.md) are one parquet file per table.
-``load_tables`` returns DataFrames straight off ``spark.read.parquet``
-so Catalyst keeps predicate pushdown / column pruning; nothing is
+``load_tables`` returns DataFrames straight off a parquet scan so
+Catalyst keeps predicate pushdown / column pruning; nothing is
 cached here — queries decide what (if anything) to persist.
+
+``read_parquet`` is the package's one parquet read path: it takes the
+schema from the file footer, so a read starts no Spark job (SCALE.md
+"Parquet reads").
 """
 
 from __future__ import annotations
 
+import json
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLES = (
     "region",
@@ -57,6 +65,129 @@ def _pin_excluded_rules(spark: SparkSession) -> None:
         )
 
 
+# Footer key under which Spark's parquet writer stores the row schema
+# as StructType JSON (ParquetReadSupport.SPARK_METADATA_KEY).
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+_PRIMITIVES = {
+    ("BOOLEAN", "None"): T.BooleanType(),
+    ("INT32", "None"): T.IntegerType(),
+    ("INT32", "Date"): T.DateType(),
+    ("INT64", "None"): T.LongType(),
+    ("FLOAT", "None"): T.FloatType(),
+    ("DOUBLE", "None"): T.DoubleType(),
+    ("BYTE_ARRAY", "String"): T.StringType(),
+}
+
+
+def _hidden(name: str) -> bool:
+    """Spark's file-index filter (HadoopFSUtils.shouldFilterOutPathName)."""
+    if name.startswith(("_metadata", "_common_metadata")):
+        return False
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _data_file(path: str) -> str | None:
+    """The file Spark's non-merging schema inference reads: ``path``
+    itself, or the first data file by name in a flat directory. None
+    when Spark would do more than read that one footer (a
+    subdirectory means partition discovery, a summary file is read
+    first), when there is no data file, and for globs and non-local
+    schemes."""
+    if ":" in path or any(c in path for c in "*?[]{}\\"):
+        return None
+    if os.path.isfile(path):
+        return None if _hidden(os.path.basename(path)) else path
+    try:
+        visible = sorted(
+            (e for e in os.scandir(path) if not _hidden(e.name)),
+            key=lambda e: e.name,
+        )
+    except OSError:
+        return None
+    if not visible or any(e.is_dir() or e.name.startswith("_") for e in visible):
+        return None
+    return visible[0].path
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """Spark's ``asNullable``: every field, element and value nullable."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _nullable(f.dataType), True, f.metadata)
+             for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _primitive(col, ntz: bool) -> T.DataType | None:
+    """Spark's ParquetToSparkSchemaConverter for the flat primitives it
+    maps without a conf; None for anything else."""
+    if col.max_repetition_level or col.max_definition_level > 1 or col.path != col.name:
+        return None  # list, repeated or nested column
+    logical = json.loads(col.logical_type.to_json())
+    kind = logical["Type"]
+    if kind == "Int" and logical["isSigned"] and logical["bitWidth"] in (32, 64):
+        kind = "None"  # INT(32|64, signed) is the unannotated type
+    if col.physical_type == "INT64" and kind == "Timestamp":
+        if logical["timeUnit"] not in ("milliseconds", "microseconds"):
+            return None
+        utc = logical["isAdjustedToUTC"]
+        return T.TimestampType() if utc or not ntz else T.TimestampNTZType()
+    return _PRIMITIVES.get((col.physical_type, kind))
+
+
+def footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The schema ``spark.read.parquet(path)`` infers, read on the driver
+    from one file's footer; None where only Spark's own inference
+    gives the right answer (see ``_data_file`` and ``_primitive``)."""
+    data_file = _data_file(path)
+    if data_file is None:
+        return None
+    try:
+        meta = pq.read_metadata(data_file)
+    except (OSError, ValueError, pa.ArrowException):
+        return None
+    spark_json = (meta.metadata or {}).get(_SPARK_ROW_METADATA)
+    if spark_json is not None:
+        try:
+            schema = T.StructType.fromJson(json.loads(spark_json))
+        except (ValueError, KeyError, TypeError):
+            return None
+        return _nullable(schema)
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true") == "true"
+    fields = []
+    for col in meta.schema:
+        dt = _primitive(col, ntz)
+        if dt is None:
+            return None
+        fields.append(T.StructField(col.name, dt, True))
+    if len({f.name.lower() for f in fields}) < len(fields):
+        return None  # duplicate names: let Spark raise its own error
+    return T.StructType(fields)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job.
+
+    Spark's non-merging inference launches a one-task job to read one
+    footer; reading that footer here and handing Spark the schema
+    gives the same DataFrame and starts no job. Anything the footer
+    rule does not cover falls back to Spark's own inference."""
+    schema = footer_schema(spark, path)
+    if schema is None:
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown fixture table {name!r}; have {TABLES}")
@@ -74,7 +205,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     _pin_excluded_rules(spark)
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = read_parquet(spark, table_path(sf_dir, name))
     # Fixture generations have varied their physical timestamp type:
     # earlier rounds wrote events.ts as parquet TIMESTAMP(NANOS),
     # which Spark only reads as a raw INT64 (nanosAsLong); current

@@ -69,6 +69,8 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .catalog import read_parquet
+
 
 def replay_ingest(
     spark: SparkSession,
@@ -137,7 +139,7 @@ def replay_ingest(
         st = state_frame(s, bdf).persist()
         persisted = index_select(st)
         if os.path.isdir(state_dir):
-            index = persisted.unionByName(s.read.parquet(state_dir))
+            index = persisted.unionByName(read_parquet(s, state_dir))
         else:
             index = persisted
         ab = band_frame(st)
@@ -192,7 +194,7 @@ def replay_ingest(
         # removable immediately (the stream_upsert_publish
         # discipline, r11 VERDICT #7).
         return (
-            spark.read.parquet(pair_dir)
+            read_parquet(spark, pair_dir)
             .distinct()
             .orderBy(pa, pb)
             .localCheckpoint(eager=True)

@@ -18,7 +18,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..catalog import register_views
+from ..catalog import read_parquet, register_views
 from ..publish import publish_swap
 from ..quality import CountCheck, run_sql_checks
 
@@ -46,7 +46,7 @@ def build_summary_table(
         run_sql_checks(spark, config.input_checks)
     result = spark.sql(config.main_sql)
     publish_swap(result, f"{out_dir}/{config.table}", checks=config.output_checks)
-    return spark.read.parquet(f"{out_dir}/{config.table}")
+    return read_parquet(spark, f"{out_dir}/{config.table}")
 
 
 # Reference-faithful configs mapped onto the fixtures (FIXTURES.md):

@@ -130,11 +130,24 @@ class SchemaCheck:
             )
 
 
+@dataclass(frozen=True)
+class NonEmptyCheck:
+    """Build_Summary.py:42-45 empty-result guard as a check, so a
+    ``run_df_checks`` list can share its one count with it."""
+
+    context: str = "result"
+
+    def evaluate(self, actual: int) -> None:
+        if actual == 0:
+            raise QualityCheckError(
+                f"{self.context} produced 0 rows; refusing to publish"
+            )
+
+
 def assert_non_empty(df: DataFrame, context: str = "result") -> int:
     """Build_Summary.py:42-45 empty-result guard."""
     n = df.count()
-    if n == 0:
-        raise QualityCheckError(f"{context} produced 0 rows; refusing to publish")
+    NonEmptyCheck(context).evaluate(n)
     return n
 
 

@@ -55,7 +55,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, read_parquet
 from ..functions import textfn
 from ..memo import memoized
 from ..registry import ORACLE, query
@@ -725,7 +725,7 @@ def stream_upsert_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         # _reset sweeps (persist kept the files load-bearing because
         # cache eviction would have re-read them).
         result = (
-            spark.read.parquet(store)
+            read_parquet(spark, store)
             .orderBy("user_id")
             .localCheckpoint(eager=True)
         )

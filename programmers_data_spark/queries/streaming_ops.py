@@ -479,12 +479,12 @@ def stream_corpus_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     Batch equivalent (and oracle): the same aggregate over the full
     table.
     """
-    from ..catalog import table_path
+    from ..catalog import read_parquet, table_path
     from ..functions import textfn
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    schema = spark.read.parquet(table_path(sf_dir, "documents")).schema
+    schema = read_parquet(spark, table_path(sf_dir, "documents")).schema
     stream = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet")
@@ -546,7 +546,7 @@ def stream_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is the oracle (composed from the registry so the two can
     never drift).
     """
-    from ..catalog import load_table, table_path
+    from ..catalog import load_table, read_parquet, table_path
     from ..functions import textfn
     from ._oracle_shared import VDIV_VOCAB_K
 
@@ -566,7 +566,7 @@ def stream_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("tok", F.col("ct").cast("long").alias("ct"))
     )
 
-    schema = spark.read.parquet(table_path(sf_dir, "documents")).schema
+    schema = read_parquet(spark, table_path(sf_dir, "documents")).schema
     stream = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet")

@@ -22,6 +22,7 @@ from typing import Any, Callable
 
 from pyspark.sql import DataFrame
 
+from ..catalog import read_parquet
 from ..functions.cleaning import fill_empty_strings, stringify_for_export
 from ..quality import CountCheck
 from ..publish import (  # noqa: F401  (re-exports: the K1-K8 strategies)
@@ -288,7 +289,7 @@ def compact_parquet(
     n_files = max(1, math.ceil(total / target_file_bytes))
     # coalesce, not repartition: compaction merges input splits and
     # must never pay a full exchange to fix a FILE-COUNT problem
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     expected = df.count()
     # self-verifying: compaction must be a no-op on content, enforced
     # through the same K8 gate as any publish — a failed check (or a

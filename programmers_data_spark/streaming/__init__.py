@@ -21,7 +21,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import table_path
+from ..catalog import read_parquet, table_path
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -30,7 +30,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    schema = spark.read.parquet(table_path(sf_dir, "events")).schema
+    schema = read_parquet(spark, table_path(sf_dir, "events")).schema
     # file stream sources require a directory; pathGlobFilter scopes
     # the fixture dir down to the events table
     stream = (
@@ -107,7 +107,7 @@ def stream_publish_foreachbatch(
         spark = batch_df.sparkSession
         if exactly_once:
             if _os.path.exists(path):
-                cur = spark.read.parquet(path)
+                cur = read_parquet(spark, path)
                 if (
                     "_batch_id" in cur.columns
                     and cur.filter(F.col("_batch_id") == batch_id)
@@ -346,7 +346,7 @@ def stream_sketch_rollup(
             F.date_format(day_col, "yyyy-MM-dd").alias("day")
         ).agg(F.hll_sketch_agg(key_col).alias("sk"))
         try:
-            current = spark.read.parquet(path)
+            current = read_parquet(spark, path)
         except Exception:
             current = None
         if current is not None:
@@ -425,7 +425,7 @@ def stream_cms_rollup(
             return
         spark = batch_df.sparkSession
         try:
-            cur = spark.read.parquet(path)
+            cur = read_parquet(spark, path)
         except Exception:
             cur = None
         if (
@@ -501,7 +501,7 @@ def cms_estimate(spark: SparkSession, path: str, terms: list[str]) -> DataFrame:
     the probed cells (0 if a cell was never touched)."""
     from ..queries.sketch_ops import CMS_DEPTH, _cms_pos
 
-    cells = spark.read.parquet(path).filter(F.col("kind") == "cell")
+    cells = read_parquet(spark, path).filter(F.col("kind") == "cell")
     probes = spark.createDataFrame(
         [(t,) for t in terms], "term string"
     ).select(

@@ -15,7 +15,10 @@ SF_ORACLE = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark(app_name="pds-tests", master="local[8]", shuffle_partitions=8)
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
+    spark = get_spark(
+        app_name="pds-tests", master=f"local[{cpus}]", shuffle_partitions=8
+    )
     yield spark
 
 

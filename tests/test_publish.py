@@ -20,6 +20,7 @@ from programmers_data_spark.publish import (
     incremental_keep_latest,
     incremental_upsert,
     publish_swap,
+    publish_versioned,
 )
 from programmers_data_spark.quality import CountCheck, QualityCheckError
 
@@ -91,6 +92,37 @@ def test_publish_swap_refuses_empty(spark, events, tmp_path):
     with pytest.raises(QualityCheckError):
         publish_swap(events.filter(F.lit(False)), path)
     assert not os.path.exists(path)
+
+
+@pytest.mark.parametrize("publish", ["swap", "versioned"])
+def test_checked_publish_counts_the_staged_table_once(
+    spark, events, tmp_path, monkeypatch, publish
+):
+    """The empty guard and the CountChecks share one count; the guard
+    still runs first, with its own message."""
+    counts = []
+    frame_type = type(events)
+    real_count = frame_type.count
+
+    def counting(df):
+        counts.append(1)
+        return real_count(df)
+
+    monkeypatch.setattr(frame_type, "count", counting)
+    path = str(tmp_path / "t")
+
+    def run(df, checks):
+        if publish == "swap":
+            return publish_swap(df, path, checks=checks)
+        return publish_versioned(df, path, checks=checks)
+
+    assert run(events.limit(5), [CountCheck("min1", 1, "ge")]) == 5
+    assert len(counts) == 1
+    with pytest.raises(QualityCheckError, match="produced 0 rows"):
+        run(events.filter(F.lit(False)), [CountCheck("min50", 50, "ge")])
+    with pytest.raises(QualityCheckError, match="min50"):
+        run(events.limit(3), [CountCheck("min50", 50, "ge")])
+    assert len(counts) == 3
 
 
 def test_stream_publish_foreachbatch(spark, sf_smoke, tmp_path):
