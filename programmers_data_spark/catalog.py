@@ -6,7 +6,8 @@ Catalyst keeps predicate pushdown / column pruning; nothing is
 cached here — queries decide what (if anything) to persist.
 
 ``read_parquet`` is the package's one parquet read path: it takes the
-schema from the file footer, so a read starts no Spark job (SCALE.md
+schema from the file footer, so a read starts no Spark job;
+``row_count`` sums the footers' row counts the same way (SCALE.md
 "Parquet reads").
 """
 
@@ -91,17 +92,16 @@ def _hidden(name: str) -> bool:
     )
 
 
-def _data_file(path: str) -> str | None:
-    """The file Spark's non-merging schema inference reads: ``path``
-    itself, or the first data file by name in a flat directory. None
-    when Spark would do more than read that one footer (a
-    subdirectory means partition discovery, a summary file is read
-    first), when there is no data file, and for globs and non-local
-    schemes."""
+def _data_files(path: str) -> list[str] | None:
+    """The files Spark reads for ``path``: ``path`` itself, or the
+    visible data files of a flat directory, sorted by name. None where
+    Spark would do more than read those files (a subdirectory means
+    partition discovery, a summary file is read first), for an empty
+    directory, and for globs and non-local schemes."""
     if ":" in path or any(c in path for c in "*?[]{}\\"):
         return None
     if os.path.isfile(path):
-        return None if _hidden(os.path.basename(path)) else path
+        return None if _hidden(os.path.basename(path)) else [path]
     try:
         visible = sorted(
             (e for e in os.scandir(path) if not _hidden(e.name)),
@@ -111,7 +111,7 @@ def _data_file(path: str) -> str | None:
         return None
     if not visible or any(e.is_dir() or e.name.startswith("_") for e in visible):
         return None
-    return visible[0].path
+    return [e.path for e in visible]
 
 
 def _nullable(dt: T.DataType) -> T.DataType:
@@ -129,10 +129,8 @@ def _nullable(dt: T.DataType) -> T.DataType:
 
 
 def _primitive(col, ntz: bool) -> T.DataType | None:
-    """Spark's ParquetToSparkSchemaConverter for the flat primitives it
-    maps without a conf; None for anything else."""
-    if col.max_repetition_level or col.max_definition_level > 1 or col.path != col.name:
-        return None  # list, repeated or nested column
+    """Spark's ParquetToSparkSchemaConverter for the primitives it maps
+    without a conf; None for anything else."""
     logical = json.loads(col.logical_type.to_json())
     kind = logical["Type"]
     if kind == "Int" and logical["isSigned"] and logical["bitWidth"] in (32, 64):
@@ -145,15 +143,38 @@ def _primitive(col, ntz: bool) -> T.DataType | None:
     return _PRIMITIVES.get((col.physical_type, kind))
 
 
+def _field(col, arrow: pa.Schema, ntz: bool) -> T.StructField | None:
+    """The field Spark infers for leaf column ``col``: a flat primitive,
+    or a standard 3-level LIST (``<name> (LIST) { repeated group list
+    { element } }``) of one, read as a nullable array. The file's
+    ``arrow`` schema tells a LIST-annotated group from a plain one.
+    None for anything else (structs, maps, nested or legacy lists)."""
+    if col.path == col.name:
+        if col.max_repetition_level or col.max_definition_level > 1:
+            return None
+        dt = _primitive(col, ntz)
+        return None if dt is None else T.StructField(col.name, dt, True)
+    name = col.path.removesuffix(".list.element")
+    idx = arrow.get_field_index(name)
+    if name == col.path or col.max_repetition_level != 1 or idx < 0:
+        return None
+    list_type = arrow.field(idx).type
+    if not isinstance(list_type, pa.ListType) or pa.types.is_nested(list_type.value_type):
+        return None
+    dt = _primitive(col, ntz)
+    return None if dt is None else T.StructField(name, T.ArrayType(dt, True), True)
+
+
 def footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
     """The schema ``spark.read.parquet(path)`` infers, read on the driver
     from one file's footer; None where only Spark's own inference
-    gives the right answer (see ``_data_file`` and ``_primitive``)."""
-    data_file = _data_file(path)
-    if data_file is None:
+    gives the right answer (see ``_data_files`` and ``_field``)."""
+    files = _data_files(path)
+    if files is None:
         return None
     try:
-        meta = pq.read_metadata(data_file)
+        meta = pq.read_metadata(files[0])
+        arrow = meta.schema.to_arrow_schema()
     except (OSError, ValueError, pa.ArrowException):
         return None
     spark_json = (meta.metadata or {}).get(_SPARK_ROW_METADATA)
@@ -166,13 +187,27 @@ def footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
     ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true") == "true"
     fields = []
     for col in meta.schema:
-        dt = _primitive(col, ntz)
-        if dt is None:
+        field = _field(col, arrow, ntz)
+        if field is None:
             return None
-        fields.append(T.StructField(col.name, dt, True))
+        fields.append(field)
     if len({f.name.lower() for f in fields}) < len(fields):
         return None  # duplicate names: let Spark raise its own error
     return T.StructType(fields)
+
+
+def footer_row_count(path: str) -> int | None:
+    """The row count ``spark.read.parquet(path).count()`` returns, summed
+    on the driver from the footers of the files Spark would read; None
+    where ``_data_files`` leaves the read to Spark (partitioned dirs,
+    globs, non-local schemes) or a footer cannot be read."""
+    files = _data_files(path)
+    if files is None:
+        return None
+    try:
+        return sum(pq.read_metadata(f).num_rows for f in files)
+    except (OSError, ValueError, pa.ArrowException):
+        return None
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -186,6 +221,13 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     if schema is None:
         return spark.read.parquet(path)
     return spark.read.schema(schema).parquet(path)
+
+
+def row_count(spark: SparkSession, path: str) -> int:
+    """Rows in the parquet table at ``path``: its footers' row counts,
+    or Spark's ``count()`` where the footer rule does not apply."""
+    n = footer_row_count(path)
+    return read_parquet(spark, path).count() if n is None else n
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

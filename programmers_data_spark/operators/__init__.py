@@ -13,8 +13,10 @@ from __future__ import annotations
 
 from typing import Sequence
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 __all__ = [
@@ -386,10 +388,10 @@ def _resolve_driver_side(e0: DataFrame) -> DataFrame:
     # would error/truncate in createDataFrame on an (int src, long
     # dst) frame, where the distributed paths coerce via the
     # symmetric union)
-    s0 = e0.schema[0].dataType.simpleString()
-    s1 = e0.schema[1].dataType.simpleString()
+    t0, t1 = e0.schema[0].dataType, e0.schema[1].dataType
+    s0, s1 = t0.simpleString(), t1.simpleString()
     if s0 == s1:
-        vt = s0
+        vt = t0
     else:
         rank = {"tinyint": 0, "smallint": 1, "int": 2, "bigint": 3}
         if s0 not in rank or s1 not in rank:
@@ -397,7 +399,7 @@ def _resolve_driver_side(e0: DataFrame) -> DataFrame:
                 f"heterogeneous non-integral edge columns ({s0}, {s1}):"
                 " pass homogeneous vertex-id types"
             )
-        vt = s0 if rank[s0] >= rank[s1] else s1
+        vt = t0 if rank[s0] >= rank[s1] else t1
     rows = e0.collect()  # bounded by DRIVER_RESOLVE_MAX_EDGES
     parent: dict = {}
 
@@ -422,10 +424,16 @@ def _resolve_driver_side(e0: DataFrame) -> DataFrame:
             if rv < ru:
                 ru, rv = rv, ru
             parent[rv] = ru
-    data = [(w, find(w)) for w in sorted(parent)]
-    return e0.sparkSession.createDataFrame(
-        data, f"vertex {vt}, component {vt}"
+    # an Arrow table goes to the JVM as batches; a list of tuples
+    # would go through an RDD and start Python workers for the decode
+    vertices = sorted(parent)
+    table = pa.table(
+        {"vertex": vertices, "component": [find(w) for w in vertices]}
     )
+    schema = T.StructType(
+        [T.StructField("vertex", vt), T.StructField("component", vt)]
+    )
+    return e0.sparkSession.createDataFrame(table, schema)
 
 
 def connected_components(

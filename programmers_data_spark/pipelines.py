@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import sinks, sources
-from .catalog import read_parquet
+from .catalog import row_count
 from .functions.cleaning import clean_numeric
 from .memo import memoized
 from .publish import (
@@ -138,7 +138,7 @@ def name_gender(
     Returns rows loaded."""
     df = sources.csv_from_text(spark, csv_text, "name string, gender string")
     full_refresh(df, target_path)
-    return read_parquet(spark, target_path).count()
+    return row_count(spark, target_path)
 
 
 def update_symbol(
@@ -155,7 +155,7 @@ def update_symbol(
     df = df.withColumn("created_date", F.current_timestamp())
     if mode == "full_refresh":
         full_refresh(df.drop("created_date"), target_path)
-        return read_parquet(spark, target_path).count()
+        return row_count(spark, target_path)
     if mode == "distinct":
         return incremental_distinct(spark, target_path, df.drop("created_date"))
     if mode == "keep_latest":
@@ -177,7 +177,7 @@ def update_country(
         F.col("area").cast("double").alias("area"),
     )
     full_refresh(df, target_path)
-    return read_parquet(spark, target_path).count()
+    return row_count(spark, target_path)
 
 
 def weather(
@@ -217,7 +217,7 @@ def table_copy(
     if upsert_keys:
         return incremental_upsert(spark, target_path, source_df, upsert_keys)
     full_refresh(source_df, target_path)
-    return read_parquet(spark, target_path).count()
+    return row_count(spark, target_path)
 
 
 def gsheet_load(
@@ -233,7 +233,7 @@ def gsheet_load(
     for c in numeric_cols or []:
         df = df.withColumn(c, clean_numeric(F.col(c)))
     full_refresh(df, target_path)
-    return read_parquet(spark, target_path).count()
+    return row_count(spark, target_path)
 
 
 def sql_to_sheet(

@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .catalog import read_parquet
+from .catalog import footer_row_count, read_parquet
 from .quality import (
     CountCheck,
     DriftCheck,
@@ -105,14 +105,18 @@ def full_refresh(df: DataFrame, path: str, partition_by: list[str] | None = None
 
 
 def _validate_staged(
-    staged: DataFrame, checks: list[CountCheck] | None, context: str
+    staged: DataFrame, path: str, checks: list[CountCheck] | None, context: str
 ) -> int:
-    """The empty guard, then ``checks`` in order, on one count of the
-    staged table; returns the count. Both gates stay behind their
-    module-level names, which perfbench's traced runs time."""
+    """The empty guard, then ``checks`` in order, on one row count of
+    the staged table at ``path``; returns the count. The count is read
+    from the written files' footers, or by one ``count()`` where the
+    footer rule does not apply (a partitioned write). Both gates stay
+    behind their module-level names, which perfbench's traced runs
+    time."""
+    n = footer_row_count(path)
     if not checks:
-        return assert_non_empty(staged, context=context)
-    return run_df_checks(staged, [NonEmptyCheck(context), *checks])
+        return assert_non_empty(staged, context=context, count=n)
+    return run_df_checks(staged, [NonEmptyCheck(context), *checks], count=n)
 
 
 def publish_swap(
@@ -154,7 +158,7 @@ def publish_swap(
 
         spark = df.sparkSession
         staged = read_parquet(spark, staging)
-        n = _validate_staged(staged, checks, f"staged write for {path}")
+        n = _validate_staged(staged, staging, checks, f"staged write for {path}")
 
         if os.path.exists(path):
             os.rename(path, trash)
@@ -407,7 +411,9 @@ def publish_versioned(
 
             spark = df.sparkSession
             staged = read_parquet(spark, data_dir)
-            n = _validate_staged(staged, checks, f"staged write for {table_dir}")
+            n = _validate_staged(
+                staged, data_dir, checks, f"staged write for {table_dir}"
+            )
             if drift_checks:
                 cur = _versioned_current(table_dir)
                 if cur is not None:  # first publish: no baseline

@@ -28,6 +28,10 @@ class QualityCheckError(RuntimeError):
     pass
 
 
+class EmptyTableError(QualityCheckError):
+    """The empty-result guard fired: the table has 0 rows."""
+
+
 @dataclass(frozen=True)
 class CountCheck:
     """count(*) assertion — the reference's only check type.
@@ -62,12 +66,13 @@ def run_sql_checks(
     return results
 
 
-def run_df_checks(df: DataFrame, checks: list) -> int:
+def run_df_checks(df: DataFrame, checks: list, count: int | None = None) -> int:
     """Run checks against a result DataFrame — reference output_check
     shape, extended with DataFrame-level gates: CountChecks share a
-    single count() action; checks exposing ``evaluate_df``
-    (UniqueKeyCheck, SchemaCheck) run their own bounded probes."""
-    actual = df.count()
+    single count() action, or the already-known ``count``; checks
+    exposing ``evaluate_df`` (UniqueKeyCheck, SchemaCheck) run their
+    own bounded probes."""
+    actual = df.count() if count is None else count
     for check in checks:
         if hasattr(check, "evaluate_df"):
             check.evaluate_df(df)
@@ -139,14 +144,17 @@ class NonEmptyCheck:
 
     def evaluate(self, actual: int) -> None:
         if actual == 0:
-            raise QualityCheckError(
+            raise EmptyTableError(
                 f"{self.context} produced 0 rows; refusing to publish"
             )
 
 
-def assert_non_empty(df: DataFrame, context: str = "result") -> int:
-    """Build_Summary.py:42-45 empty-result guard."""
-    n = df.count()
+def assert_non_empty(
+    df: DataFrame, context: str = "result", count: int | None = None
+) -> int:
+    """Build_Summary.py:42-45 empty-result guard, on ``df.count()`` or
+    the already-known ``count``."""
+    n = df.count() if count is None else count
     NonEmptyCheck(context).evaluate(n)
     return n
 

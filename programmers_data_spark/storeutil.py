@@ -19,11 +19,14 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 import stat
 import tempfile
 from collections.abc import Callable
 
+from .catalog import footer_row_count
 from .memo import memoized
+from .quality import EmptyTableError, NonEmptyCheck
 
 # Every env var that names a store base: the published artifacts and
 # the scratch trees of ingest, interchange and audit queries. bench.py
@@ -94,18 +97,34 @@ def artifact_dir(
     return os.path.join(base, fp, leaf)
 
 
-def _build_on_miss(read: Callable, build: Callable, write: Callable):
+def _build_on_miss(read: Callable, build: Callable, write: Callable, path: str):
     """``read()``; if the artifact is not there yet, ``write(build())``
-    and read it back. An empty build is returned as it is, unwritten:
-    publish_versioned rejects empty tables by design."""
+    and read it back. The build is evaluated once, by the write: an
+    empty build is refused by the publish's own empty guard
+    (EmptyTableError) and returned as it is, unpublished, with the
+    directories the write made on the way to ``path`` removed."""
     try:
         return read()
     except FileNotFoundError:
-        computed = build()
-        if computed.limit(1).count() == 0:  # bounded 1-value scalar
-            return computed
+        pass
+    computed = build()
+    made = []
+    d = path
+    while not os.path.exists(d):
+        made.append(d)
+        d = os.path.dirname(d)
+    try:
         write(computed)
-        return read()
+    except EmptyTableError:
+        for d in made:  # leaf first; stop at a dir someone else filled
+            try:
+                os.rmdir(d)
+            except FileNotFoundError:
+                continue
+            except OSError:
+                break
+        return computed
+    return read()
 
 
 @memoized
@@ -125,6 +144,7 @@ def published(spark, table_dir: str, build: Callable):
         lambda: _read_published(spark, table_dir),
         build,
         lambda df: publish_versioned(df, table_dir),
+        table_dir,
     )
 
 
@@ -145,6 +165,26 @@ def _registered_bucketed(
     return spark.table(name)
 
 
+def _save_bucketed(
+    df, name: str, path: str, bucket_by: list[str], n_buckets: int
+) -> None:
+    """sinks.save_bucketed, then the empty guard on the written rows:
+    an empty table is dropped from the catalog and its files removed
+    before the guard raises."""
+    from . import sinks
+
+    sinks.save_bucketed(
+        df, name, path, bucket_by=bucket_by, n_buckets=n_buckets, sort_by=bucket_by
+    )
+    n = footer_row_count(path)
+    if n is None:
+        n = df.sparkSession.table(name).count()
+    if n == 0:
+        df.sparkSession.sql(f"DROP TABLE IF EXISTS {name}")
+        shutil.rmtree(path, ignore_errors=True)
+    NonEmptyCheck(f"bucketed build for {path}").evaluate(n)
+
+
 def published_bucketed(
     spark,
     path: str,
@@ -161,18 +201,12 @@ def published_bucketed(
     (columns ``ddl``); otherwise ``build()`` is written via
     sinks.save_bucketed. The catalog name binds the FULL path, so two
     store bases in one session never share a table entry."""
-    from . import sinks
-
     name = f"{prefix}_" + hashlib.md5(path.encode()).hexdigest()[:12]
     return _build_on_miss(
         lambda: _registered_bucketed(
             spark, path, name, ddl, tuple(bucket_by), n_buckets
         ),
         build,
-        lambda df: sinks.save_bucketed(
-            df, name, path,
-            bucket_by=bucket_by,
-            n_buckets=n_buckets,
-            sort_by=bucket_by,
-        ),
+        lambda df: _save_bucketed(df, name, path, bucket_by, n_buckets),
+        path,
     )

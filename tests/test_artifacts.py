@@ -49,8 +49,36 @@ def test_published_miss_builds_one_generation_then_reads(spark, tmp_path):
     assert len(_gens(table_dir)) == 1
 
 
+def test_published_miss_evaluates_its_build_once(spark, tmp_path):
+    """The miss writes the build and reads the written files back: the
+    build's rows are computed once, not once more by an emptiness
+    probe. The UDF feeds an aggregate whose output is filtered, so
+    neither column pruning nor a pushed-down limit can skip it."""
+    from pyspark.sql import functions as F
+
+    seen = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def tally(x):
+        seen.add(1)
+        return x % 10
+
+    def build():
+        return (
+            spark.range(0, 40, 1, 2)
+            .select(tally("id").alias("v"))
+            .groupBy("v")
+            .agg(F.count("*").alias("n"))
+            .filter("n > 0")
+        )
+
+    out = storeutil.published(spark, str(tmp_path / "once"), build)
+    assert sorted((r.v, r.n) for r in out.collect()) == [(v, 4) for v in range(10)]
+    assert seen.value == 40
+
+
 def test_published_empty_build_is_returned_unpublished(spark, tmp_path):
-    table_dir = str(tmp_path / "empty")
+    table_dir = str(tmp_path / "fp" / "empty")
     built = []
 
     def build():
@@ -60,6 +88,8 @@ def test_published_empty_build_is_returned_unpublished(spark, tmp_path):
     out = storeutil.published(spark, table_dir, build)
     assert out.count() == 0
     assert _gens(table_dir) == []
+    # no directory is left on the way to the refused store
+    assert not os.path.exists(tmp_path / "fp")
     # nothing memoized: the next call builds again
     storeutil.published(spark, table_dir, build)
     assert built == [1, 1]
@@ -109,6 +139,23 @@ def test_bucketed_empty_build_is_returned_unpublished(spark, tmp_path):
     out = _bucketed(spark, path, lambda: spark.range(0))
     assert out.count() == 0
     assert not os.path.exists(path)
+
+
+def test_bucketed_empty_build_is_left_unregistered(spark, tmp_path):
+    path = str(tmp_path / "fp" / "bk_empty")
+    name = "t_ids_" + hashlib.md5(path.encode()).hexdigest()[:12]
+    built = []
+
+    def build():
+        built.append(1)
+        return spark.range(6).filter("id > 10")
+
+    assert _bucketed(spark, path, build).count() == 0
+    assert not spark.catalog.tableExists(name)
+    assert not os.path.exists(tmp_path / "fp")
+    # nothing memoized: the next call builds again
+    _bucketed(spark, path, build)
+    assert built == [1, 1]
 
 
 def test_bucketed_memo_binds_the_path(spark, tmp_path):

@@ -13,6 +13,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from programmers_data_spark import publish as publish_mod
 from programmers_data_spark.catalog import load_table
 from programmers_data_spark.publish import (
     full_refresh,
@@ -98,9 +99,25 @@ def test_publish_swap_refuses_empty(spark, events, tmp_path):
 def test_checked_publish_counts_the_staged_table_once(
     spark, events, tmp_path, monkeypatch, publish
 ):
-    """The empty guard and the CountChecks share one count; the guard
-    still runs first, with its own message."""
-    counts = []
+    """A flat staged write is validated from its files' footers: the
+    empty guard and the CountChecks start no Spark job. A partitioned
+    write falls back to one count of the staged table, shared by the
+    guard and the checks. The guard still runs first, with its own
+    message."""
+    sc = spark.sparkContext
+    jobs, counts = [], []
+    real_validate = publish_mod._validate_staged
+
+    def probed(*args, **kwargs):
+        group = f"validate-{len(jobs)}"
+        sc.setJobGroup(group, group)
+        try:
+            return real_validate(*args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+
     frame_type = type(events)
     real_count = frame_type.count
 
@@ -108,21 +125,29 @@ def test_checked_publish_counts_the_staged_table_once(
         counts.append(1)
         return real_count(df)
 
+    monkeypatch.setattr(publish_mod, "_validate_staged", probed)
     monkeypatch.setattr(frame_type, "count", counting)
     path = str(tmp_path / "t")
 
-    def run(df, checks):
+    def run(df, checks, partition_by=None):
         if publish == "swap":
-            return publish_swap(df, path, checks=checks)
-        return publish_versioned(df, path, checks=checks)
+            return publish_swap(df, path, checks=checks, partition_by=partition_by)
+        return publish_versioned(df, path, checks=checks, partition_by=partition_by)
 
     assert run(events.limit(5), [CountCheck("min1", 1, "ge")]) == 5
-    assert len(counts) == 1
+    assert (jobs, counts) == ([0], [])
     with pytest.raises(QualityCheckError, match="produced 0 rows"):
         run(events.filter(F.lit(False)), [CountCheck("min50", 50, "ge")])
     with pytest.raises(QualityCheckError, match="min50"):
         run(events.limit(3), [CountCheck("min50", 50, "ge")])
-    assert len(counts) == 3
+    assert (jobs, counts) == ([0, 0, 0], [])
+
+    by_type = events.limit(20)
+    assert run(by_type, [CountCheck("min1", 1, "ge")], ["event_type"]) == 20
+    assert len(counts) == 1
+    with pytest.raises(QualityCheckError, match="min50"):
+        run(by_type, [CountCheck("min50", 50, "ge")], ["event_type"])
+    assert len(counts) == 2
 
 
 def test_stream_publish_foreachbatch(spark, sf_smoke, tmp_path):
