@@ -25,7 +25,7 @@ Scale posture: at 100 TB the signature table is the published ANN
 index a day's crawl probes; nothing here is all-pairs (candidates
 come from the (tbl, bucket) equi-join) and nothing collects unbounded
 data (component resolution goes through
-``operators.connected_components_auto``).
+``operators.connected_components``).
 
 Reference anchor: the reference (HyeM207/Programmers-DATA) has no
 vector pipeline; this tier is north-star training-data-pipeline scope
@@ -224,7 +224,7 @@ def cluster_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental cluster maintenance starts from. Columns: (vec_id,
     cluster_id), cluster_id = min member id; singletons map to
     themselves."""
-    from .operators import connected_components_auto
+    from .operators import connected_components
     from .queries.similarity_ops import load_vectors
 
     def build() -> DataFrame:
@@ -232,7 +232,7 @@ def cluster_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs = pair_store(spark, sf_dir).filter(
             is_existing("vec_a") & is_existing("vec_b")
         )
-        labels = connected_components_auto(pairs, "vec_a", "vec_b")
+        labels = connected_components(pairs, "vec_a", "vec_b")
         ids = (
             load_vectors(spark, sf_dir)
             .select("vec_id")

@@ -214,14 +214,14 @@ def cluster_store(
     instead of re-clustering the corpus. Columns: (media_id,
     cluster_id), cluster_id = min member id; singletons map to
     themselves."""
-    from .operators import connected_components_auto
+    from .operators import connected_components
     from .queries.round12_ops import _pairs_from
 
     def build() -> DataFrame:
         h = hash_store(spark, sf_dir, spec).filter(
             F.col("media_id") % 3 != spec.arrival_residue
         )
-        labels = connected_components_auto(
+        labels = connected_components(
             _pairs_from(h), "media_a", "media_b"
         )
         return (
@@ -254,9 +254,10 @@ def incremental_clusters(
     (stars ∪ delta) equal the FULL rebuild's components exactly:
     contracting a subgraph's components preserves connectivity of
     the union, delta edges reach non-root members through their star
-    edge, and labels are vertex ids so min-propagation recovers the
-    true minimum member per merged cluster. The registered oracle IS
-    the full rebuild, so any gap in that argument breaks the hash.
+    edge, and labels are vertex ids so the min-id component label
+    recovers the true minimum member per merged cluster. The
+    registered oracle IS the full rebuild, so any gap in that
+    argument breaks the hash.
 
     Scale shape: reads two published artifacts (clusters, hashes —
     nothing about the existing corpus is re-hashed, re-paired, or

@@ -35,8 +35,6 @@ __all__ = [
     "range_join",
     "distributed_rank",
     "connected_components",
-    "connected_components_two_phase",
-    "connected_components_auto",
     "merge_clusters",
 ]
 
@@ -361,18 +359,22 @@ def as_of_join(
 
 # Edge-count bound under which component resolution runs DRIVER-SIDE
 # (union-find over the collected edge list). Rationale, measured at
-# sf0.1: the distributed resolvers' per-round cost on local[32] is
+# sf0.1: the distributed resolver's per-round cost on local[32] is
 # scheduling-dominated for small graphs — the multimodal funnel's
 # 14,306-edge graph spent 6-8s across 6 star rounds (~0.6s/round of
 # stage overhead on a 5k-row round state) where a serial union-find
 # resolves the same list in milliseconds. A 200k-edge list is a few
 # MB on the driver (the bounded-collect discipline of the IVF/PQ
 # codebook training); anything bigger — a corpus-scale near-dup
-# graph at 100 TB — exceeds the bound and takes the distributed
-# paths unchanged. The bound is checked with ONE count job on the
+# graph at 100 TB — exceeds the bound and takes the large-star/
+# small-star loop. The bound is checked with ONE count job on the
 # already-checkpointed edge list, so large graphs pay one cheap
 # metadata-ish job, never a collect.
 DRIVER_RESOLVE_MAX_EDGES = 200_000
+
+# Round cap of the large-star/small-star loop: O(log^2 n) rounds
+# resolve any graph, so reaching it means n far beyond design.
+LARGE_STAR_MAX_ROUNDS = 25
 
 
 def _resolve_driver_side(e0: DataFrame) -> DataFrame:
@@ -380,13 +382,13 @@ def _resolve_driver_side(e0: DataFrame) -> DataFrame:
     callers guarantee the list is under DRIVER_RESOLVE_MAX_EDGES.
     Returns (vertex, component) for every edge-incident vertex,
     component = min member id (identical contract to the distributed
-    resolvers; the hypothesis theorem in test_properties pins all
-    three paths to the same serial reference)."""
+    loop; the hypothesis theorem in test_properties pins both paths
+    to the same serial reference)."""
     # output type = the WIDER of the two edge columns, derived BEFORE
     # the loop so a non-comparable mix fails with a clear contract
     # error (r15 ADVICE #2: typing both outputs from schema[0] alone
     # would error/truncate in createDataFrame on an (int src, long
-    # dst) frame, where the distributed paths coerce via the
+    # dst) frame, where the distributed path coerces via the
     # symmetric union)
     t0, t1 = e0.schema[0].dataType, e0.schema[1].dataType
     s0, s1 = t0.simpleString(), t1.simpleString()
@@ -437,145 +439,17 @@ def _resolve_driver_side(e0: DataFrame) -> DataFrame:
 
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iterations: int = 20,
-    driver_cutoff: int = DRIVER_RESOLVE_MAX_EDGES,
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
-    """Connected components by iterative min-label propagation:
-    every vertex repeatedly adopts the smallest label reachable over
-    one hop until no label changes. Returns (vertex, component) with
-    component = min vertex id in the component.
+    """Connected components of the graph ``edges`` (``src`` → ``dst``,
+    treated as undirected). Returns (vertex, component) for every
+    edge-incident vertex, component = min vertex id in the component.
 
-    Scale posture: each iteration is one shuffle join (edges ⋈ labels
-    on vertex) + one min-aggregate — both partition on the vertex key,
-    so AQE reuses one exchange layout across iterations; each
-    iteration's labels are localCheckpoint-ed (persist alone does NOT
-    truncate the logical plan — lineage nests per round and Catalyst
-    planning itself OOMs on high-diameter graphs such as chains), and
-    each retired round's checkpoint blocks are freed eagerly via
-    _free_blocks so storage stays one-generation-deep. localCheckpoint
-    is non-reliable by definition: its blocks live on executors and
-    lineage is truncated, so losing an executor mid-run fails the job
-    (restart-and-rerun) — the accepted tradeoff for not writing
-    per-round state to reliable storage; use Dataset.checkpoint with a
-    checkpoint dir if executor churn is expected.
-    Iteration count is the graph DIAMETER, which for
-    dedup graphs (small dense near-dup clusters) is tiny; for
-    long-chain graphs swap in the large-star/small-star variant
-    (Kiveris et al., "Connected Components in MapReduce", SoCC'14),
-    which converges in O(log^2 n) rounds of the same join+agg shape.
-    """
-    # Materialize the caller's edge list ONCE before symmetrizing:
-    # the union's two branches are separate scans of `edges`, so an
-    # unpersisted input (e.g. a banded pair join) would run its whole
-    # upstream pipeline twice in the first job (measured ~1s extra
-    # per media cluster query at sf0.1).
-    e0 = edges.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
-    ).localCheckpoint(eager=True)
-    # arrival-scale graphs resolve driver-side (see
-    # DRIVER_RESOLVE_MAX_EDGES); the count is one cheap job on the
-    # checkpointed blocks
-    if e0.count() <= driver_cutoff:
-        result = _resolve_driver_side(e0)
-        _free_blocks(e0)
-        return result
-    sym = (
-        e0.union(e0.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .persist()
-    )
-    labels = (
-        sym.select(F.col("a").alias("vertex"))
-        .distinct()
-        .withColumn("component", F.col("vertex"))
-        .localCheckpoint(eager=True)
-    )
-
-    # Convergence test: per-vertex labels are MONOTONE non-increasing
-    # (new = least(old, neighbor-min) <= old) over a fixed vertex set,
-    # so the label SUM strictly decreases until the fixpoint — one
-    # single-column aggregate on the fresh checkpoint replaces the
-    # former join-old-vs-new + count (a per-round shuffle join).
-    # decimal(38,0) keeps the sum exact far past int64 (1e9 vertices
-    # with 2^40 ids would overflow a BIGINT sum).
-    def _label_sum(frame: DataFrame):
-        return frame.agg(
-            F.coalesce(
-                F.sum(F.col("component").cast("decimal(38,0)")),
-                F.lit(0).cast("decimal(38,0)"),
-            )
-        ).collect()[0][0]  # bounded 1-value scalar
-
-    prev_sum = _label_sum(labels)
-    converged = False
-    for _ in range(max_iterations):
-        neighbor_min = (
-            sym.join(labels, sym["a"] == labels["vertex"])
-            .groupBy(F.col("b").alias("vertex"))
-            .agg(F.min("component").alias("neighbor_component"))
-        )
-        # localCheckpoint, NOT persist: each round's plan nests the
-        # previous round's join+agg, so without truncation lineage
-        # depth is exponential in rounds and planning OOMs ~round 8+
-        new_labels = (
-            labels.join(neighbor_min, "vertex", "left")
-            .select(
-                "vertex",
-                F.least(
-                    "component", F.coalesce("neighbor_component", "component")
-                ).alias("component"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        new_sum = _label_sum(new_labels)
-        # new_labels is eagerly materialized and its sum computed, so
-        # the previous round's checkpoint blocks are dead — free them
-        # immediately (Dataset.unpersist alone would leak them; see
-        # _free_blocks). Executor-loss note: local (non-reliable)
-        # checkpoints die with their executor anyway — a lost executor
-        # fails the job regardless of this early free, the accepted
-        # tradeoff for not writing per-round state to reliable storage.
-        _free_blocks(labels)
-        labels = new_labels
-        if new_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = new_sum
-    if not converged:
-        # the loop exhausted with labels still moving: the graph's
-        # diameter exceeds max_iterations and the labels are NOT
-        # component ids — returning them silently would present an
-        # unconverged partition as a correct result
-        sym.unpersist()
-        _free_blocks(labels)
-        _free_blocks(e0)
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} "
-            f"iterations (the label sum is still decreasing); the "
-            "graph's diameter exceeds the cap — raise max_iterations "
-            "or use connected_components_two_phase (O(log^2 n) rounds)."
-        )
-    sym.unpersist()
-    _free_blocks(e0)
-    return labels
-
-
-def connected_components_two_phase(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iterations: int = 25,
-    driver_cutoff: int = DRIVER_RESOLVE_MAX_EDGES,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — the O(log² n)-round variant for graphs whose diameter
-    is too large for per-hop label propagation (long chains). Same
-    contract as connected_components: returns (vertex, component),
-    component = min vertex id.
+    Edge lists at or under DRIVER_RESOLVE_MAX_EDGES resolve
+    driver-side by union-find. Larger ones run alternating
+    large-star / small-star (Kiveris et al., "Connected Components in
+    MapReduce and Beyond", SoCC'14), which converges in O(log² n)
+    rounds whatever the graph's diameter.
 
     Each round fuses the two star passes over the symmetric edge
     set: large-star hangs every larger neighbor of u onto
@@ -587,6 +461,16 @@ def connected_components_two_phase(
     convergence is detected when the canonical edge set stops
     changing. All shuffles key on the vertex — the same single
     partitioning reused every round.
+
+    Every round's state is localCheckpoint-ed (persist alone does NOT
+    truncate the logical plan — lineage nests per round and Catalyst
+    planning itself OOMs on long chains) and each retired round's
+    blocks are freed eagerly via _free_blocks. The result is itself
+    a local checkpoint: after return, executor storage holds only the
+    result's blocks, which the caller releases with _free_blocks.
+    localCheckpoint is non-reliable by definition: losing an executor
+    mid-run fails the job (restart-and-rerun) — the accepted tradeoff
+    for not writing per-round state to reliable storage.
     """
     a, b = F.col("_u"), F.col("_v")
     # Materialize the caller's edge list ONCE: symmetrize and the
@@ -599,7 +483,7 @@ def connected_components_two_phase(
     # arrival-scale graphs resolve driver-side (see
     # DRIVER_RESOLVE_MAX_EDGES); the count is one cheap job on the
     # checkpointed blocks
-    if e0.count() <= driver_cutoff:
+    if e0.count() <= DRIVER_RESOLVE_MAX_EDGES:
         result = _resolve_driver_side(e0)
         _free_blocks(e0)
         return result
@@ -614,14 +498,15 @@ def connected_components_two_phase(
         .localCheckpoint(eager=True)
     )
     # eagerly checkpointed (not just persisted): the final vertex →
-    # component join materializes lazily AFTER e0's blocks are freed
-    # below, so it must not depend on e0 through a lazy persist
+    # component join runs AFTER e0's blocks are freed below, so it
+    # must not depend on e0 through a lazy persist
     vertices = (
         e0.select(F.col("_u").alias("vertex"))
         .union(e0.select(F.col("_v").alias("vertex")))
         .distinct()
         .localCheckpoint(eager=True)
     )
+    _free_blocks(e0)
 
     def _round(e: DataFrame) -> DataFrame:
         # One fused large-star + small-star pass over the symmetric
@@ -658,7 +543,7 @@ def connected_components_two_phase(
             .distinct()
         )
 
-    for _ in range(max_iterations):
+    for _ in range(LARGE_STAR_MAX_ROUNDS):
         # localCheckpoint (not persist): each round's plan nests the
         # previous round's unions/joins, so lineage depth is
         # exponential in rounds unless truncated here
@@ -674,67 +559,30 @@ def connected_components_two_phase(
         if same:
             break
     else:
-        _free_blocks(e0)
+        _free_blocks(cur)
+        _free_blocks(vertices)
         raise RuntimeError(
-            f"connected_components_two_phase did not converge in "
-            f"{max_iterations} rounds (edge set still changing); "
-            "raise max_iterations — O(log^2 n) rounds suffice for any "
-            "graph, so hitting this cap indicates n far beyond design."
+            "connected_components did not converge in "
+            f"{LARGE_STAR_MAX_ROUNDS} rounds (edge set still changing); "
+            "O(log^2 n) rounds suffice for any graph, so hitting this "
+            "cap indicates n far beyond design."
         )
-    _free_blocks(e0)
 
     # the converged symmetric set holds each star edge both ways;
     # the (child → root) direction is the one pointing downward
     mapping = cur.filter(b < a).select(
         F.col("_u").alias("vertex"), F.col("_v").alias("component")
     )
+    # materialized before its inputs' blocks are freed, so the caller
+    # owns exactly one block set
     out = (
         vertices.join(mapping, "vertex", "left")
         .select("vertex", F.coalesce("component", "vertex").alias("component"))
+        .localCheckpoint(eager=True)
     )
+    _free_blocks(vertices)
+    _free_blocks(cur)
     return out
-
-
-def connected_components_auto(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    label_prop_cap: int = 8,
-    driver_cutoff: int = DRIVER_RESOLVE_MAX_EDGES,
-) -> DataFrame:
-    """Connected components with a DATA-DEPENDENT algorithm choice
-    (VERDICT r4 #5). The rule:
-
-    - Edge lists under ``driver_cutoff`` (arrival-batch graphs,
-      near-dup deltas) resolve DRIVER-SIDE by union-find — both
-      distributed resolvers' per-round cost is pure scheduling
-      overhead at that size (see DRIVER_RESOLVE_MAX_EDGES).
-    - Near-dup graphs are piles of small dense clusters whose diameter
-      is a few hops; min-label propagation converges in diameter
-      rounds at ONE join + one aggregate each — the cheapest path.
-    - Long-chain graphs (diameter > ``label_prop_cap``) make per-hop
-      propagation take diameter rounds (a 10k-vertex path would need
-      10k shuffles). Propagation detects this itself via its honest
-      non-convergence error, and the large-star/small-star variant
-      resolves the same edge list in O(log² n) rounds regardless of
-      diameter.
-
-    Cost of a wrong first guess is bounded: ``label_prop_cap`` cheap
-    join rounds before the fallback, nothing incorrect ever returned.
-    Pick explicitly instead when the shape is known a priori:
-    propagation for bounded-diameter cluster graphs, two-phase for
-    anything chain-like (linked lists, long URL redirect chains,
-    citation paths)."""
-    try:
-        return connected_components(
-            edges, src, dst,
-            max_iterations=label_prop_cap,
-            driver_cutoff=driver_cutoff,
-        )
-    except RuntimeError:
-        return connected_components_two_phase(
-            edges, src, dst, driver_cutoff=driver_cutoff
-        )
 
 
 def merge_clusters(
@@ -759,7 +607,7 @@ def merge_clusters(
     contributes one star edge per non-root member (member → cluster
     root), the delta is the only new connectivity, and component
     resolution runs over that contracted graph via
-    ``connected_components_auto``. Entities incident to no edge keep
+    ``connected_components``. Entities incident to no edge keep
     their own id as the label.
 
     Correctness (the argument every call site's oracle pins): the
@@ -767,8 +615,8 @@ def merge_clusters(
     into the stars — contracting a subgraph's components preserves
     connectivity of the union) and pairs touching an arrival (the
     delta); delta edges reach non-root members through their star
-    edge, and labels are vertex ids, so min-propagation recovers the
-    exact minimum member per merged cluster. Components over
+    edge, and labels are vertex ids, so the min-id component label
+    recovers the exact minimum member per merged cluster. Components over
     (stars ∪ delta) therefore equal the FULL rebuild's components.
 
     Scale shape: nothing about the existing corpus is re-hashed,
@@ -785,7 +633,7 @@ def merge_clusters(
             F.col(pair_cols[1]).alias("dst"),
         )
     )
-    labels = connected_components_auto(edges, "src", "dst")
+    labels = connected_components(edges, "src", "dst")
     return ids.join(labels, ids[id_col] == labels["vertex"], "left").select(
         id_col,
         F.coalesce("component", id_col).alias(cluster_col),

@@ -250,7 +250,7 @@ def sql_to_sheet(
 # memoized per strategy: repeated calls (the pipeline plus the
 # registered funnel contract, or several counts against the same
 # frames) must not re-run the eager component resolution inside
-# connected_components_auto.
+# connected_components.
 @memoized
 def curation_stage_frames(
     spark: SparkSession,
@@ -347,22 +347,10 @@ def curation_stage_frames(
         .join(alive.withColumnRenamed("doc_id", "doc_b"), "doc_b", "semi")
         .persist()
     )
-    # Resolver choice by KNOWN graph shape (the operator docstring's
-    # "pick explicitly when the shape is known a priori" rule): the
-    # text-only near-dup graph is small dense clusters — label
-    # propagation converges in a few rounds (auto's first guess).
-    # The MULTIMODAL union graph is media cliques chained together by
-    # cross-modal text bridges — unbounded diameter, so auto would
-    # burn its full label-prop cap before falling back (measured +5s
-    # at sf0.1); go straight to large-star/small-star.
-    from .operators import (
-        connected_components_auto,
-        connected_components_two_phase,
-    )
+    from .operators import connected_components
 
-    resolve = connected_components_two_phase if media else connected_components_auto
     if near_dup == "canonical":
-        labels = resolve(
+        labels = connected_components(
             pairs_alive.select("doc_a", "doc_b"), "doc_a", "doc_b"
         )
         # component label = min vertex id per cluster: keep it, drop
@@ -375,7 +363,7 @@ def curation_stage_frames(
 
         from .queries.round10_ops import quality_logits
 
-        labels = resolve(
+        labels = connected_components(
             pairs_alive.select("doc_a", "doc_b"), "doc_a", "doc_b"
         )
         members = labels.select(

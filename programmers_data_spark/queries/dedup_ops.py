@@ -569,15 +569,15 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     recompute the exact graph and resolve components with a recursive
     CTE. At 100 TB the edge list comes from dedup_minhash's LSH
     banding instead, and the same connected_components operator
-    (iterative min-label propagation; large-star/small-star for
-    long-chain graphs) resolves clusters — component resolution cost
-    scales with the EDGE list, not the corpus.
+    (driver-side union-find, else large-star/small-star) resolves
+    clusters — component resolution cost scales with the EDGE list,
+    not the corpus.
     """
     return _clusters_table(spark, sf_dir)
 
 
 # dedup_keep_canonical composes dedup_clusters, and connected
-# components materializes EAGERLY (per-round localCheckpoint), so an
+# components materializes EAGERLY (localCheckpoint), so an
 # unshared call re-runs the whole iterative resolution and re-persists
 # an identical shingle table (CacheManager 'already cached' noise).
 # Memoized like the signature table: one cluster table per session
@@ -585,7 +585,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # once, every downstream keep/filter step reads the same table.
 @memoized
 def _clusters_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import connected_components_auto
+    from ..operators import connected_components
 
     sub = _augmented_docs(spark, sf_dir).filter(F.col("doc_id") % 1000000 < 120)
     shingled = sub.select("doc_id", _shingles_spark().alias("shingles")).persist()
@@ -599,11 +599,7 @@ def _clusters_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.floor(inter.cast("double") / union * 10000 + 0.5) / 10000 >= 0.5)
         .select("doc_a", "doc_b")
     )
-    # auto: label propagation for the (typical) bounded-diameter
-    # near-dup graph, large-star/small-star fallback if a chain-shaped
-    # graph exhausts the propagation cap (operators docstring has the
-    # full choice rule)
-    labels = connected_components_auto(edges, "doc_a", "doc_b")
+    labels = connected_components(edges, "doc_a", "doc_b")
     return (
         shingled.select("doc_id")
         .join(labels, shingled["doc_id"] == labels["vertex"], "left")

@@ -828,23 +828,16 @@ _PR_STEP_SQL = """
     ),
 )
 def nation_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed PageRank over the supplier-nation → customer-nation
-    trade graph: the heavy part is the EDGE BUILD (lineitem ⋈ orders ⋈
-    customer ⋈ supplier aggregated to one weighted edge per nation
-    pair — the same multi-join shuffle profile as nation_trade_volume,
-    Q7's shape); the power iteration then runs on the aggregated graph
-    as join + sum per round. Ranks are scaled fixed-point LONGS with
-    damping 0.85 applied as integer `div` — sums of longs are
-    order-independent, so three unrolled iterations hash-match the
-    recursive SQL exactly (the float formulation would diverge by
-    summation order).
-
-    Scale posture: each iteration is one hash-partitioned join +
-    aggregate on the EDGE table (nation-level here, arbitrarily large
-    in general — e.g. a document-link graph); iterations shuffle on
-    the same key so the partitioning is reusable, and a deep loop
-    would localCheckpoint per round (operators.connected_components
-    does) — 3 rounds keeps lineage trivially bounded."""
+    """PageRank over the supplier-nation → customer-nation trade
+    graph: the heavy part is the distributed EDGE BUILD (lineitem ⋈
+    orders ⋈ customer ⋈ supplier aggregated to one weighted edge per
+    nation pair — the same multi-join shuffle profile as
+    nation_trade_volume, Q7's shape); the power iteration then folds
+    the aggregated graph (≤ 625 edges: nation has 25 keys) on the
+    driver. Ranks are scaled fixed-point LONGS with damping 0.85
+    applied as integer `div` — sums of longs are order-independent,
+    so three iterations hash-match the recursive SQL exactly (the
+    float formulation would diverge by summation order)."""
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey"
     )
@@ -870,76 +863,48 @@ def nation_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("w"))
     )
-    # The aggregated graph is nation×nation (≤ 625 edges for any SF):
-    # resolve the power iteration DRIVER-SIDE under the same bounded
-    # count-checked escape the component resolvers use
-    # (operators.DRIVER_RESOLVE_MAX_EDGES) — the distributed loop's
-    # per-round joins over a ≤625-row frame are pure stage-scheduling
-    # overhead (r17: iterations cost ~2.4s of the query's ~4s at
-    # sf0.1). All arithmetic is non-negative fixed-point integer
-    # (`div` == Python // on non-negatives), so the driver fold is
-    # bit-identical to the join+sum formulation and the recursive SQL
-    # oracle. Graphs over the cap (a general document-link graph)
-    # keep the distributed join+aggregate rounds.
+    # The aggregated graph is nation×nation (≤ 625 edges for any SF),
+    # so the power iteration folds DRIVER-SIDE under the bounded
+    # collect the component resolver uses
+    # (operators.DRIVER_RESOLVE_MAX_EDGES) — per-round joins over a
+    # ≤625-row frame were pure stage-scheduling overhead (r17:
+    # iterations cost ~2.4s of the query's ~4s at sf0.1). All
+    # arithmetic is non-negative fixed-point integer (`div` == Python
+    # // on non-negatives), so the driver fold is bit-identical to the
+    # recursive SQL oracle.
     from ..operators import DRIVER_RESOLVE_MAX_EDGES
 
     edge_rows = edges.limit(DRIVER_RESOLVE_MAX_EDGES + 1).collect()
-    if len(edge_rows) <= DRIVER_RESOLVE_MAX_EDGES:
-        node_rows = nation.collect()  # fixed-cardinality dimension
-        tw: dict = {}
-        for r in edge_rows:
-            tw[r.src] = tw.get(r.src, 0) + r.w
-        ranks = {r.n_nationkey: _PR_SCALE for r in node_rows}
-        for _ in range(_PR_ITERATIONS):
-            incoming: dict = {}
-            for r in edge_rows:
-                # an edge whose src is not a known nation contributes
-                # nothing — same as the distributed inner join
-                rank_src = ranks.get(r.src)
-                if rank_src is None:
-                    continue
-                contrib = (rank_src * r.w) // tw[r.src]
-                incoming[r.dst] = incoming.get(r.dst, 0) + contrib
-            ranks = {
-                n: 150_000 + (85 * incoming.get(n, 0)) // 100
-                for n in ranks
-            }
-        name = {r.n_nationkey: r.n_name for r in node_rows}
-        data = sorted(
-            ((name[n], ranks[n]) for n in ranks),
-            key=lambda t: (-t[1], t[0]),
+    if len(edge_rows) > DRIVER_RESOLVE_MAX_EDGES:
+        raise ValueError(
+            "nation_pagerank: the nation graph has more than "
+            f"DRIVER_RESOLVE_MAX_EDGES={DRIVER_RESOLVE_MAX_EDGES} edges"
         )
-        return spark.createDataFrame(data, "nation string, rank long")
-    outw = edges.groupBy("src").agg(F.sum("w").alias("tw"))
-    edges = edges.join(outw, "src").persist()
-    ranks = nation.select(
-        F.col("n_nationkey").alias("node"),
-        F.lit(_PR_SCALE).cast("long").alias("rank"),
-    )
+    node_rows = nation.collect()  # fixed-cardinality dimension
+    tw: dict = {}
+    for r in edge_rows:
+        tw[r.src] = tw.get(r.src, 0) + r.w
+    ranks = {r.n_nationkey: _PR_SCALE for r in node_rows}
     for _ in range(_PR_ITERATIONS):
-        incoming = (
-            edges.join(ranks, edges.src == ranks.node)
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("(rank * w) div tw").alias("contrib"),
-            )
-            .groupBy("node")
-            .agg(F.sum("contrib").alias("incoming"))
-        )
-        ranks = nation.select(
-            F.col("n_nationkey").alias("node")
-        ).join(incoming, "node", "left").select(
-            "node",
-            (
-                F.lit(150_000)
-                + F.expr("(85 * COALESCE(incoming, 0)) div 100")
-            ).cast("long").alias("rank"),
-        )
-    return (
-        ranks.join(nation, ranks.node == nation.n_nationkey)
-        .select(F.col("n_name").alias("nation"), "rank")
-        .orderBy(F.desc("rank"), "nation")
+        incoming: dict = {}
+        for r in edge_rows:
+            # an edge whose src is not a known nation contributes
+            # nothing (the oracle's inner join)
+            rank_src = ranks.get(r.src)
+            if rank_src is None:
+                continue
+            contrib = (rank_src * r.w) // tw[r.src]
+            incoming[r.dst] = incoming.get(r.dst, 0) + contrib
+        ranks = {
+            n: 150_000 + (85 * incoming.get(n, 0)) // 100
+            for n in ranks
+        }
+    name = {r.n_nationkey: r.n_name for r in node_rows}
+    data = sorted(
+        ((name[n], ranks[n]) for n in ranks),
+        key=lambda t: (-t[1], t[0]),
     )
+    return spark.createDataFrame(data, "nation string, rank long")
 
 
 @query(

@@ -504,16 +504,16 @@ def cdc_apply_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -------------------------------------------- dup-cluster profile
 
 # Resolved component labels over the published verified pair set:
-# component resolution localCheckpoints per round (eager), so its two
+# component resolution localCheckpoints eagerly, so its two
 # consumers (neardup_cluster_profile, dedup_keep_best_quality) must
 # share one resolution.
 @memoized
 def _pair_store_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import connected_components_auto
+    from ..operators import connected_components
     from .dedup_ops import verified_pair_store
 
     pairs = verified_pair_store(spark, sf_dir).select("doc_a", "doc_b")
-    labels = connected_components_auto(pairs, "doc_a", "doc_b")
+    labels = connected_components(pairs, "doc_a", "doc_b")
     return labels
 
 
@@ -567,9 +567,10 @@ def neardup_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     composed dedup_minhash SQL, already hash-certified) and resolves
     components with a recursive CTE.
 
-    Scale shape: component resolution is iterative join+min-agg on
-    the EDGE list (corpus-independent — near-dup pairs, not docs;
-    operators.connected_components_auto localCheckpoints per round),
+    Scale shape: component resolution runs on the EDGE list
+    (corpus-independent — near-dup pairs, not docs;
+    operators.connected_components resolves it driver-side, else by
+    large-star/small-star rounds),
     and everything after lives on one-row-per-cluster then
     one-row-per-size frames. Singleton docs never enter the graph —
     cluster_size ≥ 2 by construction — keeping the vertex set

@@ -41,7 +41,7 @@ Certification structure (all ten queries FULL hash parity):
   NEVER all-pairs — the dedup_minhash discipline), verified by full
   64-bit Hamming distance <= HAM_T via bit_count(xor) on each half.
 - `image_neardup_clusters` — connected components over the near-dup
-  graph (operators.connected_components_auto, the dedup_clusters
+  graph (operators.connected_components, the dedup_clusters
   machinery), cluster id = min media_id reached; oracle resolves the
   same graph with a recursive CTE.
 - `image_lsh_recall` — the banding's accuracy twin: per-scene recall
@@ -73,7 +73,7 @@ Scale shape: one map-only Arrow pass per hash table (memoized +
 persisted — pairs/clusters/the presentation sort are 3+ consumers),
 band join is an equi hash join whose bucket width is bounded by the
 duplication factor, component resolution is edge-list-bounded
-(label propagation with per-round localCheckpoint). At 100 TB the
+(operators.connected_components). At 100 TB the
 same kernel decodes real payload bytes from a binary column; nothing
 in the plan depends on the synthetic generator.
 """
@@ -551,16 +551,16 @@ def image_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def image_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster assignment over the image near-dup graph — the step a
     real media-dedup pipeline keeps one representative per cluster
-    with: connected components (operators.connected_components_auto —
-    label propagation, large-star/small-star fallback; cost bounded
+    with: connected components (operators.connected_components —
+    driver-side union-find, else large-star/small-star; cost bounded
     by the EDGE list), cluster id = min media_id reached; singletons
     keep their own id. Oracle: recursive-CTE reachability over the
     identical pair set (the dedup_clusters precedent)."""
-    from ..operators import connected_components_auto
+    from ..operators import connected_components
 
     h = _image_hash_table(spark, sf_dir)
     pairs = _neardup_pairs(spark, sf_dir)
-    labels = connected_components_auto(pairs, "media_a", "media_b")
+    labels = connected_components(pairs, "media_a", "media_b")
     return (
         h.select("media_id")
         .join(labels, h["media_id"] == labels["vertex"], "left")

@@ -94,17 +94,16 @@ def audio_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster assignment over the AUDIO near-dup graph — completes
     the audio tier to full parity with the image tier (fingerprint ->
     pairs -> clusters): connected components over the banded pair
-    set (operators.connected_components_auto — label propagation,
-    edge-list-bounded, per-round localCheckpoint), cluster id = min
-    media_id; singletons keep their own id. Oracle: recursive-CTE
-    reachability over the identical pair set (the
+    set (operators.connected_components — edge-list-bounded),
+    cluster id = min media_id; singletons keep their own id.
+    Oracle: recursive-CTE reachability over the identical pair set (the
     image_neardup_clusters derivation verbatim, audio hash CTE
     swapped in — the shared-fragment discipline)."""
-    from ..operators import connected_components_auto
+    from ..operators import connected_components
 
     h = _audio_hash_table(spark, sf_dir)
     pairs = _pairs_from(h)
-    labels = connected_components_auto(pairs, "media_a", "media_b")
+    labels = connected_components(pairs, "media_a", "media_b")
     return (
         h.select("media_id")
         .join(labels, h["media_id"] == labels["vertex"], "left")
@@ -974,13 +973,13 @@ def video_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def video_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster assignment over the video near-dup graph — the keeper
     step, through the same component machinery as the image and
-    audio tiers (edge-list-bounded label propagation, recursive-CTE
-    oracle)."""
-    from ..operators import connected_components_auto
+    audio tiers (edge-list-bounded component resolution,
+    recursive-CTE oracle)."""
+    from ..operators import connected_components
 
     h = _video_hash_table(spark, sf_dir)
     pairs = _pairs_from(h)
-    labels = connected_components_auto(pairs, "media_a", "media_b")
+    labels = connected_components(pairs, "media_a", "media_b")
     return (
         h.select("media_id")
         .join(labels, h["media_id"] == labels["vertex"], "left")

@@ -275,7 +275,7 @@ def text_cluster_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     singletons map to themselves. Content-addressed UNDER the pair
     store's fingerprint directory (same fixture bytes + live MinHash
     constants), residue in the leaf name — the media-tier layout."""
-    from ..operators import connected_components_auto
+    from ..operators import connected_components
     from ..storeutil import published
     from .curation_ops import _NEW_BATCH_RESIDUE
     from .dedup_ops import (
@@ -289,7 +289,7 @@ def text_cluster_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs = verified_pair_store(spark, sf_dir).filter(
             is_existing("doc_a") & is_existing("doc_b")
         )
-        labels = connected_components_auto(pairs, "doc_a", "doc_b")
+        labels = connected_components(pairs, "doc_a", "doc_b")
         ids = (
             _augmented_docs(spark, sf_dir)
             .select("doc_id")
@@ -356,7 +356,7 @@ def text_neardup_clusters_incremental(
     existing-x-existing pairs (contracted into the stars) and pairs
     touching an arrival (the delta — neardup_incremental's oracle
     restriction), so components over (stars ∪ delta) equal the full
-    rebuild's components; labels are vertex ids, so min-propagation
+    rebuild's components; labels are vertex ids, so the min-id label
     recovers the exact minimum member. Oracle: the full rebuild
     (reachability over the registered dedup_minhash pair SQL).
 

@@ -176,9 +176,9 @@ def embedding_neardup_clusters_incremental(
     pairs (contracted into the stars) and pairs touching an arrival
     (the delta — embedding_neardup_incremental's oracle restriction),
     so components over (stars ∪ delta) equal the full rebuild's;
-    labels are vertex ids, so min-propagation recovers the exact
-    minimum member. Oracle: the full rebuild (reachability over the
-    registered LSH pair fragments).
+    labels are vertex ids, so the min-id component label recovers the
+    exact minimum member. Oracle: the full rebuild (reachability over
+    the registered LSH pair fragments).
 
     Round 17: the star-contraction merge itself lives in
     ``operators.merge_clusters`` (one engine for all five families);

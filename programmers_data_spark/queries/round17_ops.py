@@ -212,10 +212,10 @@ def embedding_cluster_profile(
     full derivation over the registered LSH pair fragments with
     recursive-CTE component resolution."""
     from ..embedding_index import pair_store
-    from ..operators import connected_components_auto
+    from ..operators import connected_components
 
     pairs = pair_store(spark, sf_dir).select("vec_a", "vec_b")
-    labels = connected_components_auto(pairs, "vec_a", "vec_b")
+    labels = connected_components(pairs, "vec_a", "vec_b")
     sizes = labels.groupBy("component").agg(
         F.count(F.lit(1)).cast("long").alias("cluster_size")
     )

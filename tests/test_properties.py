@@ -87,35 +87,26 @@ EDGES = st.lists(
 )
 
 
-@pytest.mark.parametrize("algorithm", ["label_prop", "two_phase", "driver"])
+@pytest.mark.parametrize("path", ["distributed", "driver"])
 @given(edges=EDGES)
 @settings(
     max_examples=6,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-def test_connected_components_matches_union_find(spark, algorithm, edges):
-    """All THREE CC paths (min-label propagation, large-star/
-    small-star, and the bounded driver-side union-find escape) must
-    agree with a serial union-find on any random graph (self-loops,
-    multi-edges, chains, stars included). driver_cutoff=0 forces the
-    distributed paths; the 'driver' case uses the default cutoff
-    (every hypothesis graph is under it)."""
-    from programmers_data_spark.operators import (
-        connected_components,
-        connected_components_two_phase,
-    )
+def test_connected_components_matches_union_find(
+    spark, monkeypatch, path, edges
+):
+    """Both CC paths (large-star/small-star and the bounded
+    driver-side union-find escape) must agree with a serial
+    union-find on any random graph (self-loops, multi-edges, chains,
+    stars included). A cutoff of 0 forces the distributed path; the
+    'driver' case keeps the default cutoff (every hypothesis graph is
+    under it)."""
+    from programmers_data_spark import operators
 
-    if algorithm == "label_prop":
-        cc = lambda df: connected_components(  # noqa: E731
-            df, driver_cutoff=0, max_iterations=60
-        )
-    elif algorithm == "two_phase":
-        cc = lambda df: connected_components_two_phase(  # noqa: E731
-            df, driver_cutoff=0
-        )
-    else:
-        cc = connected_components  # default cutoff → driver path
+    if path == "distributed":
+        monkeypatch.setattr(operators, "DRIVER_RESOLVE_MAX_EDGES", 0)
 
     parent: dict[int, int] = {}
 
@@ -141,7 +132,10 @@ def test_connected_components_matches_union_find(spark, algorithm, edges):
     expected = {v: comp_min[find(v)] for v in parent}
 
     df = spark.createDataFrame(edges, "src long, dst long")
-    got = {(r["vertex"], r["component"]) for r in cc(df).collect()}
+    got = {
+        (r["vertex"], r["component"])
+        for r in operators.connected_components(df).collect()
+    }
     assert got == set(expected.items())
 
 

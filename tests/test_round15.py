@@ -78,16 +78,14 @@ def test_text_incremental_clusters_equal_full_rebuild(spark):
     """Star-contraction merge over (existing clusters ∪ arrival pair
     delta) reproduces components of the FULL near-dup graph —
     Spark-vs-Spark (the SQL oracle proves the same against DuckDB)."""
-    from programmers_data_spark.operators import (
-        connected_components_auto,
-    )
+    from programmers_data_spark.operators import connected_components
     from programmers_data_spark.queries.dedup_ops import (
         _augmented_docs,
     )
     from pyspark.sql import functions as F
 
     pairs = registry.QUERIES["dedup_minhash"](spark, SF_DIR)
-    labels = connected_components_auto(pairs, "doc_a", "doc_b")
+    labels = connected_components(pairs, "doc_a", "doc_b")
     ids = _augmented_docs(spark, SF_DIR).select("doc_id")
     full = {
         (r.doc_id, r.cluster_id)

@@ -208,15 +208,13 @@ def test_incremental_clusters_equal_full_rebuild(spark):
     Spark-vs-Spark (the SQL oracle proves the same against DuckDB)."""
     from pyspark.sql import functions as F
 
-    from programmers_data_spark.operators import (
-        connected_components_auto,
-    )
+    from programmers_data_spark.operators import connected_components
     from programmers_data_spark.queries.similarity_ops import (
         load_vectors,
     )
 
     pairs = registry.QUERIES["embedding_neardup_lsh"](spark, SF_DIR)
-    labels = connected_components_auto(pairs, "vec_a", "vec_b")
+    labels = connected_components(pairs, "vec_a", "vec_b")
     ids = load_vectors(spark, SF_DIR).select("vec_id")
     full = {
         (r.vec_id, r.cluster_id)

@@ -225,19 +225,24 @@ def _path_edges(spark, n):
     )
 
 
-def test_two_phase_cc_converges_on_10k_chain(spark):
-    """A 10k-vertex path has diameter 10k — far beyond per-hop label
-    propagation — but large-star/small-star must resolve it within
-    its O(log^2 n) round cap (VERDICT r4 #5)."""
-    from programmers_data_spark.operators import (
-        connected_components_two_phase,
-    )
+def test_two_phase_cc_converges_on_10k_chain(spark, monkeypatch):
+    """Large-star/small-star must resolve a 10k-vertex path (diameter
+    10k) within its O(log^2 n) round cap (VERDICT r4 #5), and a dense
+    8-vertex clique (diameter 1) as well. A cutoff of 0 keeps both on
+    the distributed path."""
+    import itertools
 
-    labels = connected_components_two_phase(
-        _path_edges(spark, 10_000), driver_cutoff=0
-    )
-    rows = labels.collect()
+    from programmers_data_spark import operators
+
+    monkeypatch.setattr(operators, "DRIVER_RESOLVE_MAX_EDGES", 0)
+    rows = operators.connected_components(_path_edges(spark, 10_000)).collect()
     assert len(rows) == 10_000
+    assert all(r.component == 0 for r in rows)
+
+    pairs = list(itertools.combinations(range(8), 2))
+    clique = spark.createDataFrame(pairs, "src long, dst long")
+    rows = operators.connected_components(clique).collect()
+    assert len(rows) == 8
     assert all(r.component == 0 for r in rows)
 
 
@@ -245,50 +250,11 @@ def test_driver_escape_resolves_chain_without_rounds(spark):
     """Under DRIVER_RESOLVE_MAX_EDGES the same chain resolves through
     the bounded driver-side union-find (default cutoff) — identical
     labels, no distributed rounds."""
-    from programmers_data_spark.operators import (
-        connected_components_two_phase,
-    )
-
-    labels = connected_components_two_phase(_path_edges(spark, 10_000))
-    rows = labels.collect()
-    assert len(rows) == 10_000
-    assert all(r.component == 0 for r in rows)
-
-
-def test_label_prop_raises_honestly_on_long_chain(spark):
-    """Label propagation on a chain deeper than its cap must raise its
-    explicit non-convergence error — never return partial labels."""
     from programmers_data_spark.operators import connected_components
 
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(
-            _path_edges(spark, 200), max_iterations=5, driver_cutoff=0
-        )
-
-
-def test_auto_cc_falls_back_to_two_phase(spark):
-    """connected_components_auto: propagation first (cheapest for
-    bounded-diameter dedup graphs), two-phase fallback when the chain
-    exhausts the cap — correct labels either way."""
-    from programmers_data_spark.operators import connected_components_auto
-
-    # chain: forces the fallback (driver_cutoff=0 keeps the test on
-    # the distributed paths the fallback logic is about)
-    labels = connected_components_auto(
-        _path_edges(spark, 300), label_prop_cap=4, driver_cutoff=0
-    )
+    labels = connected_components(_path_edges(spark, 10_000))
     rows = labels.collect()
-    assert len(rows) == 300
-    assert all(r.component == 0 for r in rows)
-
-    # dense blob: stays on the propagation path (diameter 2)
-    import itertools
-
-    pairs = list(itertools.combinations(range(8), 2))
-    star = spark.createDataFrame(pairs, "src long, dst long")
-    rows = connected_components_auto(
-        star, label_prop_cap=4, driver_cutoff=0
-    ).collect()
+    assert len(rows) == 10_000
     assert all(r.component == 0 for r in rows)
 
 

@@ -142,31 +142,27 @@ def test_vacuum_collects_only_inactive_orphans(spark, events, tmp_path):
     assert read_versioned(spark, table).count() == 10
 
 
-def test_connected_components_frees_checkpoint_blocks(spark):
+def test_connected_components_frees_checkpoint_blocks(spark, monkeypatch):
     """After connected_components returns, executor storage must hold
-    at most the RESULT's generation of checkpoint blocks — retired
-    rounds' blocks freed eagerly, not left to ContextCleaner GC
-    (Dataset.unpersist alone is a no-op for localCheckpoint blocks)."""
-    from programmers_data_spark.operators import (
-        _free_blocks,
-        connected_components,
-    )
+    at most the RESULT's checkpoint blocks — the edge list, vertex set
+    and every round's state freed eagerly, not left to ContextCleaner
+    GC (Dataset.unpersist alone is a no-op for localCheckpoint
+    blocks) — and freeing the result must empty it again."""
+    from programmers_data_spark import operators
 
+    # a cutoff of 0 forces the large-star/small-star rounds
+    monkeypatch.setattr(operators, "DRIVER_RESOLVE_MAX_EDGES", 0)
     spark.sparkContext._jsc.sc().getRDDStorageInfo()  # touch API early
-    # a 12-vertex path graph forces ~12 label-propagation rounds —
-    # the leak under test was one orphaned block-set per round
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "src int, dst int"
     )
     before = len(_storage_blocks(spark))
-    labels = connected_components(edges, max_iterations=20, driver_cutoff=0)
+    labels = operators.connected_components(edges)
     rows = labels.collect()
     assert {r.component for r in rows} == {0}
     after = _storage_blocks(spark)
-    # sym is unpersisted; only the returned labels' single checkpoint
-    # generation may remain
     assert len(after) <= before + 1, f"leaked blocks: {after}"
-    _free_blocks(labels)
+    operators._free_blocks(labels)
     assert len(_storage_blocks(spark)) <= before
 
 
