@@ -224,7 +224,7 @@ def cluster_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental cluster maintenance starts from. Columns: (vec_id,
     cluster_id), cluster_id = min member id; singletons map to
     themselves."""
-    from .operators import connected_components
+    from .operators import label_clusters
     from .queries.similarity_ops import load_vectors
 
     def build() -> DataFrame:
@@ -232,18 +232,12 @@ def cluster_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs = pair_store(spark, sf_dir).filter(
             is_existing("vec_a") & is_existing("vec_b")
         )
-        labels = connected_components(pairs, "vec_a", "vec_b")
         ids = (
             load_vectors(spark, sf_dir)
             .select("vec_id")
             .filter(is_existing("vec_id"))
         )
-        return ids.join(
-            labels, ids["vec_id"] == labels["vertex"], "left"
-        ).select(
-            "vec_id",
-            F.coalesce("component", "vec_id").alias("cluster_id"),
-        )
+        return label_clusters(ids, pairs, "vec_id", ("vec_a", "vec_b"))
 
     return published(
         spark,

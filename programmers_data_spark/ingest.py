@@ -70,6 +70,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import read_parquet
+from .operators import band_probe
 
 
 def replay_ingest(
@@ -129,8 +130,6 @@ def replay_ingest(
     # probes the table through the bucket layout; per-run name,
     # dropped in the finally with the scratch tree
     band_tbl = table_prefix + os.path.basename(root)[len(scratch_prefix):]
-    bcols = list(band_cols)
-    pa, pb = pair_cols
 
     def apply_batch(bdf: DataFrame, _batch_id: int) -> None:
         if bdf.isEmpty():
@@ -149,20 +148,10 @@ def replay_ingest(
         (
             ab.write.mode("append")
             .option("path", band_dir)
-            .bucketBy(n_buckets, *bcols)
+            .bucketBy(n_buckets, *band_cols)
             .saveAsTable(band_tbl, format="parquet")
         )
-        allb = s.table(band_tbl)
-        cand = (
-            ab.alias("a")
-            .join(allb.alias("b"), bcols)
-            .filter(F.col(f"a.{id_col}") != F.col(f"b.{id_col}"))
-            .select(
-                F.least(f"a.{id_col}", f"b.{id_col}").alias(pa),
-                F.greatest(f"a.{id_col}", f"b.{id_col}").alias(pb),
-            )
-            .distinct()
-        )
+        cand = band_probe(ab, s.table(band_tbl), id_col, band_cols, pair_cols)
         delta = verify(cand, index)
         delta.write.mode("append").parquet(pair_dir)
         persisted.write.mode("append").parquet(state_dir)
@@ -196,7 +185,7 @@ def replay_ingest(
         return (
             read_parquet(spark, pair_dir)
             .distinct()
-            .orderBy(pa, pb)
+            .orderBy(*pair_cols)
             .localCheckpoint(eager=True)
         )
     finally:

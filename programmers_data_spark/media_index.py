@@ -162,14 +162,8 @@ def pair_store(
     Content is exactly ``_pairs_from(hash_table)`` (parquet
     roundtrips of long columns are exact); columns
     (media_a, media_b, ham_d), normalized media_a < media_b."""
-    from .queries.round12_ops import HAM_T
 
     def build() -> DataFrame:
-        h = hash_store(spark, sf_dir, spec)
-        if h.limit(1).count() == 0:  # bounded 1-value scalar
-            return spark.createDataFrame(
-                [], "media_a long, media_b long, ham_d int"
-            )
         b = band_store(spark, sf_dir, spec)
         cand = (
             b.alias("a")
@@ -181,23 +175,7 @@ def pair_store(
             )
             .distinct()
         )
-        ha = h.select(
-            F.col("media_id").alias("media_a"),
-            F.col("dhash_lo").alias("lo_a"),
-            F.col("dhash_hi").alias("hi_a"),
-        )
-        hb = h.select(
-            F.col("media_id").alias("media_b"),
-            F.col("dhash_lo").alias("lo_b"),
-            F.col("dhash_hi").alias("hi_b"),
-        )
-        return (
-            cand.join(ha, "media_a")
-            .join(hb, "media_b")
-            .withColumn("ham_d", _ham())
-            .filter(F.col("ham_d") <= HAM_T)
-            .select("media_a", "media_b", "ham_d")
-        )
+        return hamming_verify(cand, hash_store(spark, sf_dir, spec))
 
     return published(spark, store_table_dir(spec, sf_dir, "pairs"), build)
 
@@ -214,23 +192,16 @@ def cluster_store(
     instead of re-clustering the corpus. Columns: (media_id,
     cluster_id), cluster_id = min member id; singletons map to
     themselves."""
-    from .operators import connected_components
+    from .operators import label_clusters
     from .queries.round12_ops import _pairs_from
 
     def build() -> DataFrame:
         h = hash_store(spark, sf_dir, spec).filter(
             F.col("media_id") % 3 != spec.arrival_residue
         )
-        labels = connected_components(
-            _pairs_from(h), "media_a", "media_b"
-        )
-        return (
-            h.select("media_id")
-            .join(labels, h["media_id"] == labels["vertex"], "left")
-            .select(
-                "media_id",
-                F.coalesce("component", "media_id").alias("cluster_id"),
-            )
+        return label_clusters(
+            h.select("media_id"), _pairs_from(h), "media_id",
+            ("media_a", "media_b"),
         )
 
     return published(
@@ -264,12 +235,7 @@ def incremental_clusters(
     re-clustered), runs component resolution over |existing stars| +
     |delta| edges, and the delta side is proportional to the arrival
     batch. This is how a production media-dedup index absorbs a
-    day's crawl.
-
-    Round 17: the star-contraction merge itself lives in
-    ``operators.merge_clusters`` (one engine for all five families);
-    this wrapper supplies the media family's stored/delta/universe
-    frames."""
+    day's crawl."""
     from .operators import merge_clusters
 
     return merge_clusters(
@@ -281,11 +247,38 @@ def incremental_clusters(
     ).orderBy("media_id")
 
 
-def _ham(prefix_a: str = "a", prefix_b: str = "b"):
+def _ham():
+    """64-bit dHash Hamming distance of (lo_a, hi_a) vs (lo_b, hi_b)."""
     return (
-        F.bit_count(F.col(f"lo_{prefix_a}").bitwiseXOR(F.col(f"lo_{prefix_b}")))
-        + F.bit_count(F.col(f"hi_{prefix_a}").bitwiseXOR(F.col(f"hi_{prefix_b}")))
+        F.bit_count(F.col("lo_a").bitwiseXOR(F.col("lo_b")))
+        + F.bit_count(F.col("hi_a").bitwiseXOR(F.col("hi_b")))
     ).cast("int")
+
+
+def hamming_verify(cand: DataFrame, index: DataFrame) -> DataFrame:
+    """Exact re-check of normalized (media_a, media_b) candidates
+    against hash table ``index`` (media_id, dhash_lo, dhash_hi): join
+    both hash halves, keep Hamming distance <= HAM_T. Columns
+    (media_a, media_b, ham_d)."""
+    from .queries.round12_ops import HAM_T
+
+    ha = index.select(
+        F.col("media_id").alias("media_a"),
+        F.col("dhash_lo").alias("lo_a"),
+        F.col("dhash_hi").alias("hi_a"),
+    )
+    hb = index.select(
+        F.col("media_id").alias("media_b"),
+        F.col("dhash_lo").alias("lo_b"),
+        F.col("dhash_hi").alias("hi_b"),
+    )
+    return (
+        cand.join(ha, "media_a")
+        .join(hb, "media_b")
+        .withColumn("ham_d", _ham())
+        .filter(F.col("ham_d") <= HAM_T)
+        .select("media_a", "media_b", "ham_d")
+    )
 
 
 # The memos below take the RESOLVED store table dir (env var + fixture
@@ -338,47 +331,20 @@ def incremental_delta(
     BUCKETED band table — no Exchange and no per-run band
     re-derivation on the index side; cost proportional to the ARRIVAL
     batch and its bucket mates, never the index size."""
-    from .queries.round12_ops import HAM_T, _band_frame
+    from .operators import band_probe
+    from .queries.round12_ops import _band_frame
 
     h = _arrival_index(spark, sf_dir, spec, store_table_dir(spec, sf_dir))
     arrivals = h.filter(F.col("media_id") % 3 == spec.arrival_residue)
-    ab = _band_frame(arrivals)
     # index bands come from the PUBLISHED bucketed band table (the
     # full corpus's bands — identical content to _band_frame(h), but
     # pre-bucketed by the join key so the probe plans with no
     # Exchange and no per-run O(index) explode)
-    allb = band_store(spark, sf_dir, spec)
-    # candidate = arrival x (existing + arrivals), normalized a < b;
-    # an arrival-arrival pair appears from both sides of the probe,
-    # the DISTINCT collapses it to one row.
-    cand = (
-        ab.alias("a")
-        .join(allb.alias("b"), ["band", "bval"])
-        .filter(F.col("a.media_id") != F.col("b.media_id"))
-        .select(
-            F.least("a.media_id", "b.media_id").alias("media_a"),
-            F.greatest("a.media_id", "b.media_id").alias("media_b"),
-        )
-        .distinct()
+    cand = band_probe(
+        _band_frame(arrivals), band_store(spark, sf_dir, spec), "media_id",
+        ("band", "bval"), ("media_a", "media_b"),
     )
-    ha = h.select(
-        F.col("media_id").alias("media_a"),
-        F.col("dhash_lo").alias("lo_a"),
-        F.col("dhash_hi").alias("hi_a"),
-    )
-    hb = h.select(
-        F.col("media_id").alias("media_b"),
-        F.col("dhash_lo").alias("lo_b"),
-        F.col("dhash_hi").alias("hi_b"),
-    )
-    return (
-        cand.join(ha, "media_a")
-        .join(hb, "media_b")
-        .withColumn("ham_d", _ham())
-        .filter(F.col("ham_d") <= HAM_T)
-        .select("media_a", "media_b", "ham_d")
-        .orderBy("media_a", "media_b")
-    )
+    return hamming_verify(cand, h).orderBy("media_a", "media_b")
 
 
 def streaming_ingest(
@@ -414,12 +380,8 @@ def streaming_ingest(
     the parquet replay source binds to Kafka and the hash/pair stores
     are the published bucketed tables.
 
-    Round 16: the replay loop itself lives in ``ingest.replay_ingest``
-    (r15 VERDICT ask #7) — this wrapper supplies the media family's
-    callbacks (Arrow dHash kernel, dHash band explode, Hamming
-    verify) and the memo. The checkpointed result is
-    location-independent once built, but its memo binds the store dir
-    like every memo in this module (r14 ADVICE #1)."""
+    The checkpointed result is location-independent once built, but
+    its memo binds the store dir like every memo in this module."""
     return _ingest(spark, sf_dir, spec, store_table_dir(spec, sf_dir))
 
 
@@ -429,12 +391,7 @@ def _ingest(
 ) -> DataFrame:
     from .catalog import load_table
     from .ingest import replay_ingest
-    from .queries.round12_ops import (
-        HAM_T,
-        _band_frame,
-        _doc_count,
-        _scene_count,
-    )
+    from .queries.round12_ops import _band_frame, _doc_count, _scene_count
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
@@ -446,25 +403,6 @@ def _ingest(
             [], "media_a long, media_b long, ham_d int"
         )
 
-    def verify(cand: DataFrame, index: DataFrame) -> DataFrame:
-        ha = index.select(
-            F.col("media_id").alias("media_a"),
-            F.col("dhash_lo").alias("lo_a"),
-            F.col("dhash_hi").alias("hi_a"),
-        )
-        hb = index.select(
-            F.col("media_id").alias("media_b"),
-            F.col("dhash_lo").alias("lo_b"),
-            F.col("dhash_hi").alias("hi_b"),
-        )
-        return (
-            cand.join(ha, "media_a")
-            .join(hb, "media_b")
-            .withColumn("ham_d", _ham())
-            .filter(F.col("ham_d") <= HAM_T)
-            .select("media_a", "media_b", "ham_d")
-        )
-
     return replay_ingest(
         spark,
         docs,
@@ -474,7 +412,7 @@ def _ingest(
         ),
         index_select=lambda st: st,
         band_frame=_band_frame,
-        verify=verify,
+        verify=hamming_verify,
         id_col="media_id",
         pair_cols=("media_a", "media_b"),
         band_cols=("band", "bval"),

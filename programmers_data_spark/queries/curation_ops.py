@@ -439,11 +439,8 @@ def neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     The plain bucket join is used (no skew salting) because the new
     side of every bucket is batch-bounded.
     """
-    from .dedup_ops import (
-        JACCARD_THRESHOLD,
-        _band_cols_spark,
-        minhash_signatures,
-    )
+    from ..operators import band_probe
+    from .dedup_ops import _band_cols_spark, jaccard_verify, minhash_signatures
 
     is_new = (F.col("doc_id") % 10) == _NEW_BATCH_RESIDUE
     sigs = minhash_signatures(spark, sf_dir)
@@ -451,36 +448,11 @@ def neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.posexplode(F.array(*_band_cols_spark())).alias("band_idx", "band"),
     )
-    a = banded.filter(is_new).select(
-        F.col("doc_id").alias("new_id"), "band_idx", "band"
+    pairs = band_probe(
+        banded.filter(is_new), banded, "doc_id", ("band_idx", "band"),
+        ("doc_a", "doc_b"),
     )
-    b = banded.select(F.col("doc_id").alias("any_id"), "band_idx", "band")
-    pairs = (
-        a.join(b, ["band_idx", "band"])
-        .filter(F.col("new_id") != F.col("any_id"))
-        .select(
-            F.least("new_id", "any_id").alias("doc_a"),
-            F.greatest("new_id", "any_id").alias("doc_b"),
-        )
-        .distinct()
-    )
-    sa = sigs.select(
-        F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a")
-    )
-    sb = sigs.select(
-        F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b")
-    )
-    jac = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(
-        F.array_union("sh_a", "sh_b")
-    )
-    return (
-        pairs.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("jaccard", F.floor(jac * 10000 + 0.5) / 10000)
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", "jaccard")
-        .orderBy("doc_a", "doc_b")
-    )
+    return jaccard_verify(pairs, sigs).orderBy("doc_a", "doc_b")
 
 
 @query(

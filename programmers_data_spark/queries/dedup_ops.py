@@ -31,7 +31,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -335,20 +335,35 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     sigs = minhash_signatures(spark, sf_dir)
     pairs = minhash_band_pairs(spark, sf_dir)
+    return jaccard_verify(pairs, sigs).orderBy("doc_a", "doc_b").persist()
 
-    sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    verified = pairs.join(sa, "doc_a").join(sb, "doc_b")
 
+def rounded_jaccard() -> Column:
+    """Exact Jaccard of the shingle arrays ``sh_a`` and ``sh_b``,
+    rounded half-up to 4 places: floor(|∩|/|∪| · 1e4 + 0.5) / 1e4 —
+    one IEEE division of exact integers, so both engines agree
+    bitwise. The union of two shingle sets is never empty (an empty
+    doc pins to the [''] whole-text shingle), so the division is
+    ANSI-safe."""
     jac = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(
         F.array_union("sh_a", "sh_b")
     )
+    return F.floor(jac * 10000 + 0.5) / 10000
+
+
+def jaccard_verify(cand: DataFrame, sigs: DataFrame) -> DataFrame:
+    """Exact re-check of normalized (doc_a, doc_b) candidates against
+    signature table ``sigs`` (doc_id, shingles): join both shingle
+    sets, keep rounded Jaccard >= JACCARD_THRESHOLD. Columns
+    (doc_a, doc_b, jaccard)."""
+    sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
+    sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
     return (
-        verified.withColumn("jaccard", F.floor(jac * 10000 + 0.5) / 10000)
+        cand.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .withColumn("jaccard", rounded_jaccard())
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("doc_a", "doc_b", "jaccard")
-        .orderBy("doc_a", "doc_b")
-        .persist()
     )
 
 
@@ -425,19 +440,11 @@ def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingled = docs.select("doc_id", _shingles_spark().alias("shingles"))
     a = shingled.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
     b = shingled.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
     return (
         a.crossJoin(b)
         .filter(F.col("doc_a") < F.col("doc_b"))
-        .filter(inter > 0)
-        .select(
-            "doc_a",
-            "doc_b",
-            (F.floor(inter.cast("double") / union * 10000 + 0.5) / 10000).alias(
-                "jaccard"
-            ),
-        )
+        .filter(F.size(F.array_intersect("sh_a", "sh_b")) > 0)
+        .select("doc_a", "doc_b", rounded_jaccard().alias("jaccard"))
         .orderBy("doc_a", "doc_b")
     )
 
@@ -585,30 +592,21 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # once, every downstream keep/filter step reads the same table.
 @memoized
 def _clusters_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import connected_components
+    from ..operators import label_clusters
 
     sub = _augmented_docs(spark, sf_dir).filter(F.col("doc_id") % 1000000 < 120)
     shingled = sub.select("doc_id", _shingles_spark().alias("shingles")).persist()
     a = shingled.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
     b = shingled.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
     edges = (
         a.crossJoin(b)
         .filter(F.col("doc_a") < F.col("doc_b"))
-        .filter(F.floor(inter.cast("double") / union * 10000 + 0.5) / 10000 >= 0.5)
+        .filter(rounded_jaccard() >= JACCARD_THRESHOLD)
         .select("doc_a", "doc_b")
     )
-    labels = connected_components(edges, "doc_a", "doc_b")
-    return (
-        shingled.select("doc_id")
-        .join(labels, shingled["doc_id"] == labels["vertex"], "left")
-        .select(
-            "doc_id",
-            F.coalesce("component", "doc_id").alias("cluster_id"),
-        )
-        .orderBy("doc_id")
-    )
+    return label_clusters(
+        shingled.select("doc_id"), edges, "doc_id", ("doc_a", "doc_b")
+    ).orderBy("doc_id")
 
 
 @query(

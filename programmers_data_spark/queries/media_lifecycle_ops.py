@@ -311,10 +311,6 @@ def _hamming_topk(
     from pyspark.sql import Window
 
     h = media_index.hash_store(spark, sf_dir, spec)
-    if h.isEmpty():
-        return spark.createDataFrame(
-            [], "query_id long, rnk int, neighbor_id long, ham_d int"
-        )
     b = media_index.band_store(spark, sf_dir, spec)
     cand = (
         b.alias("a")
@@ -336,15 +332,11 @@ def _hamming_topk(
         F.col("dhash_lo").alias("lo_b"),
         F.col("dhash_hi").alias("hi_b"),
     )
-    ham = (
-        F.bit_count(F.col("lo_a").bitwiseXOR(F.col("lo_b")))
-        + F.bit_count(F.col("hi_a").bitwiseXOR(F.col("hi_b")))
-    ).cast("int")
     w = Window.partitionBy("query_id").orderBy("ham_d", "neighbor_id")
     return (
         cand.join(ha, "query_id")
         .join(hb, "neighbor_id")
-        .withColumn("ham_d", ham)
+        .withColumn("ham_d", media_index._ham())
         .withColumn("rnk", F.row_number().over(w).cast("int"))
         .filter(F.col("rnk") <= IMG_TOPK)
         .select("query_id", "rnk", "neighbor_id", "ham_d")

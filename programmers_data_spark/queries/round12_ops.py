@@ -473,15 +473,14 @@ def _pairs_from(h: DataFrame) -> DataFrame:
     # Carry the 64-bit hash (two non-negative 32-bit halves) THROUGH
     # the band explode so the band self-join emits fully-verifiable
     # candidate rows: the Hamming rerank is inline bit arithmetic on
-    # the collision row, no join back to the hash table (the previous
-    # form paid two extra shuffled joins to re-fetch each side's
-    # hashes), and the <= HAM_T filter runs BEFORE the distinct, so
-    # rejected candidates die map-side instead of crossing the
-    # dedup exchange. Cost: the band-join exchange carries 2 extra
-    # longs per side; at any scale that is far below two extra
-    # shuffles of the hash table + a wider distinct. ham_d is a
-    # function of (media_a, media_b), so distinct-on-three-columns
-    # keeps exactly the old one-row-per-pair semantics.
+    # the collision row, no join back to the hash table (two extra
+    # shuffled joins to re-fetch each side's hashes), and the <= HAM_T
+    # filter runs BEFORE the distinct, so rejected candidates die
+    # map-side instead of crossing the dedup exchange. Cost: the
+    # band-join exchange carries 2 extra longs per side; at any scale
+    # that is far below two extra shuffles of the hash table + a wider
+    # distinct. ham_d is a function of (media_a, media_b), so
+    # distinct-on-three-columns keeps one row per pair.
     b = _band_frame(h, carry_hash=True)
     ba = b.select(
         "band", "bval",
@@ -495,14 +494,10 @@ def _pairs_from(h: DataFrame) -> DataFrame:
         F.col("dhash_lo").alias("lo_b"),
         F.col("dhash_hi").alias("hi_b"),
     )
-    ham = (
-        F.bit_count(F.col("lo_a").bitwiseXOR(F.col("lo_b")))
-        + F.bit_count(F.col("hi_a").bitwiseXOR(F.col("hi_b")))
-    ).cast("int")
     return (
         ba.join(bb, ["band", "bval"])
         .filter(F.col("media_a") < F.col("media_b"))
-        .withColumn("ham_d", ham)
+        .withColumn("ham_d", media_index._ham())
         .filter(F.col("ham_d") <= HAM_T)
         .select("media_a", "media_b", "ham_d")
         .distinct()
@@ -556,20 +551,13 @@ def image_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the EDGE list), cluster id = min media_id reached; singletons
     keep their own id. Oracle: recursive-CTE reachability over the
     identical pair set (the dedup_clusters precedent)."""
-    from ..operators import connected_components
+    from ..operators import label_clusters
 
     h = _image_hash_table(spark, sf_dir)
-    pairs = _neardup_pairs(spark, sf_dir)
-    labels = connected_components(pairs, "media_a", "media_b")
-    return (
-        h.select("media_id")
-        .join(labels, h["media_id"] == labels["vertex"], "left")
-        .select(
-            "media_id",
-            F.coalesce("component", "media_id").alias("cluster_id"),
-        )
-        .orderBy("media_id")
-    )
+    return label_clusters(
+        h.select("media_id"), _neardup_pairs(spark, sf_dir), "media_id",
+        ("media_a", "media_b"),
+    ).orderBy("media_id")
 
 
 # persisted (two consumers: the count aggregate AND the found join)
@@ -596,14 +584,10 @@ def _scene_truth(
         F.col("dhash_lo").alias("lo_b"),
         F.col("dhash_hi").alias("hi_b"),
     )
-    ham = (
-        F.bit_count(F.col("lo_a").bitwiseXOR(F.col("lo_b")))
-        + F.bit_count(F.col("hi_a").bitwiseXOR(F.col("hi_b")))
-    )
     return (
         ha.join(hb, (F.col("scene") == F.col("scene_b"))
                 & (F.col("media_a") < F.col("media_b")))
-        .filter(ham <= HAM_T)
+        .filter(media_index._ham() <= HAM_T)
         .select("scene", "media_a", "media_b")
         .persist()
     )

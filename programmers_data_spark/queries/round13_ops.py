@@ -99,20 +99,13 @@ def audio_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: recursive-CTE reachability over the identical pair set (the
     image_neardup_clusters derivation verbatim, audio hash CTE
     swapped in — the shared-fragment discipline)."""
-    from ..operators import connected_components
+    from ..operators import label_clusters
 
     h = _audio_hash_table(spark, sf_dir)
-    pairs = _pairs_from(h)
-    labels = connected_components(pairs, "media_a", "media_b")
-    return (
-        h.select("media_id")
-        .join(labels, h["media_id"] == labels["vertex"], "left")
-        .select(
-            "media_id",
-            F.coalesce("component", "media_id").alias("cluster_id"),
-        )
-        .orderBy("media_id")
-    )
+    return label_clusters(
+        h.select("media_id"), _pairs_from(h), "media_id",
+        ("media_a", "media_b"),
+    ).orderBy("media_id")
 
 
 # -------------------------------------------- cross-modal keying
@@ -975,20 +968,13 @@ def video_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     step, through the same component machinery as the image and
     audio tiers (edge-list-bounded component resolution,
     recursive-CTE oracle)."""
-    from ..operators import connected_components
+    from ..operators import label_clusters
 
     h = _video_hash_table(spark, sf_dir)
-    pairs = _pairs_from(h)
-    labels = connected_components(pairs, "media_a", "media_b")
-    return (
-        h.select("media_id")
-        .join(labels, h["media_id"] == labels["vertex"], "left")
-        .select(
-            "media_id",
-            F.coalesce("component", "media_id").alias("cluster_id"),
-        )
-        .orderBy("media_id")
-    )
+    return label_clusters(
+        h.select("media_id"), _pairs_from(h), "media_id",
+        ("media_a", "media_b"),
+    ).orderBy("media_id")
 
 
 

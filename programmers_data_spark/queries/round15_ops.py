@@ -36,7 +36,6 @@ from .dedup_ops import (
     _N_BANDS,
     _SHINGLES_DUCK,
     _TOKS_DUCK,
-    JACCARD_THRESHOLD,
     _band_cols_duck,
     _band_cols_spark,
     _minhash_sig_duck,
@@ -129,7 +128,11 @@ def text_jaccard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: the same derivation over the dedup tier's registered SQL
     fragments (one fragment set for maintenance and serving, the
     _hamming_topk_oracle discipline)."""
-    from .dedup_ops import minhash_band_pairs, minhash_signatures
+    from .dedup_ops import (
+        minhash_band_pairs,
+        minhash_signatures,
+        rounded_jaccard,
+    )
 
     sigs = minhash_signatures(spark, sf_dir)
     pairs = minhash_band_pairs(spark, sf_dir)
@@ -148,18 +151,13 @@ def text_jaccard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     sb = sigs.select(
         F.col("doc_id").alias("neighbor_id"), F.col("shingles").alias("sh_b")
     )
-    # array_union of two shingle sets is never empty (empty docs pin
-    # to the [''] whole-text shingle), so the division is ANSI-safe
-    jac = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(
-        F.array_union("sh_a", "sh_b")
-    )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("jaccard"), "neighbor_id"
     )
     return (
         cand.join(sa, "query_id")
         .join(sb, "neighbor_id")
-        .withColumn("jaccard", F.floor(jac * 10000 + 0.5) / 10000)
+        .withColumn("jaccard", rounded_jaccard())
         .withColumn("rnk", F.row_number().over(w).cast("int"))
         .filter(F.col("rnk") <= TEXT_TOPK)
         .select("query_id", "rnk", "neighbor_id", "jaccard")
@@ -205,38 +203,13 @@ def stream_text_neardup_ingest(
     batch, probe the bucketed store, verify against the accumulated
     signature store); nothing about earlier batches is re-signed or
     re-banded. At 100 TB this is the text-dedup ingest job: a day's
-    crawl streams in, the published index absorbs it.
-
-    Round 16: the replay loop itself lives in ``ingest.replay_ingest``
-    (r15 VERDICT ask #7) — this wrapper supplies the text family's
-    callbacks (MinHash signature pass, band explode, exact-Jaccard
-    verify) and the memo."""
+    crawl streams in, the published index absorbs it."""
     from ..ingest import replay_ingest
-    from .dedup_ops import _augmented_docs, sig_frame
-
-    aug = _augmented_docs(spark, sf_dir)
-
-    def verify(cand: DataFrame, index: DataFrame) -> DataFrame:
-        sa = index.select(
-            F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a")
-        )
-        sb = index.select(
-            F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b")
-        )
-        jac = F.size(F.array_intersect("sh_a", "sh_b")).cast(
-            "double"
-        ) / F.size(F.array_union("sh_a", "sh_b"))
-        return (
-            cand.join(sa, "doc_a")
-            .join(sb, "doc_b")
-            .withColumn("jaccard", F.floor(jac * 10000 + 0.5) / 10000)
-            .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-            .select("doc_a", "doc_b", "jaccard")
-        )
+    from .dedup_ops import _augmented_docs, jaccard_verify, sig_frame
 
     return replay_ingest(
         spark,
-        aug,
+        _augmented_docs(spark, sf_dir),
         slice_col="doc_id",
         state_frame=lambda s, bdf: sig_frame(bdf.select("doc_id", "text")),
         index_select=lambda st: st.select("doc_id", "shingles"),
@@ -246,7 +219,7 @@ def stream_text_neardup_ingest(
                 "band_idx", "band"
             ),
         ),
-        verify=verify,
+        verify=jaccard_verify,
         id_col="doc_id",
         pair_cols=("doc_a", "doc_b"),
         band_cols=("band_idx", "band"),
@@ -266,16 +239,13 @@ def text_cluster_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     != _NEW_BATCH_RESIDUE) as a PUBLISHED artifact — the state
     incremental cluster maintenance starts from, completing the text
     tier's store symmetry with media_index.cluster_store and
-    embedding_index.cluster_store (round 17; previously
-    text_neardup_clusters_incremental re-resolved the existing
-    corpus's components INLINE on every execution — two component
-    resolutions per run where the other tiers pay one).
+    embedding_index.cluster_store.
 
     Columns: (doc_id, cluster_id), cluster_id = min member id;
     singletons map to themselves. Content-addressed UNDER the pair
     store's fingerprint directory (same fixture bytes + live MinHash
     constants), residue in the leaf name — the media-tier layout."""
-    from ..operators import connected_components
+    from ..operators import label_clusters
     from ..storeutil import published
     from .curation_ops import _NEW_BATCH_RESIDUE
     from .dedup_ops import (
@@ -289,18 +259,12 @@ def text_cluster_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs = verified_pair_store(spark, sf_dir).filter(
             is_existing("doc_a") & is_existing("doc_b")
         )
-        labels = connected_components(pairs, "doc_a", "doc_b")
         ids = (
             _augmented_docs(spark, sf_dir)
             .select("doc_id")
             .filter(is_existing("doc_id"))
         )
-        return ids.join(
-            labels, ids["doc_id"] == labels["vertex"], "left"
-        ).select(
-            "doc_id",
-            F.coalesce("component", "doc_id").alias("cluster_id"),
-        )
+        return label_clusters(ids, pairs, "doc_id", ("doc_a", "doc_b"))
 
     return published(
         spark,
@@ -358,15 +322,9 @@ def text_neardup_clusters_incremental(
     restriction), so components over (stars ∪ delta) equal the full
     rebuild's components; labels are vertex ids, so the min-id label
     recovers the exact minimum member. Oracle: the full rebuild
-    (reachability over the registered dedup_minhash pair SQL).
-
-    Round 17: the star-contraction merge itself lives in
-    ``operators.merge_clusters`` (one engine for all five families),
-    and the existing corpus's clustering comes from the PUBLISHED
-    ``text_cluster_store`` (previously re-resolved inline per run —
-    the only tier paying two component resolutions per execution);
-    this wrapper supplies the text family's stored/delta/universe
-    frames."""
+    (reachability over the registered dedup_minhash pair SQL); the
+    existing corpus's clustering is the PUBLISHED
+    ``text_cluster_store``."""
     from ..operators import merge_clusters
     from .curation_ops import neardup_incremental
     from .dedup_ops import _augmented_docs

@@ -114,6 +114,7 @@ def embedding_neardup_incremental(
     bucket mates, never the index size — at 100 TB this is the
     vector-dedup ingest job absorbing a day's crawl."""
     from ..embedding_index import sig_store, verify_pairs
+    from ..operators import band_probe
 
     emb = load_vectors(spark, sf_dir)
     arrivals = emb.filter(F.col("vec_id") % 10 == EMB_ARRIVAL_RESIDUE)
@@ -121,16 +122,9 @@ def embedding_neardup_incremental(
         _signature_kernel(_ND_SALT, _ND_TABLES, _ND_BITS),
         schema=_SIG_SCHEMA,
     ).select("vec_id", "tbl", "bucket")
-    allb = sig_store(spark, sf_dir)
-    cand = (
-        asig.alias("a")
-        .join(allb.alias("b"), ["tbl", "bucket"])
-        .filter(F.col("a.vec_id") != F.col("b.vec_id"))
-        .select(
-            F.least("a.vec_id", "b.vec_id").alias("vec_a"),
-            F.greatest("a.vec_id", "b.vec_id").alias("vec_b"),
-        )
-        .distinct()
+    cand = band_probe(
+        asig, sig_store(spark, sf_dir), "vec_id", ("tbl", "bucket"),
+        ("vec_a", "vec_b"),
     )
     # exact verification: Arrow GEMM prefilter with the guard band,
     # decisive fold-cosine on the survivors (the lsh discipline —
@@ -178,12 +172,7 @@ def embedding_neardup_clusters_incremental(
     so components over (stars ∪ delta) equal the full rebuild's;
     labels are vertex ids, so the min-id component label recovers the
     exact minimum member. Oracle: the full rebuild (reachability over
-    the registered LSH pair fragments).
-
-    Round 17: the star-contraction merge itself lives in
-    ``operators.merge_clusters`` (one engine for all five families);
-    this wrapper supplies the vector family's stored/delta/universe
-    frames."""
+    the registered LSH pair fragments)."""
     from ..embedding_index import cluster_store
     from ..operators import merge_clusters
 
@@ -232,9 +221,6 @@ def stream_embedding_neardup_ingest(
 
     kernel = _signature_kernel(_ND_SALT, _ND_TABLES, _ND_BITS)
 
-    def verify(cand: DataFrame, index: DataFrame) -> DataFrame:
-        return verify_pairs(cand, index)
-
     return replay_ingest(
         spark,
         load_vectors(spark, sf_dir),
@@ -249,7 +235,7 @@ def stream_embedding_neardup_ingest(
             "vec_id", "emb"
         ),
         band_frame=lambda st: st.select("vec_id", "tbl", "bucket"),
-        verify=verify,
+        verify=verify_pairs,
         id_col="vec_id",
         pair_cols=("vec_a", "vec_b"),
         band_cols=("tbl", "bucket"),

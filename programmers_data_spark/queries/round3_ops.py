@@ -42,6 +42,7 @@ from .dedup_ops import (
     N_HASHES,
     minhash_band_pairs,
     minhash_signatures,
+    rounded_jaccard,
 )
 from .text_ops import lang_pred_ctes
 
@@ -113,15 +114,12 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col(f"a_mh{i}") == F.col(f"b_mh{i}")).cast("int")
         for i in range(N_HASHES)
     )
-    jac = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(
-        F.array_union("sh_a", "sh_b")
-    )
     return (
         joined.select(
             "doc_a",
             "doc_b",
             (matches / float(N_HASHES)).alias("est_jaccard"),
-            (F.floor(jac * 10000 + 0.5) / 10000).alias("jaccard"),
+            rounded_jaccard().alias("jaccard"),
         )
         .orderBy("doc_a", "doc_b")
     )

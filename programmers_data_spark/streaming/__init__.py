@@ -16,6 +16,7 @@ arrival.
 
 from __future__ import annotations
 
+import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -69,6 +70,21 @@ def dedup_within_watermark(
     return stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
 
 
+def _drain(stream_df: DataFrame, fn, checkpoint: str | None) -> None:
+    """Run ``fn(batch_df, batch_id)`` over every micro-batch the
+    (bounded) source has now, in append mode, resuming from
+    ``checkpoint`` when one is given; returns when the source is
+    drained."""
+    writer = stream_df.writeStream.outputMode("append").foreachBatch(fn)
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    q = writer.start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
 def stream_publish_foreachbatch(
     stream_df: DataFrame, path: str, checks=None,
     checkpoint: str | None = None,
@@ -97,8 +113,6 @@ def stream_publish_foreachbatch(
     keeps the published schema untagged and accepts the at-least-once
     crash window. (stream_incremental_keep_latest needs no tag: its
     keyed merge is idempotent by construction.)"""
-    import os as _os
-
     from ..publish import incremental_append
 
     def _publish(batch_df: DataFrame, batch_id: int) -> None:
@@ -106,7 +120,7 @@ def stream_publish_foreachbatch(
             return
         spark = batch_df.sparkSession
         if exactly_once:
-            if _os.path.exists(path):
+            if os.path.exists(path):
                 cur = read_parquet(spark, path)
                 if (
                     "_batch_id" in cur.columns
@@ -119,14 +133,7 @@ def stream_publish_foreachbatch(
             batch_df = batch_df.withColumn("_batch_id", F.lit(batch_id))
         incremental_append(spark, path, batch_df, checks=checks)
 
-    writer = stream_df.writeStream.outputMode("append").foreachBatch(_publish)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(stream_df, _publish, checkpoint)
 
 
 def stateful_counts(stream: DataFrame, key: str = "user_id") -> DataFrame:
@@ -303,14 +310,7 @@ def stream_incremental_keep_latest(
             order_by=order_by, tie_break=tie_break,
         )
 
-    writer = stream_df.writeStream.outputMode("append").foreachBatch(_merge)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(stream_df, _merge, checkpoint)
 
 
 def stream_sketch_rollup(
@@ -345,26 +345,16 @@ def stream_sketch_rollup(
         daily = batch_df.groupBy(
             F.date_format(day_col, "yyyy-MM-dd").alias("day")
         ).agg(F.hll_sketch_agg(key_col).alias("sk"))
-        try:
-            current = read_parquet(spark, path)
-        except Exception:
-            current = None
-        if current is not None:
+        if os.path.exists(path):
             daily = (
-                current.unionByName(daily)
+                read_parquet(spark, path)
+                .unionByName(daily)
                 .groupBy("day")
                 .agg(F.hll_union_agg("sk").alias("sk"))
             )
         publish_swap(daily, path)
 
-    writer = stream_df.writeStream.outputMode("append").foreachBatch(_merge)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(stream_df, _merge, checkpoint)
 
 
 def stream_cms_rollup(
@@ -424,10 +414,7 @@ def stream_cms_rollup(
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        try:
-            cur = read_parquet(spark, path)
-        except Exception:
-            cur = None
+        cur = read_parquet(spark, path) if os.path.exists(path) else None
         if (
             cur is not None
             and cur.filter(
@@ -486,14 +473,7 @@ def stream_cms_rollup(
         )
         publish_swap(state, path)
 
-    writer = stream_df.writeStream.outputMode("append").foreachBatch(_merge)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(stream_df, _merge, checkpoint)
 
 
 def cms_estimate(spark: SparkSession, path: str, terms: list[str]) -> DataFrame:

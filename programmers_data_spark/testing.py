@@ -18,6 +18,8 @@ import datetime as _dt
 import decimal
 import math
 import os
+import tempfile
+import uuid
 from dataclasses import dataclass, field
 
 import duckdb
@@ -29,8 +31,14 @@ from .catalog import TABLES, table_path
 
 def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     """Fresh in-memory DuckDB with fixture tables registered as views,
-    matching the driver's pre-registration."""
-    con = duckdb.connect()
+    matching the driver's pre-registration. An in-memory database
+    spills to ``.tmp`` under the working directory by default; the
+    spill goes to a fresh directory under the system temp dir instead
+    (DuckDB creates it only when it spills)."""
+    spill = os.path.join(
+        tempfile.gettempdir(), f"duckdb_spill_{uuid.uuid4().hex[:12]}"
+    )
+    con = duckdb.connect(config={"temp_directory": spill})
     for name in TABLES:
         path = table_path(sf_dir, name)
         # partial fixture dirs (e.g. the adversarial documents-only
