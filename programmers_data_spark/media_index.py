@@ -28,10 +28,12 @@ Per-modality pieces a spec supplies:
 
 Shared machinery the engine composes (lazily, to keep the dependency
 one-way: query modules import the engine, the engine imports the
-banding fragments at call time): ``_band_frame`` / ``HAM_T`` from
-``queries.round12_ops`` — the same banding/verify layer the pair and
-cluster queries use, so maintenance probes and full rebuilds can
-never disagree on candidate semantics.
+banding fragments at call time): ``_band_frame`` from
+``queries.round12_ops`` — the same banding layer the pair and cluster
+queries use, so maintenance probes and full rebuilds can never
+disagree on candidate semantics. The Hamming rule (``HAM_T``,
+``ham_distance``, ``hamming_verify``) lives here and the query
+modules import it.
 
 Reference anchor: the reference (HyeM207/Programmers-DATA) has no
 media pipeline; this engine is north-star training-data-pipeline
@@ -247,7 +249,15 @@ def incremental_clusters(
     ).orderBy("media_id")
 
 
-def _ham():
+# Within a scene two images differ in <= 2 pixels -> <= 2 pooled
+# cells -> <= 4 dHash bits (each cell feeds 2 comparisons); across
+# scenes the expected distance is 32 (sigma 4), so 8 separates the
+# populations by ~6 sigma. Measured at sf0.1: within-scene max 4,
+# rejected cross-scene candidates min ~20.
+HAM_T = 8
+
+
+def ham_distance():
     """64-bit dHash Hamming distance of (lo_a, hi_a) vs (lo_b, hi_b)."""
     return (
         F.bit_count(F.col("lo_a").bitwiseXOR(F.col("lo_b")))
@@ -260,8 +270,6 @@ def hamming_verify(cand: DataFrame, index: DataFrame) -> DataFrame:
     against hash table ``index`` (media_id, dhash_lo, dhash_hi): join
     both hash halves, keep Hamming distance <= HAM_T. Columns
     (media_a, media_b, ham_d)."""
-    from .queries.round12_ops import HAM_T
-
     ha = index.select(
         F.col("media_id").alias("media_a"),
         F.col("dhash_lo").alias("lo_a"),
@@ -275,7 +283,7 @@ def hamming_verify(cand: DataFrame, index: DataFrame) -> DataFrame:
     return (
         cand.join(ha, "media_a")
         .join(hb, "media_b")
-        .withColumn("ham_d", _ham())
+        .withColumn("ham_d", ham_distance())
         .filter(F.col("ham_d") <= HAM_T)
         .select("media_a", "media_b", "ham_d")
     )

@@ -622,16 +622,15 @@ def label_clusters(
     edges: DataFrame,
     id_col: str,
     pair_cols: tuple[str, str],
-    cluster_col: str = "cluster_id",
 ) -> DataFrame:
     """Cluster label of every ``id_col`` row of ``ids``: the
     connected components of ``edges`` (``pair_cols``), label = min
     member id. An id incident to no edge is a singleton and keeps its
-    own id. Columns: (``id_col``, ``cluster_col``)."""
+    own id. Columns: (``id_col``, ``cluster_id``)."""
     labels = connected_components(edges, *pair_cols)
     return ids.join(labels, ids[id_col] == labels["vertex"], "left").select(
         id_col,
-        F.coalesce("component", id_col).alias(cluster_col),
+        F.coalesce("component", id_col).alias("cluster_id"),
     )
 
 
@@ -640,14 +639,13 @@ def merge_clusters(
     delta: DataFrame,
     ids: DataFrame,
     id_col: str,
-    cluster_col: str = "cluster_id",
     pair_cols: tuple[str, str] = ("src", "dst"),
 ) -> DataFrame:
     """Star-contraction incremental cluster merge — the one engine
     every dedup family's ``*_clusters_incremental`` maintenance
     shares.
 
-    ``stored`` is the existing cluster table ``(id_col, cluster_col)``
+    ``stored`` is the existing cluster table ``(id_col, cluster_id)``
     with cluster label = min member id (singletons map to themselves);
     ``delta`` carries the arrival batch's verified pair delta in
     ``pair_cols``; ``ids`` is the output universe (one ``id_col``
@@ -670,8 +668,8 @@ def merge_clusters(
     |existing stars| + |delta| edges, and the delta side is
     arrival-proportional by construction at every call site. Callers
     add their own ``orderBy``."""
-    stars = stored.filter(F.col(id_col) != F.col(cluster_col)).select(
-        F.col(id_col).alias("src"), F.col(cluster_col).alias("dst")
+    stars = stored.filter(F.col(id_col) != F.col("cluster_id")).select(
+        F.col(id_col).alias("src"), F.col("cluster_id").alias("dst")
     )
     edges = stars.unionByName(
         delta.select(
@@ -679,7 +677,7 @@ def merge_clusters(
             F.col(pair_cols[1]).alias("dst"),
         )
     )
-    return label_clusters(ids, edges, id_col, ("src", "dst"), cluster_col)
+    return label_clusters(ids, edges, id_col, ("src", "dst"))
 
 
 def distributed_rank(

@@ -336,7 +336,7 @@ def _hamming_topk(
     return (
         cand.join(ha, "query_id")
         .join(hb, "neighbor_id")
-        .withColumn("ham_d", media_index._ham())
+        .withColumn("ham_d", media_index.ham_distance())
         .withColumn("rnk", F.row_number().over(w).cast("int"))
         .filter(F.col("rnk") <= IMG_TOPK)
         .select("query_id", "rnk", "neighbor_id", "ham_d")

@@ -86,6 +86,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import media_index
+from ..media_index import HAM_T
 from ..catalog import load_table
 from ..memo import memoized
 from ..registry import query
@@ -96,12 +97,6 @@ from ..registry import query
 SCENE_MIN = 23
 SCENE_DOCS = 20
 IMG_W = IMG_H = 16
-# Within a scene two images differ in <= 2 pixels -> <= 2 pooled
-# cells -> <= 4 dHash bits (each cell feeds 2 comparisons); across
-# scenes the expected distance is 32 (sigma 4), so 8 separates the
-# populations by ~6 sigma. Measured at sf0.1: within-scene max 4,
-# rejected cross-scene candidates min ~20.
-HAM_T = 8
 
 # ------------------------------------------------ shared arithmetic
 
@@ -497,7 +492,7 @@ def _pairs_from(h: DataFrame) -> DataFrame:
     return (
         ba.join(bb, ["band", "bval"])
         .filter(F.col("media_a") < F.col("media_b"))
-        .withColumn("ham_d", media_index._ham())
+        .withColumn("ham_d", media_index.ham_distance())
         .filter(F.col("ham_d") <= HAM_T)
         .select("media_a", "media_b", "ham_d")
         .distinct()
@@ -587,7 +582,7 @@ def _scene_truth(
     return (
         ha.join(hb, (F.col("scene") == F.col("scene_b"))
                 & (F.col("media_a") < F.col("media_b")))
-        .filter(media_index._ham() <= HAM_T)
+        .filter(media_index.ham_distance() <= HAM_T)
         .select("scene", "media_a", "media_b")
         .persist()
     )

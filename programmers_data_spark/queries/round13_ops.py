@@ -669,7 +669,7 @@ def multimodal_funnel_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _audio_recall_oracle() -> str:
-    from .round12_ops import HAM_T
+    from ..media_index import HAM_T
 
     return f"""
     WITH {_audio_hash_cte()},
@@ -979,7 +979,7 @@ def video_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _video_recall_oracle() -> str:
-    from .round12_ops import HAM_T
+    from ..media_index import HAM_T
 
     return f"""
     WITH {_video_hash_cte()},

@@ -467,7 +467,7 @@ HAM_SWEEP = (0, 2, 4, 6, 8)
 
 
 def _dedup_threshold_oracle() -> str:
-    from .round12_ops import HAM_T
+    from ..media_index import HAM_T
 
     assert max(HAM_SWEEP) <= HAM_T  # sweep stays inside the verify radius
     text_rows = " UNION ALL ".join(
@@ -539,9 +539,10 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: the four registered pair fragments recomposed verbatim
     against the same literal grids."""
     from .. import media_index
+    from ..media_index import HAM_T
     from .dedup_ops import verified_pair_store
     from .media_lifecycle_ops import AUDIO_SPEC, VIDEO_SPEC
-    from .round12_ops import HAM_T, IMAGE_SPEC
+    from .round12_ops import IMAGE_SPEC
 
     assert max(HAM_SWEEP) <= HAM_T
     tp = verified_pair_store(spark, sf_dir).select("jaccard")

@@ -105,8 +105,8 @@ def test_band_probe_normalizes_and_dedups(spark):
 def test_label_clusters_keeps_singletons(spark):
     ids = spark.createDataFrame([(i,) for i in range(1, 7)], "doc_id long")
     edges = spark.createDataFrame([(2, 5), (5, 3), (4, 6)], "x long, y long")
-    got = label_clusters(ids, edges, "doc_id", ("x", "y"), cluster_col="c")
-    assert got.columns == ["doc_id", "c"]
+    got = label_clusters(ids, edges, "doc_id", ("x", "y"))
+    assert got.columns == ["doc_id", "cluster_id"]
     assert sorted(map(tuple, got.collect())) == [
         (1, 1), (2, 2), (3, 2), (4, 4), (5, 2), (6, 4)
     ]
@@ -114,7 +114,7 @@ def test_label_clusters_keeps_singletons(spark):
 
 def test_verifiers_apply_their_thresholds(spark):
     from programmers_data_spark.queries.dedup_ops import jaccard_verify
-    from programmers_data_spark.queries.round12_ops import HAM_T
+    from programmers_data_spark.media_index import HAM_T
 
     hashes = spark.createDataFrame(
         [(1, 0, 0), (2, (1 << HAM_T) - 1, 0), (3, (1 << (HAM_T + 1)) - 1, 0)],

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import re
 
 import pytest
 
@@ -37,7 +38,10 @@ def test_unreadable_grid_raises_and_stays(spark, sf_smoke, tmp_path, rollup):
     before = _garbage_grid(path)
     stream = read_events_stream(spark, sf_smoke)
     cp = str(tmp_path / "cp")
-    with pytest.raises(Exception):
+    # the failure must be the read of the garbage grid itself, not
+    # some earlier checkpoint or source error
+    bad = re.escape(os.path.join(path, "part-00000.parquet"))
+    with pytest.raises(Exception, match=f"{bad} is not a Parquet file"):
         if rollup == "hll":
             stream_sketch_rollup(stream, path, checkpoint=cp)
         else:
