@@ -20,6 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from programmers_data_spark import registry
 from programmers_data_spark.session import get_spark
+from programmers_data_spark.storeutil import drain_build_log
 
 # Non-headline single-run readings above this get one re-time (min
 # recorded) — the slow tail is where late-run in-JVM contention lands
@@ -267,6 +268,20 @@ def main() -> None:
     except (OSError, ValueError):
         pass
 
+    # Store build log (storeutil.BUILD_LOG): every store build that
+    # published, charged to the query whose untimed warm-up built it —
+    # the timed runs read stores the warm-up left behind, so without
+    # this record a store's build cost shows nowhere.
+    store_builds: dict[str, list[dict]] = {}
+    drain_build_log()
+
+    def warm(name: str) -> None:
+        _reset(spark)
+        _force(registry.QUERIES[name](spark, sf_dir))
+        builds = drain_build_log()
+        if builds:
+            store_builds.setdefault(name, []).extend(builds)
+
     # Flat-control pass (see CONTROLS above): min-of-2 isolated runs
     # of the code-stable controls BEFORE the main loop, ratioed
     # against the committed prior. Runs first so the pollution label
@@ -275,8 +290,7 @@ def main() -> None:
     for name in CONTROLS:
         if name not in registry.QUERIES:
             continue
-        _reset(spark)
-        _force(registry.QUERIES[name](spark, sf_dir))  # untimed warmup
+        warm(name)
         best = float("inf")
         for _ in range(2):
             _reset(spark)
@@ -295,8 +309,7 @@ def main() -> None:
     steal_pct = _host_steal_under_load()
 
     for name in names:
-        _reset(spark)
-        _force(registry.QUERIES[name](spark, sf_dir))
+        warm(name)
         runs = 2 if name in HEADLINE else 1
         best = float("inf")
         for _ in range(runs):
@@ -347,6 +360,7 @@ def main() -> None:
                 "controls": controls,
                 "control_ratio": control_ratio,
                 "polluted": polluted,
+                "store_builds": store_builds,
             },
             f,
             indent=1,

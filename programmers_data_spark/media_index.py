@@ -1,36 +1,32 @@
 """The media-index maintenance engine — ONE implementation of the
-published-artifact lifecycle every media modality shares.
+published-artifact lifecycle every media modality (image, audio,
+video) shares, parameterized by a :class:`MediaIndexSpec`.
 
-Round 12 built the lifecycle for the image tier (hash index published
-through the K8 validated-swap layer, band table published as a
-bucketed layout, incremental per-batch maintenance, Structured
-Streaming ingest); round 13 added audio and video modalities whose
-fingerprint tables expose the same (media_id, scene, dhash_lo,
-dhash_hi) surface. This module factors the lifecycle into a generic
-engine parameterized by a :class:`MediaIndexSpec` — the image tier's
-round-12 code now delegates here (so the driver-certified image
-sentinels certify THIS code), and the audio/video tiers instantiate
-the same engine with their own Arrow hash kernels.
+Each modality's fingerprint table exposes the same (media_id, scene,
+dhash_lo, dhash_hi) surface, and the engine publishes four tables per
+corpus version, each the one source of its content:
 
-Per-modality pieces a spec supplies:
+- ``hash_store``    — the full-corpus fingerprint table: the spec's
+  Arrow kernel runs once over the corpus and every consumer (the
+  per-modality queries, maintenance batches, reports) reads the
+  published rows;
+- ``band_store``    — its band table as a bucketed layout;
+- ``pair_store``    — the verified near-dup pair set;
+- ``cluster_store`` — cluster labels over the existing corpus.
 
-- ``hash_table``   — the full-corpus fingerprint table (memoized,
-  persisted; the producer pays the Arrow codec kernel once).
-- ``hash_frame``   — the same kernel over an ARBITRARY (doc_id, text)
-  frame with a frozen scene count: what a maintenance batch runs over
-  its arrivals only.
-- naming/env knobs — store env var, content-address algorithm
-  fingerprint (LIVE constants, never hand-written literals — the
-  pair-store r8 lesson), catalog prefixes. The image tier's knobs
-  reproduce its round-12 identities exactly (artifact paths, catalog
-  names, ingest scratch env), so published artifacts and tests carry
-  over unchanged.
+Per-modality pieces a spec supplies: the Arrow kernel
+(``hash_frame``, over an arbitrary (doc_id, text) frame with a
+frozen scene count — the full build runs it over the corpus, a
+maintenance batch over its arrivals only) and the naming/env knobs —
+store env var, content-address algorithm fingerprint (LIVE
+constants, never hand-written literals), catalog prefix and ingest
+scratch env, which keep every store path and catalog name stable.
 
 Shared machinery the engine composes (lazily, to keep the dependency
 one-way: query modules import the engine, the engine imports the
-banding fragments at call time): ``_band_frame`` from
-``queries.round12_ops`` — the same banding layer the pair and cluster
-queries use, so maintenance probes and full rebuilds can never
+banding fragments at call time): ``_band_frame`` and ``_pairs_from``
+from ``queries.round12_ops`` — the same banding layer every media
+query uses, so maintenance probes and full rebuilds can never
 disagree on candidate semantics. The Hamming rule (``HAM_T``,
 ``ham_distance``, ``hamming_verify``) lives here and the query
 modules import it.
@@ -62,23 +58,17 @@ class MediaIndexSpec:
     # LIVE algorithm constants baked into the content address (a
     # constant bump re-keys the store instead of serving stale bits)
     algo_fp: str
-    # full-corpus fingerprint table: (spark, sf_dir) -> DataFrame with
-    # at least (media_id, scene, dhash_lo, dhash_hi); memoized+persisted
-    hash_table: Callable[[SparkSession, str], DataFrame]
     # the Arrow kernel over a (doc_id, text) frame with an explicit
-    # scene count: (spark, docs, scenes) -> same columns
-    hash_frame: Callable[[SparkSession, DataFrame, int], DataFrame]
+    # scene count: (spark, docs, scenes, canon_mod=None) -> at least
+    # (media_id, scene, dhash_lo, dhash_hi)
+    hash_frame: Callable[..., DataFrame]
     # doc_id % 3 residue of the synthetic "arrival batch"
     arrival_residue: int
-    # bucketed band-table knobs; catalog_prefix keeps the image tier's
-    # round-12 catalog identity ("img") stable
-    n_buckets: int = 8
+    # keeps the image tier's catalog identity ("img") stable
     catalog_prefix: str | None = None
     # streaming-ingest scratch knobs (env var + mkdtemp prefix)
     ingest_env: str | None = None
     ingest_prefix: str | None = None
-    # replay micro-batch count (the stream_upsert_publish protocol)
-    n_slices: int = 3
 
     @property
     def cat(self) -> str:
@@ -91,6 +81,16 @@ class MediaIndexSpec:
     @property
     def ing_prefix(self) -> str:
         return self.ingest_prefix or f"{self.name}ingest_"
+
+
+# Bucket count of every band table the engine writes (published and
+# ingest scratch). At test scale 8 keeps files non-trivial; at 100 TB
+# size it so a bucket is a few hundred MB (save_bucketed's guidance).
+BAND_BUCKETS = 8
+
+# Replay micro-batch count of the streaming ingest (the
+# stream_upsert_publish protocol).
+INGEST_SLICES = 3
 
 
 def store_table_dir(
@@ -106,21 +106,30 @@ def store_table_dir(
     )
 
 
+def _scenes(spark: SparkSession, sf_dir: str) -> int:
+    """The kernels' frozen scene count for sf_dir's corpus — shared by
+    the full build and every arrival batch, so both hash alike."""
+    from .queries.round12_ops import _doc_count, _scene_count
+
+    return _scene_count(_doc_count(spark, sf_dir))
+
+
 def hash_store(
     spark: SparkSession, sf_dir: str, spec: MediaIndexSpec
 ) -> DataFrame:
-    """The fingerprint index AS A PUBLISHED ARTIFACT — the
-    verified_pair_store pattern for the media tier: computed once per
-    corpus version (the producer pays the Arrow codec kernel wherever
-    IT is measured), published through the K8 validated-swap layer,
-    read by every maintenance batch / dedup report afterwards. The
-    parquet roundtrip of long columns is exact, so correctness is
-    unaffected."""
-    return published(
-        spark,
-        store_table_dir(spec, sf_dir),
-        lambda: spec.hash_table(spark, sf_dir),
-    )
+    """The full-corpus fingerprint table as a published artifact — the
+    one source every media consumer reads. A miss runs the spec's
+    Arrow kernel once over the corpus and publishes the result
+    through the validated swap; every later read returns the
+    published rows (the parquet roundtrip of long columns is
+    exact)."""
+    from .catalog import load_table
+
+    def build() -> DataFrame:
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        return spec.hash_frame(spark, docs, _scenes(spark, sf_dir))
+
+    return published(spark, store_table_dir(spec, sf_dir), build)
 
 
 def band_store(
@@ -140,7 +149,7 @@ def band_store(
         f"{spec.cat}_bands",
         "media_id BIGINT, band INT, bval BIGINT",
         ["band", "bval"],
-        spec.n_buckets,
+        BAND_BUCKETS,
         lambda: _band_frame(hash_store(spark, sf_dir, spec)),
     )
 
@@ -161,8 +170,7 @@ def pair_store(
     (bucket-aligned, zero Exchange — the image_hamming_topk plan
     shape), and the Hamming rerank reads the published hash store, so
     even the one-time build never re-runs the Arrow codec kernel.
-    Content is exactly ``_pairs_from(hash_table)`` (parquet
-    roundtrips of long columns are exact); columns
+    Content is exactly ``_pairs_from(hash_store)``; columns
     (media_a, media_b, ham_d), normalized media_a < media_b."""
 
     def build() -> DataFrame:
@@ -249,6 +257,54 @@ def incremental_clusters(
     ).orderBy("media_id")
 
 
+def neardup_clusters(
+    spark: SparkSession, sf_dir: str, spec: MediaIndexSpec
+) -> DataFrame:
+    """Cluster assignment over the full corpus's near-dup graph: the
+    hash store's ids labelled by the connected components of the pair
+    store's edges (operators.label_clusters — edge-list-bounded).
+    Columns (media_id, cluster_id), cluster_id = min member id;
+    singletons keep their own id."""
+    from .operators import label_clusters
+
+    return label_clusters(
+        hash_store(spark, sf_dir, spec).select("media_id"),
+        pair_store(spark, sf_dir, spec), "media_id", ("media_a", "media_b"),
+    ).orderBy("media_id")
+
+
+def lsh_recall(
+    spark: SparkSession, sf_dir: str, spec: MediaIndexSpec
+) -> DataFrame:
+    """Recall of the banded LSH per scene: ground truth is every
+    within-scene pair at Hamming <= HAM_T (_scene_truth), found is
+    the truth intersected with the pair store, reported as exact
+    integer percentages. Banding can only MISS, so recall_pct <= 100
+    structurally. Columns (scene, n_true, n_found, recall_pct)."""
+    truth = _scene_truth(spark, sf_dir, spec, store_table_dir(spec, sf_dir))
+    found = (
+        truth.join(pair_store(spark, sf_dir, spec), ["media_a", "media_b"])
+        .groupBy("scene")
+        .agg(F.count("*").alias("n_found"))
+    )
+    return (
+        truth.groupBy("scene")
+        .agg(F.count("*").alias("n_true"))
+        .join(found, "scene", "left")
+        .select(
+            "scene",
+            F.col("n_true").cast("long"),
+            F.coalesce("n_found", F.lit(0)).cast("long").alias("n_found"),
+            # integer div on BOTH sides (float-divide-then-cast
+            # truncates vs rounds differently across engines)
+            F.expr("coalesce(n_found, 0) * 100 div n_true")
+            .cast("long")
+            .alias("recall_pct"),
+        )
+        .orderBy("scene")
+    )
+
+
 # Within a scene two images differ in <= 2 pixels -> <= 2 pooled
 # cells -> <= 4 dHash bits (each cell feeds 2 comparisons); across
 # scenes the expected distance is 32 (sigma 4), so 8 separates the
@@ -292,7 +348,37 @@ def hamming_verify(cand: DataFrame, index: DataFrame) -> DataFrame:
 # The memos below take the RESOLVED store table dir (env var + fixture
 # fingerprint) as an argument, so a mid-session SPARK_GRAFT_*_STORE
 # change misses the memo instead of serving a result built over the
-# previous store (r13 ADVICE #2).
+# previous store.
+@memoized
+def _scene_truth(
+    spark: SparkSession, sf_dir: str, spec: MediaIndexSpec, table_dir: str
+) -> DataFrame:
+    """Ground truth of lsh_recall: every within-scene pair of the hash
+    store at Hamming <= HAM_T (an equi join on the scene key —
+    closed-form, never an all-pairs scan). Persisted: the count
+    aggregate and the found join both read it."""
+    h = hash_store(spark, sf_dir, spec)
+    ha = h.select(
+        "scene",
+        F.col("media_id").alias("media_a"),
+        F.col("dhash_lo").alias("lo_a"),
+        F.col("dhash_hi").alias("hi_a"),
+    )
+    hb = h.select(
+        F.col("scene").alias("scene_b"),
+        F.col("media_id").alias("media_b"),
+        F.col("dhash_lo").alias("lo_b"),
+        F.col("dhash_hi").alias("hi_b"),
+    )
+    return (
+        ha.join(hb, (F.col("scene") == F.col("scene_b"))
+                & (F.col("media_a") < F.col("media_b")))
+        .filter(ham_distance() <= HAM_T)
+        .select("scene", "media_a", "media_b")
+        .persist()
+    )
+
+
 @memoized
 def _arrival_index(
     spark: SparkSession, sf_dir: str, spec: MediaIndexSpec, table_dir: str
@@ -301,17 +387,15 @@ def _arrival_index(
     Persisted: it feeds THREE branches of incremental_delta (the band
     table and both Hamming-lookup sides)."""
     from .catalog import load_table
-    from .queries.round12_ops import _doc_count, _scene_count
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    scenes = _scene_count(_doc_count(spark, sf_dir))
     existing = hash_store(spark, sf_dir, spec).filter(
         F.col("media_id") % 3 != spec.arrival_residue
     )
     arrivals = spec.hash_frame(
         spark,
         docs.filter(F.col("doc_id") % 3 == spec.arrival_residue),
-        scenes,
+        _scenes(spark, sf_dir),
     )
     return existing.unionByName(arrivals).persist()
 
@@ -365,7 +449,7 @@ def streaming_ingest(
     (existing hashes plus the batch itself), and the verified pair
     delta is appended to the pair store; the batch's hashes then join
     the index. Replay protocol per stream_upsert_publish:
-    spec.n_slices doc_id-contiguous slices dropped between
+    INGEST_SLICES doc_id-contiguous slices dropped between
     processAllAvailable() drains, so batch order is exact.
 
     Correctness closed form (full hash parity for an end-to-end
@@ -399,18 +483,12 @@ def _ingest(
 ) -> DataFrame:
     from .catalog import load_table
     from .ingest import replay_ingest
-    from .queries.round12_ops import _band_frame, _doc_count, _scene_count
+    from .queries.round12_ops import _band_frame
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    n_docs = _doc_count(spark, sf_dir)
-    scenes = _scene_count(n_docs)
-    if n_docs == 0:
-        return spark.createDataFrame(
-            [], "media_a long, media_b long, ham_d int"
-        )
-
+    scenes = _scenes(spark, sf_dir)
     return replay_ingest(
         spark,
         docs,
@@ -428,6 +506,6 @@ def _ingest(
         store_env=spec.ing_env,
         scratch_prefix=spec.ing_prefix,
         table_prefix=f"{spec.cat}ingest_bands_",
-        n_slices=spec.n_slices,
-        n_buckets=spec.n_buckets,
+        n_slices=INGEST_SLICES,
+        n_buckets=BAND_BUCKETS,
     )

@@ -37,49 +37,19 @@ from pyspark.sql import functions as F
 
 from .. import media_index
 from ..registry import query
-from .round12_ops import (
-    AUDIO_FRAMES,
-    AUDIO_SAMPLES,
-    IMG_H,
-    IMG_W,
-    SCENE_DOCS,
-    SCENE_MIN,
-    _audio_frame,
+
+# The audio and video specs live next to their kernels; this module
+# re-exports them with the maintenance queries that instantiate them.
+from .round12_ops import (  # noqa: F401
+    AUDIO_ARRIVAL_RESIDUE,
+    AUDIO_SPEC,
     _audio_hash_cte,
-    _audio_hash_table,
     _pair_cte,
 )
-from .round13_ops import (
-    VIDEO_FRAMES,
+from .round13_ops import (  # noqa: F401
+    VIDEO_ARRIVAL_RESIDUE,
+    VIDEO_SPEC,
     _video_hash_cte,
-    _video_hash_frame,
-    _video_hash_table,
-)
-
-# Arrival residues (doc_id % 3): distinct from the image tier's 1 so
-# each modality's maintenance contract proves a different
-# batch/existing split of the corpus.
-AUDIO_ARRIVAL_RESIDUE = 0
-VIDEO_ARRIVAL_RESIDUE = 2
-
-AUDIO_SPEC = media_index.MediaIndexSpec(
-    name="audio",
-    store_env="SPARK_GRAFT_AUDIO_STORE",
-    # content-address fingerprint: LIVE algorithm constants (the
-    # pair-store r8 lesson)
-    algo_fp=f"audiofp|{SCENE_MIN}|{SCENE_DOCS}|{AUDIO_SAMPLES}|{AUDIO_FRAMES}|v1",
-    hash_table=_audio_hash_table,
-    hash_frame=_audio_frame,
-    arrival_residue=AUDIO_ARRIVAL_RESIDUE,
-)
-
-VIDEO_SPEC = media_index.MediaIndexSpec(
-    name="video",
-    store_env="SPARK_GRAFT_VIDEO_STORE",
-    algo_fp=f"videofold|{SCENE_MIN}|{SCENE_DOCS}|{IMG_W}x{IMG_H}|{VIDEO_FRAMES}|v1",
-    hash_table=_video_hash_table,
-    hash_frame=_video_hash_frame,
-    arrival_residue=VIDEO_ARRIVAL_RESIDUE,
 )
 
 

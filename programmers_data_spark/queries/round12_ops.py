@@ -69,18 +69,17 @@ Certification structure (all ten queries FULL hash parity):
   WAV-codec roundtrip + integer energy-delta fingerprint, deduped by
   the SAME banded pair machinery (shared on both engines).
 
-Scale shape: one map-only Arrow pass per hash table (memoized +
-persisted — pairs/clusters/the presentation sort are 3+ consumers),
-band join is an equi hash join whose bucket width is bounded by the
-duplication factor, component resolution is edge-list-bounded
-(operators.connected_components). At 100 TB the
+Scale shape: one map-only Arrow pass per modality, paid once by the
+published hash store (media_index.hash_store) that every full-corpus
+query reads; the pair and cluster queries read the published pair
+store. The band join is an equi hash join whose bucket width is
+bounded by the duplication factor, component resolution is
+edge-list-bounded (operators.connected_components). At 100 TB the
 same kernel decodes real payload bytes from a binary column; nothing
 in the plan depends on the synthetic generator.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -292,7 +291,7 @@ def _doc_stats(spark: SparkSession, sf_dir: str) -> tuple[int, int, int]:
     augmented-corpus count exactly (dedup_ops._AUG_SQL adds one
     mutated copy per doc_id % 20 == 0, nothing else), so the
     cross-modal scene sizing needs no second scan; max_doc_id guards
-    the doc_id + 1e6 augmentation offset (see _xmodal_hash_table)."""
+    the doc_id + 1e6 augmentation offset (see _xmodal_table)."""
     row = (
         load_table(spark, sf_dir, "documents")
         .agg(
@@ -361,58 +360,31 @@ def _hash_frame(
     )
 
 
-# The hash table feeds the per-image query, the pair join (3 plan
-# branches), clusters, and every presentation sort — without the
-# persist each consumer re-runs the Arrow codec pass.
-@memoized
-def _image_hash_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    scenes = _scene_count(_doc_count(spark, sf_dir))
-    table = _hash_frame(spark, docs, scenes).persist()
-    return table
-
-
 # Base-dir override for the published image-hash index (bench pins a
 # fresh per-run dir so isolated accounting stays honest, exactly the
 # PAIR_STORE_ENV treatment).
 IMG_STORE_ENV = "SPARK_GRAFT_IMG_STORE"
-
-# Bucket count for the published band table. At test scale 8 buckets
-# keep files non-trivial; at 100 TB size so a bucket is a few hundred
-# MB (save_bucketed's guidance) — the constant is the TEST-scale
-# setting of a per-deployment knob, not part of the hash semantics.
-IMG_BAND_BUCKETS = 8
 
 # Arrival residue for the incremental-maintenance queries: doc_id % 3
 # == 1 is "the new batch", the other residues are "the existing
 # corpus" (see media_index.incremental_delta).
 IMG_ARRIVAL_RESIDUE = 1
 
-# Replay micro-batch count (the stream_upsert_publish protocol).
-IMG_INGEST_N_SLICES = 3
-
-# The image tier's instantiation of the shared media-index
-# maintenance engine (media_index.py). Round 12 built this lifecycle
-# for image alone; round 13 factored it into the engine so audio and
-# video run the SAME code — the knobs below reproduce the round-12
-# artifact paths, catalog names, and scratch envs exactly, so
-# published artifacts and tests carry over unchanged, and the
-# driver-certified image rows (image_neardup_incremental,
-# stream_image_neardup_ingest) certify the engine itself.
+# The image tier's instantiation of the shared media-index engine
+# (media_index.py); the audio and video tiers run the same code. The
+# knobs keep the image tier's artifact paths, catalog names and
+# scratch envs.
 IMAGE_SPEC = media_index.MediaIndexSpec(
     name="image",
     store_env=IMG_STORE_ENV,
     # content-address fingerprint: LIVE algorithm constants, never
     # hand-written literals (the pair-store r8 lesson)
     algo_fp=f"imgdhash|{SCENE_MIN}|{SCENE_DOCS}|{IMG_W}x{IMG_H}|v1",
-    hash_table=_image_hash_table,
     hash_frame=_hash_frame,
     arrival_residue=IMG_ARRIVAL_RESIDUE,
-    n_buckets=IMG_BAND_BUCKETS,
     catalog_prefix="img",
     ingest_env="SPARK_GRAFT_IMG_INGEST_STORE",
     ingest_prefix="imgingest_",
-    n_slices=IMG_INGEST_N_SLICES,
 )
 
 
@@ -430,10 +402,12 @@ IMAGE_SPEC = media_index.MediaIndexSpec(
 )
 def image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-image perceptual hashes through the real PNG codec path
-    (module docstring has the full derivation). Map-only Arrow pass;
-    the oracle recomputes the pre-encode arithmetic, so a green hash
-    certifies encode -> decode -> pool -> threshold end to end."""
-    return _image_hash_table(spark, sf_dir).orderBy("media_id")
+    (module docstring has the full derivation), read from the
+    published hash store (media_index.hash_store), whose build is the
+    map-only Arrow pass; the oracle recomputes the pre-encode
+    arithmetic, so a green hash certifies encode -> decode -> pool ->
+    threshold end to end."""
+    return media_index.hash_store(spark, sf_dir, IMAGE_SPEC).orderBy("media_id")
 
 
 def _band_frame(h: DataFrame, carry_hash: bool = False) -> DataFrame:
@@ -458,10 +432,6 @@ def _band_frame(h: DataFrame, carry_hash: bool = False) -> DataFrame:
     return h.select(
         "media_id", *extra, F.explode(bands).alias("bb")
     ).select("media_id", *extra, "bb.band", "bb.bval")
-
-
-def _neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _pairs_from(_image_hash_table(spark, sf_dir))
 
 
 def _pairs_from(h: DataFrame) -> DataFrame:
@@ -515,8 +485,11 @@ def image_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     <= HAM_T. Both engines apply the identical band rule, so the
     candidate set itself is deterministic and the output reaches full
     hash parity. Measured sf0.1: 47.5k within-scene pairs all kept
-    (max distance 4), ~3.7k cross-scene candidates all rejected."""
-    return _neardup_pairs(spark, sf_dir).orderBy("media_a", "media_b")
+    (max distance 4), ~3.7k cross-scene candidates all rejected.
+    Reads the published pair store (media_index.pair_store)."""
+    return media_index.pair_store(spark, sf_dir, IMAGE_SPEC).orderBy(
+        "media_a", "media_b"
+    )
 
 
 @query(
@@ -546,46 +519,7 @@ def image_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the EDGE list), cluster id = min media_id reached; singletons
     keep their own id. Oracle: recursive-CTE reachability over the
     identical pair set (the dedup_clusters precedent)."""
-    from ..operators import label_clusters
-
-    h = _image_hash_table(spark, sf_dir)
-    return label_clusters(
-        h.select("media_id"), _neardup_pairs(spark, sf_dir), "media_id",
-        ("media_a", "media_b"),
-    ).orderBy("media_id")
-
-
-# persisted (two consumers: the count aggregate AND the found join)
-# and memoized — a fresh persist per invocation accumulated cached
-# RDDs across repeated bench runs (r12 ADVICE #1)
-@memoized
-def _scene_truth(
-    spark: SparkSession, sf_dir: str, hash_table: Callable
-) -> DataFrame:
-    """Ground truth of a banded media LSH's recall contract: every
-    within-scene pair of ``hash_table(spark, sf_dir)`` at Hamming <=
-    HAM_T (an equi join on the scene key — closed-form, never an
-    all-pairs scan)."""
-    h = hash_table(spark, sf_dir)
-    ha = h.select(
-        "scene",
-        F.col("media_id").alias("media_a"),
-        F.col("dhash_lo").alias("lo_a"),
-        F.col("dhash_hi").alias("hi_a"),
-    )
-    hb = h.select(
-        F.col("scene").alias("scene_b"),
-        F.col("media_id").alias("media_b"),
-        F.col("dhash_lo").alias("lo_b"),
-        F.col("dhash_hi").alias("hi_b"),
-    )
-    return (
-        ha.join(hb, (F.col("scene") == F.col("scene_b"))
-                & (F.col("media_a") < F.col("media_b")))
-        .filter(media_index.ham_distance() <= HAM_T)
-        .select("scene", "media_a", "media_b")
-        .persist()
-    )
+    return media_index.neardup_clusters(spark, sf_dir, IMAGE_SPEC)
 
 
 @query(
@@ -627,28 +561,7 @@ def image_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the truth, reported per scene as an exact integer percentage.
     Banding can only MISS (a >=5-bit spread across all 4 bands), so
     recall_pct <= 100 structurally; measured 100 at every SF."""
-    truth = _scene_truth(spark, sf_dir, _image_hash_table)
-    found = (
-        truth.join(_neardup_pairs(spark, sf_dir), ["media_a", "media_b"])
-        .groupBy("scene")
-        .agg(F.count("*").alias("n_found"))
-    )
-    return (
-        truth.groupBy("scene")
-        .agg(F.count("*").alias("n_true"))
-        .join(found, "scene", "left")
-        .select(
-            "scene",
-            F.col("n_true").cast("long"),
-            F.coalesce("n_found", F.lit(0)).cast("long").alias("n_found"),
-            # integer div on BOTH sides (float-divide-then-cast
-            # truncates vs rounds differently across engines)
-            F.expr("coalesce(n_found, 0) * 100 div n_true")
-            .cast("long")
-            .alias("recall_pct"),
-        )
-        .orderBy("scene")
-    )
+    return media_index.lsh_recall(spark, sf_dir, IMAGE_SPEC)
 
 
 @query(
@@ -712,33 +625,40 @@ def image_resize_hash_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------ cross-modal tier
 
-# persisted: two consumers (the pair join's branches)
 @memoized
-def _xmodal_hash_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual hashes over the AUGMENTED corpus (dedup_ops._AUG_SQL:
-    every 20th document gains a mutated copy at doc_id + 1e6), with
-    scenes keyed by doc_id % 1e6 — a mutation therefore renders a
-    near-duplicate IMAGE of its original, so text near-dup pairs and
-    image near-dup pairs genuinely overlap."""
+def _xmodal_table(
+    spark: SparkSession,
+    sf_dir: str,
+    spec: media_index.MediaIndexSpec,
+    scene_extra: int,
+) -> DataFrame:
+    """Fingerprints of spec's kernel over the AUGMENTED corpus
+    (dedup_ops._AUG_SQL: every 20th document gains a mutated copy at
+    doc_id + 1e6), with scenes keyed by doc_id % 1e6 — a mutation
+    therefore renders a near-duplicate clip of its original, so text
+    and media near-dup pairs genuinely overlap. ``scene_extra`` is
+    added to the scene count so each modality partitions the corpus
+    by its own residue system. Persisted: the pair join's branches
+    both read it. No store publishes the augmented corpus, so this
+    stays a session memo."""
     from .dedup_ops import _augmented_docs
 
     n, n20, max_doc = _doc_stats(spark, sf_dir)
     # The % 1e6 canonical keying ALIASES an original with an
     # augmented copy if any base doc_id reaches the offset — both
     # engines would still agree (hashes stay green) while the
-    # cross-modal semantics silently degrade, so fail loudly instead
-    # (r12 ADVICE #2).
-    assert max_doc < 1_000_000, (
-        f"documents.doc_id reaches {max_doc}: the +1e6 augmentation "
-        f"offset (dedup_ops._AUG_SQL) would alias originals with "
-        f"copies under % 1e6 scene keying"
-    )
+    # cross-modal semantics silently degrade, so fail loudly instead.
+    if max_doc >= 1_000_000:
+        raise ValueError(
+            f"documents.doc_id reaches {max_doc}: the +1e6 augmentation "
+            f"offset (dedup_ops._AUG_SQL) would alias originals with "
+            f"copies under % 1e6 scene keying"
+        )
     docs = _augmented_docs(spark, sf_dir)
     # augmented count has a closed form (one copy per doc_id%20==0),
     # so no second scan is needed for scene sizing
-    scenes = _scene_count(n + n20)
-    table = _hash_frame(spark, docs, scenes, canon_mod=1_000_000).persist()
-    return table
+    scenes = _scene_count(n + n20) + scene_extra
+    return spec.hash_frame(spark, docs, scenes, canon_mod=1_000_000).persist()
 
 
 def _crossmodal_oracle() -> str:
@@ -801,7 +721,7 @@ def crossmodal_dup_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup_ops import dedup_minhash
 
     t, f = F.lit(True), F.lit(False)
-    ip = _pairs_from(_xmodal_hash_table(spark, sf_dir)).select(
+    ip = _pairs_from(_xmodal_table(spark, sf_dir, IMAGE_SPEC, 0)).select(
         F.col("media_a").alias("doc_a"),
         F.col("media_b").alias("doc_b"),
         f.alias("txt"),
@@ -863,11 +783,11 @@ def image_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     wrong normalization) breaks the hash.
 
     Scale shape: the EXISTING index is read from the PUBLISHED
-    artifact (image_hash_store — the verified_pair_store seam, so
-    nothing about the existing corpus is even re-hashed), only the
-    arrival batch pays the Arrow codec kernel, and the band probe
-    joins arrival bands against the PUBLISHED BUCKETED band table
-    (image_band_store, hash-bucketed by the (band, bval) join key) —
+    artifact (media_index.hash_store — nothing about the existing
+    corpus is even re-hashed), only the arrival batch pays the Arrow
+    codec kernel, and the band probe joins arrival bands against the
+    PUBLISHED BUCKETED band table (media_index.band_store,
+    hash-bucketed by the (band, bval) join key) —
     no Exchange and no per-run band re-derivation on the index side
     (tests/test_round12.py::test_incremental_probe_index_side_plans_
     without_exchange), cost proportional to the ARRIVAL batch and
@@ -899,7 +819,7 @@ def stream_image_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     band-probed against the ACCUMULATED index (existing hashes plus
     the batch itself), and the verified pair delta is appended to the
     pair store; the batch's hashes then join the index. Replay
-    protocol per stream_upsert_publish: {IMG_INGEST_N_SLICES}
+    protocol per stream_upsert_publish: media_index.INGEST_SLICES
     doc_id-contiguous slices dropped between processAllAvailable()
     drains, so batch order is exact.
 
@@ -1085,18 +1005,19 @@ def _audio_frame(
     )
 
 
-@memoized
-def _audio_hash_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fingerprints through the REAL WAV codec roundtrip (_audio_frame
-    — roundtrip identity licenses the pre-encode oracle, the PNG-tier
-    discipline). Persisted + memoized (pair join branches +
-    presentation sort). Internal column names match the image hash
-    table so the banded pair machinery (_pairs_from / _IMG_PAIR_CTE)
-    is shared verbatim."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    scenes = _scene_count(_doc_count(spark, sf_dir))
-    table = _audio_frame(spark, docs, scenes).persist()
-    return table
+# Arrival residue (doc_id % 3) of the audio tier's maintenance
+# queries: distinct from the image tier's 1 so each modality proves a
+# different batch/existing split of the corpus.
+AUDIO_ARRIVAL_RESIDUE = 0
+
+AUDIO_SPEC = media_index.MediaIndexSpec(
+    name="audio",
+    store_env="SPARK_GRAFT_AUDIO_STORE",
+    # content-address fingerprint: LIVE algorithm constants
+    algo_fp=f"audiofp|{SCENE_MIN}|{SCENE_DOCS}|{AUDIO_SAMPLES}|{AUDIO_FRAMES}|v1",
+    hash_frame=_audio_frame,
+    arrival_residue=AUDIO_ARRIVAL_RESIDUE,
+)
 
 
 @query(
@@ -1113,8 +1034,9 @@ def audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     the third modality's dedup key next to text shingles and image
     dHash. The energy-delta fingerprint is pure integer arithmetic
     (frame energy sum(v^2), strict > between circular neighbors), so
-    the full derivation hash-matches the pre-encode SQL oracle."""
-    h = _audio_hash_table(spark, sf_dir)
+    the full derivation hash-matches the pre-encode SQL oracle. Reads
+    the published hash store (media_index.hash_store)."""
+    h = media_index.hash_store(spark, sf_dir, AUDIO_SPEC)
     return h.select(
         "media_id", "scene",
         F.col("dhash_lo").alias("fp_lo"),
@@ -1133,38 +1055,13 @@ def audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def audio_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded near-duplicate audio pairs — the SAME banded-LSH pair
-    machinery the image tier certified (_pairs_from on the Spark
-    side, the shared band/candidate/verify SQL fragment on the oracle
-    side), applied to the audio fingerprint table: one code path per
+    machinery the image tier certified (the published pair store on
+    the Spark side, the shared band/candidate/verify SQL fragment on
+    the oracle side), applied to the audio fingerprint table: one code path per
     engine serving two modalities, which is exactly how a production
     media-dedup layer is built (hash kernels per modality, one
     banding/verify/cluster engine)."""
-    return _pairs_from(_audio_hash_table(spark, sf_dir)).orderBy(
+    return media_index.pair_store(spark, sf_dir, AUDIO_SPEC).orderBy(
         "media_a", "media_b"
     )
 
-
-# ------------------------------------------------ published index seam
-
-# The published-artifact seam, delegated to the shared engine
-# (media_index.py) with IMAGE_SPEC (defined with the constants near
-# the hash table above) — the round-12 bespoke implementation moved
-# to the engine verbatim when the audio/video tiers adopted the same
-# lifecycle, preserving every identity (artifact paths, catalog
-# names, content addressing, scratch envs).
-
-
-def image_band_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The dHash BAND table as a published BUCKETED layout — the
-    probe side of incremental media dedup (r12 VERDICT ask #2): one
-    hash-bucketed write by the (band, bval) join key, zero-Exchange
-    probes forever after; see media_index.band_store."""
-    return media_index.band_store(spark, sf_dir, IMAGE_SPEC)
-
-
-def image_hash_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The image-hash index AS A PUBLISHED ARTIFACT — the
-    verified_pair_store pattern for the media tier (computed once,
-    K8 validated-swap published, read by every consumer); see
-    media_index.hash_store."""
-    return media_index.hash_store(spark, sf_dir, IMAGE_SPEC)

@@ -52,20 +52,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import media_index
 from ..catalog import load_table
-from ..memo import memoized
 from ..registry import ORACLE, query
 from .round12_ops import (
-    _audio_frame,
+    AUDIO_SPEC,
+    IMAGE_SPEC,
+    IMG_H,
+    IMG_W,
+    SCENE_DOCS,
+    SCENE_MIN,
     _audio_hash_cte,
-    _audio_hash_table,
-    _doc_stats,
     _img_hash_cte,
     _pair_cte,
     _pairs_from,
-    _scene_count,
-    _scene_truth,
-    _xmodal_hash_table,
+    _xmodal_table,
 )
 
 # ------------------------------------------------ audio clusters
@@ -99,13 +100,7 @@ def audio_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: recursive-CTE reachability over the identical pair set (the
     image_neardup_clusters derivation verbatim, audio hash CTE
     swapped in — the shared-fragment discipline)."""
-    from ..operators import label_clusters
-
-    h = _audio_hash_table(spark, sf_dir)
-    return label_clusters(
-        h.select("media_id"), _pairs_from(h), "media_id",
-        ("media_a", "media_b"),
-    ).orderBy("media_id")
+    return media_index.neardup_clusters(spark, sf_dir, AUDIO_SPEC)
 
 
 # -------------------------------------------- cross-modal keying
@@ -115,29 +110,6 @@ def audio_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # clip) but a different residue system, so same-image-scene and
 # same-audio-scene are independent events for unrelated documents.
 XMODAL_AUDIO_SCENE_EXTRA = 1
-
-
-@memoized
-def _xmodal_audio_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio fingerprints over the AUGMENTED corpus with canonical
-    clip keying (the _xmodal_hash_table discipline for audio):
-    scene = (doc_id % 1e6) % (scenes+1), so a mutated copy renders a
-    near-duplicate CLIP of its original while the partition differs
-    from the image side's. Persisted + memoized (pair join
-    branches)."""
-    from .dedup_ops import _augmented_docs
-
-    n, n20, max_doc = _doc_stats(spark, sf_dir)
-    # the same loud aliasing guard as the image cross-modal table
-    assert max_doc < 1_000_000, (
-        f"documents.doc_id reaches {max_doc}: the +1e6 augmentation "
-        f"offset would alias originals with copies under % 1e6 clip "
-        f"keying"
-    )
-    docs = _augmented_docs(spark, sf_dir)
-    scenes = _scene_count(n + n20) + XMODAL_AUDIO_SCENE_EXTRA
-    table = _audio_frame(spark, docs, scenes, canon_mod=1_000_000).persist()
-    return table
 
 
 # ------------------------------------------------ video tier
@@ -185,15 +157,14 @@ def _video_hash_frame(
     2x2 pool + per-frame dHash, bitwise XOR fold into one 64-bit clip
     fingerprint. ``canon_mod`` optionally reduces doc_id before scene
     keying (the quadmodal query maps a mutated copy at doc_id + 1e6
-    onto its original's scene). Factored out of _video_hash_table so
-    the incremental-maintenance engine can hash an ARRIVAL batch with
-    the index's frozen scene count (the image-tier _hash_frame
-    economics)."""
+    onto its original's scene). The published hash store runs it over
+    the corpus, an incremental-maintenance batch over its arrivals
+    with the index's frozen scene count."""
     import numpy as np  # noqa: F401 (kernel dependency, checked early)
 
     from ..multimodal.png import decode as png_decode
     from ..multimodal.png import encode as png_encode
-    from .round12_ops import IMG_H, IMG_W, _pool
+    from .round12_ops import _pool
 
     def video_batches(batches):
         import numpy as np
@@ -233,17 +204,17 @@ def _video_hash_frame(
     )
 
 
-@memoized
-def _video_hash_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-clip XOR-fold fingerprints through the real PNG codec path
-    (one encode->decode roundtrip PER FRAME — the production shape:
-    frame-sample, decode, hash, fold). Persisted + memoized; generic
-    (media_id, scene, dhash_lo, dhash_hi) columns so _pairs_from /
-    _pair_cte serve this modality verbatim like image and audio."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    scenes = _scene_count(_doc_stats(spark, sf_dir)[0])
-    table = _video_hash_frame(spark, docs, scenes).persist()
-    return table
+# Arrival residue (doc_id % 3) of the video tier's maintenance
+# queries: distinct from image (1) and audio (0).
+VIDEO_ARRIVAL_RESIDUE = 2
+
+VIDEO_SPEC = media_index.MediaIndexSpec(
+    name="video",
+    store_env="SPARK_GRAFT_VIDEO_STORE",
+    algo_fp=f"videofold|{SCENE_MIN}|{SCENE_DOCS}|{IMG_W}x{IMG_H}|{VIDEO_FRAMES}|v1",
+    hash_frame=_video_hash_frame,
+    arrival_residue=VIDEO_ARRIVAL_RESIDUE,
+)
 
 
 def _video_hash_cte(
@@ -337,32 +308,6 @@ def _video_hash_cte(
 # (scenes+1) for unrelated documents, while copies still key onto
 # their original canonically.
 XMODAL_VIDEO_SCENE_EXTRA = 2
-
-
-@memoized
-def _xmodal_video_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video fingerprints over the AUGMENTED corpus with canonical
-    clip keying (the _xmodal_hash_table discipline for video):
-    scene = (doc_id % 1e6) % (scenes+2), so a mutated copy renders a
-    near-duplicate CLIP of its original while the partition differs
-    from both the image and audio sides'. Persisted + memoized (pair
-    join branches)."""
-    from .dedup_ops import _augmented_docs
-
-    n, n20, max_doc = _doc_stats(spark, sf_dir)
-    # the same loud aliasing guard as the image/audio cross-modal
-    # tables
-    assert max_doc < 1_000_000, (
-        f"documents.doc_id reaches {max_doc}: the +1e6 augmentation "
-        f"offset would alias originals with copies under % 1e6 clip "
-        f"keying"
-    )
-    docs = _augmented_docs(spark, sf_dir)
-    scenes = _scene_count(n + n20) + XMODAL_VIDEO_SCENE_EXTRA
-    table = _video_hash_frame(
-        spark, docs, scenes, canon_mod=1_000_000
-    ).persist()
-    return table
 
 
 # Every combination the four flags can spell, in one expression both
@@ -492,14 +437,14 @@ def crossmodal_quadmodal_consistency(
 
     tp = flagged(dedup_minhash(spark, sf_dir).select("doc_a", "doc_b"), 0)
     media = [
-        _pairs_from(tbl(spark, sf_dir)).select(
+        _pairs_from(_xmodal_table(spark, sf_dir, spec, extra)).select(
             F.col("media_a").alias("doc_a"),
             F.col("media_b").alias("doc_b"),
         )
-        for tbl in (
-            _xmodal_hash_table,
-            _xmodal_audio_table,
-            _xmodal_video_table,
+        for spec, extra in (
+            (IMAGE_SPEC, 0),
+            (AUDIO_SPEC, XMODAL_AUDIO_SCENE_EXTRA),
+            (VIDEO_SPEC, XMODAL_VIDEO_SCENE_EXTRA),
         )
     ]
     unioned = tp
@@ -712,27 +657,7 @@ def audio_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     SF (a one-sample perturbation flips <= 2 fingerprint bits, so
     within-scene pairs spread <= 4 bits over 4 bands — some band is
     always exact)."""
-    h = _audio_hash_table(spark, sf_dir)
-    truth = _scene_truth(spark, sf_dir, _audio_hash_table)
-    found = (
-        truth.join(_pairs_from(h), ["media_a", "media_b"])
-        .groupBy("scene")
-        .agg(F.count("*").alias("n_found"))
-    )
-    return (
-        truth.groupBy("scene")
-        .agg(F.count("*").alias("n_true"))
-        .join(found, "scene", "left")
-        .select(
-            "scene",
-            F.col("n_true").cast("long"),
-            F.coalesce("n_found", F.lit(0)).cast("long").alias("n_found"),
-            F.expr("coalesce(n_found, 0) * 100 div n_true")
-            .cast("long")
-            .alias("recall_pct"),
-        )
-        .orderBy("scene")
-    )
+    return media_index.lsh_recall(spark, sf_dir, AUDIO_SPEC)
 
 
 # ------------------------------------------------ language audit
@@ -914,8 +839,9 @@ def video_framehash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one map-only Arrow pass, {VIDEO_FRAMES} codec
     roundtrips per clip — at 100 TB the same kernel frame-samples
     real video payloads from a binary column; the fold keeps the
-    index entry ONE 64-bit key per clip regardless of clip length."""
-    h = _video_hash_table(spark, sf_dir)
+    index entry ONE 64-bit key per clip regardless of clip length.
+    Reads the published hash store (media_index.hash_store)."""
+    h = media_index.hash_store(spark, sf_dir, VIDEO_SPEC)
     return h.select(
         "media_id", "scene",
         F.col("dhash_lo").alias("fp_lo"),
@@ -934,12 +860,12 @@ def video_framehash(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def video_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded near-duplicate video pairs — the SAME banded-LSH pair
-    machinery (Spark: _pairs_from; oracle: the shared band/candidate/
-    verify fragment) now serving its FOURTH modality: one banding/
+    machinery (Spark: the published pair store; oracle: the shared
+    band/candidate/verify fragment) now serving its FOURTH modality: one banding/
     verify/cluster engine for text, image, audio, and video — the
     production media-dedup architecture (hash kernel per modality,
     one candidate engine)."""
-    return _pairs_from(_video_hash_table(spark, sf_dir)).orderBy(
+    return media_index.pair_store(spark, sf_dir, VIDEO_SPEC).orderBy(
         "media_a", "media_b"
     )
 
@@ -968,13 +894,7 @@ def video_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     step, through the same component machinery as the image and
     audio tiers (edge-list-bounded component resolution,
     recursive-CTE oracle)."""
-    from ..operators import label_clusters
-
-    h = _video_hash_table(spark, sf_dir)
-    return label_clusters(
-        h.select("media_id"), _pairs_from(h), "media_id",
-        ("media_a", "media_b"),
-    ).orderBy("media_id")
+    return media_index.neardup_clusters(spark, sf_dir, VIDEO_SPEC)
 
 
 
@@ -1020,24 +940,4 @@ def video_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer percentages. A one-frame perturbation spreads <= 4 fold
     bits over 4 bands, so some band is always exact — recall_pct is
     structurally <= 100 and measured 100 at every SF."""
-    h = _video_hash_table(spark, sf_dir)
-    truth = _scene_truth(spark, sf_dir, _video_hash_table)
-    found = (
-        truth.join(_pairs_from(h), ["media_a", "media_b"])
-        .groupBy("scene")
-        .agg(F.count("*").alias("n_found"))
-    )
-    return (
-        truth.groupBy("scene")
-        .agg(F.count("*").alias("n_true"))
-        .join(found, "scene", "left")
-        .select(
-            "scene",
-            F.col("n_true").cast("long"),
-            F.coalesce("n_found", F.lit(0)).cast("long").alias("n_found"),
-            F.expr("coalesce(n_found, 0) * 100 div n_true")
-            .cast("long")
-            .alias("recall_pct"),
-        )
-        .orderBy("scene")
-    )
+    return media_index.lsh_recall(spark, sf_dir, VIDEO_SPEC)

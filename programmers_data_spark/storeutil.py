@@ -22,6 +22,7 @@ import os
 import shutil
 import stat
 import tempfile
+import time
 from collections.abc import Callable
 
 from .catalog import footer_row_count
@@ -42,6 +43,20 @@ STORE_ENVS = (
     "SPARK_GRAFT_LATE_STORE", "SPARK_GRAFT_DEDUP_AUDIT_STORE",
     "SPARK_GRAFT_AUDIO_INGEST_STORE", "SPARK_GRAFT_VIDEO_INGEST_STORE",
 )
+
+# The store build log: one record per build that published — store
+# leaf, build seconds (the build and its write, including any store
+# it builds on the way), rows (read from the written footers) and
+# bytes on disk. bench.py drains it after each query's warm-up.
+BUILD_LOG: list[dict] = []
+
+
+def drain_build_log() -> list[dict]:
+    """The records logged since the last drain, oldest first."""
+    out = BUILD_LOG[:]
+    BUILD_LOG.clear()
+    return out
+
 
 def store_base(env_var: str, name: str) -> str:
     """Resolve the base directory for a named shared-artifact store.
@@ -97,16 +112,27 @@ def artifact_dir(
     return os.path.join(base, fp, leaf)
 
 
+def _tree_bytes(path: str) -> int:
+    return sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _, files in os.walk(path)
+        for f in files
+    )
+
+
 def _build_on_miss(read: Callable, build: Callable, write: Callable, path: str):
     """``read()``; if the artifact is not there yet, ``write(build())``
-    and read it back. The build is evaluated once, by the write: an
-    empty build is refused by the publish's own empty guard
-    (EmptyTableError) and returned as it is, unpublished, with the
-    directories the write made on the way to ``path`` removed."""
+    (which returns the written row count), log the build to
+    BUILD_LOG and read the artifact back. The build is evaluated
+    once, by the write: an empty build is refused by the publish's
+    own empty guard (EmptyTableError) and returned as it is,
+    unpublished and unlogged, with the directories the write made on
+    the way to ``path`` removed."""
     try:
         return read()
     except FileNotFoundError:
         pass
+    t0 = time.perf_counter()
     computed = build()
     made = []
     d = path
@@ -114,7 +140,7 @@ def _build_on_miss(read: Callable, build: Callable, write: Callable, path: str):
         made.append(d)
         d = os.path.dirname(d)
     try:
-        write(computed)
+        rows = write(computed)
     except EmptyTableError:
         for d in made:  # leaf first; stop at a dir someone else filled
             try:
@@ -124,6 +150,12 @@ def _build_on_miss(read: Callable, build: Callable, write: Callable, path: str):
             except OSError:
                 break
         return computed
+    BUILD_LOG.append({
+        "store": os.path.basename(path),
+        "build_s": round(time.perf_counter() - t0, 4),
+        "rows": rows,
+        "bytes": _tree_bytes(path),
+    })
     return read()
 
 
@@ -167,10 +199,10 @@ def _registered_bucketed(
 
 def _save_bucketed(
     df, name: str, path: str, bucket_by: list[str], n_buckets: int
-) -> None:
+) -> int:
     """sinks.save_bucketed, then the empty guard on the written rows:
     an empty table is dropped from the catalog and its files removed
-    before the guard raises."""
+    before the guard raises. Returns the row count."""
     from . import sinks
 
     sinks.save_bucketed(
@@ -183,6 +215,7 @@ def _save_bucketed(
         df.sparkSession.sql(f"DROP TABLE IF EXISTS {name}")
         shutil.rmtree(path, ignore_errors=True)
     NonEmptyCheck(f"bucketed build for {path}").evaluate(n)
+    return n
 
 
 def published_bucketed(

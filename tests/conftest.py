@@ -30,3 +30,17 @@ def sf_smoke() -> str:
 @pytest.fixture(scope="session")
 def sf_oracle() -> str:
     return SF_ORACLE
+
+
+@pytest.fixture(scope="session")
+def corpus_kernel(spark):
+    """``run(sf_dir, spec)``: spec's Arrow kernel over sf_dir's whole
+    corpus, unpublished — the reference a media hash store equals."""
+    from programmers_data_spark import media_index
+    from programmers_data_spark.catalog import load_table
+
+    def run(sf_dir, spec):
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        return spec.hash_frame(spark, docs, media_index._scenes(spark, sf_dir))
+
+    return run

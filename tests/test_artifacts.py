@@ -109,6 +109,31 @@ def _bucketed(spark, path, build):
     )
 
 
+def test_build_log_records_each_published_build(spark, tmp_path):
+    """A miss adds one record whose rows equal the published count; a
+    hit or a refused empty build adds none."""
+    storeutil.drain_build_log()
+    out = storeutil.published(spark, str(tmp_path / "logged"), lambda: spark.range(7))
+    (rec,) = storeutil.drain_build_log()
+    assert rec["store"] == "logged"
+    assert rec["rows"] == out.count() == 7
+    assert rec["bytes"] > 0 and rec["build_s"] >= 0
+    clear_memo_caches()
+    storeutil.published(spark, str(tmp_path / "logged"), lambda: spark.range(7))
+    storeutil.published(spark, str(tmp_path / "nothing"), lambda: spark.range(0))
+    assert storeutil.drain_build_log() == []
+
+    bk = _bucketed(spark, str(tmp_path / "bk_logged"), lambda: spark.range(5))
+    (rec,) = storeutil.drain_build_log()
+    assert (rec["store"], rec["rows"]) == ("bk_logged", bk.count())
+    clear_memo_caches()
+    _bucketed(spark, str(tmp_path / "bk_logged"), lambda: spark.range(5))
+    _bucketed(spark, str(tmp_path / "bk_nothing"), lambda: spark.range(0))
+    assert storeutil.drain_build_log() == []
+    path = str(tmp_path / "bk_logged")
+    spark.sql(f"DROP TABLE IF EXISTS t_ids_{hashlib.md5(path.encode()).hexdigest()[:12]}")
+
+
 def test_bucketed_miss_writes_once_then_reads(spark, tmp_path):
     path = str(tmp_path / "bk")
     built = []

@@ -133,38 +133,42 @@ def test_verifiers_apply_their_thresholds(spark):
     assert [tuple(r) for r in jaccard_verify(cand, sigs).collect()] == [(1, 2, 0.5)]
 
 
-def test_empty_media_index_builds_nothing(spark, tmp_path, monkeypatch):
+def test_empty_media_index_builds_nothing(
+    spark, tmp_path, tmp_path_factory, monkeypatch
+):
     """An empty hash table publishes no store: the pair store and the
     serving read return 0 rows with their usual schemas and leave no
     file under the store bases."""
+    import pandas as pd
+
     from programmers_data_spark.queries.media_lifecycle_ops import _hamming_topk
 
     for env in storeutil.STORE_ENVS:
         monkeypatch.setenv(env, str(tmp_path / env.lower()))
 
-    def no_hashes(s, sf_dir):
+    def no_hashes(s, docs, scenes, canon_mod=None):
         return s.createDataFrame(
             [], "media_id long, scene long, dhash_lo long, dhash_hi long"
         )
-
-    def no_kernel(s, docs, scenes):
-        raise AssertionError("the store builds never hash arrivals")
 
     spec = media_index.MediaIndexSpec(
         name="nullmedia",
         store_env="SPARK_GRAFT_IMG_STORE",
         algo_fp="nullmedia|v1",
-        hash_table=no_hashes,
-        hash_frame=no_kernel,
+        hash_frame=no_hashes,
         arrival_residue=0,
     )
-    sf = str(tmp_path / "sf")
-    pairs = media_index.pair_store(spark, sf, spec)
+    sf = tmp_path_factory.mktemp("nullmedia_sf")
+    pd.DataFrame(
+        {"doc_id": [1, 2], "text": ["a b", "c d"], "lang": ["en"] * 2,
+         "source": ["s"] * 2, "n_chars": [3, 3]}
+    ).to_parquet(sf / "documents.parquet", index=False)
+    pairs = media_index.pair_store(spark, str(sf), spec)
     assert pairs.count() == 0
     assert pairs.schema.simpleString() == (
         "struct<media_a:bigint,media_b:bigint,ham_d:int>"
     )
-    topk = _hamming_topk(spark, sf, spec)
+    topk = _hamming_topk(spark, str(sf), spec)
     assert topk.count() == 0
     assert topk.schema.simpleString() == (
         "struct<query_id:bigint,rnk:int,neighbor_id:bigint,ham_d:int>"

@@ -394,7 +394,9 @@ def test_resize_invariance_theorem_any_buffer(buf):
 # ------------------------------------------------ published index seam
 
 
-def test_image_hash_store_roundtrip(spark, planted_dir, tmp_path, monkeypatch):
+def test_image_hash_store_roundtrip(
+    spark, planted_dir, tmp_path, monkeypatch, corpus_kernel
+):
     """The published image-hash index (the verified_pair_store seam
     for the media tier): first use computes + publishes through the
     K8 validated-swap layer, subsequent reads return bit-identical
@@ -403,8 +405,9 @@ def test_image_hash_store_roundtrip(spark, planted_dir, tmp_path, monkeypatch):
 
     monkeypatch.setenv(round12_ops.IMG_STORE_ENV, str(tmp_path))
     clear_memo_caches()
-    first = round12_ops.image_hash_store(spark, planted_dir)
-    direct = round12_ops._image_hash_table(spark, planted_dir)
+    spec = round12_ops.IMAGE_SPEC
+    first = media_index.hash_store(spark, planted_dir, spec)
+    direct = corpus_kernel(planted_dir, spec)
     assert first.subtract(direct).count() == 0
     assert direct.subtract(first).count() == 0
     # a fresh handle (memo cleared) must READ, not recompute: the
@@ -414,7 +417,7 @@ def test_image_hash_store_roundtrip(spark, planted_dir, tmp_path, monkeypatch):
     gens = glob.glob(str(tmp_path) + "/*/image_hashes/*")
     assert gens, "nothing was published"
     clear_memo_caches()
-    again = round12_ops.image_hash_store(spark, planted_dir)
+    again = media_index.hash_store(spark, planted_dir, spec)
     assert again.subtract(direct).count() == 0
     assert gens == glob.glob(str(tmp_path) + "/*/image_hashes/*")
 
@@ -434,15 +437,21 @@ def test_doc_stats_memoized_and_exact(spark, planted_dir):
     assert round12_ops._doc_stats(spark, planted_dir) is stats
 
 
+@pytest.mark.parametrize("modality", ["image", "audio", "video"])
 def test_xmodal_rejects_doc_ids_at_augmentation_offset(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, modality
 ):
     """The +1e6 augmentation offset aliases an original with a copy
     under % 1e6 scene keying — both engines would agree (hashes stay
     green) while cross-modal semantics silently degrade, so the
-    builder must fail loudly instead (r12 ADVICE #2)."""
-    from programmers_data_spark.queries import round12_ops
+    builder must fail loudly instead, also under ``python -O``."""
+    from programmers_data_spark.queries import round12_ops, round13_ops
 
+    spec, extra = {
+        "image": (round12_ops.IMAGE_SPEC, 0),
+        "audio": (round12_ops.AUDIO_SPEC, round13_ops.XMODAL_AUDIO_SCENE_EXTRA),
+        "video": (round13_ops.VIDEO_SPEC, round13_ops.XMODAL_VIDEO_SCENE_EXTRA),
+    }[modality]
     d = tmp_path / "bigids"
     d.mkdir()
     docs = pd.DataFrame(
@@ -456,8 +465,8 @@ def test_xmodal_rejects_doc_ids_at_augmentation_offset(
     )
     docs.to_parquet(d / "documents.parquet", index=False)
     clear_memo_caches()
-    with pytest.raises(AssertionError, match="alias"):
-        round12_ops._xmodal_hash_table(spark, str(d))
+    with pytest.raises(ValueError, match="alias"):
+        round12_ops._xmodal_table(spark, str(d), spec, extra)
 
 
 def test_lsh_recall_truth_memoized(spark, planted_dir):
@@ -472,14 +481,15 @@ def test_lsh_recall_truth_memoized(spark, planted_dir):
     entries = [
         v
         for k, v in memo._MEMO.items()
-        if k[0] is round12_ops._scene_truth.__wrapped__
+        if k[0] is media_index._scene_truth.__wrapped__
     ]
     assert len(entries) == 1 and entries[0].is_cached
     n = len(memo._MEMO)
     round12_ops.image_lsh_recall(spark, planted_dir).collect()
     assert len(memo._MEMO) == n
-    truth = round12_ops._scene_truth(
-        spark, planted_dir, round12_ops._image_hash_table
+    spec = round12_ops.IMAGE_SPEC
+    truth = media_index._scene_truth(
+        spark, planted_dir, spec, media_index.store_table_dir(spec, planted_dir)
     )
     assert truth is entries[0]
 
@@ -503,8 +513,9 @@ def test_incremental_probe_index_side_plans_without_exchange(
 
     monkeypatch.setenv(round12_ops.IMG_STORE_ENV, str(tmp_path))
     clear_memo_caches()
-    allb = round12_ops.image_band_store(spark, planted_dir)
-    arrivals = round12_ops._image_hash_table(spark, planted_dir).filter(
+    spec = round12_ops.IMAGE_SPEC
+    allb = media_index.band_store(spark, planted_dir, spec)
+    arrivals = media_index.hash_store(spark, planted_dir, spec).filter(
         F.col("media_id") % 3 == round12_ops.IMG_ARRIVAL_RESIDUE
     )
     ab = round12_ops._band_frame(arrivals)
@@ -522,7 +533,7 @@ def test_incremental_probe_index_side_plans_without_exchange(
 
 
 def test_band_store_reregisters_over_existing_files(
-    spark, planted_dir, tmp_path, monkeypatch
+    spark, planted_dir, tmp_path, monkeypatch, corpus_kernel
 ):
     """A fresh session (in-memory catalog forgot the table) finds the
     published bucketed files and re-registers the external table via
@@ -536,10 +547,9 @@ def test_band_store_reregisters_over_existing_files(
 
     monkeypatch.setenv(round12_ops.IMG_STORE_ENV, str(tmp_path))
     clear_memo_caches()
-    first = round12_ops.image_band_store(spark, planted_dir)
-    expected = round12_ops._band_frame(
-        round12_ops._image_hash_table(spark, planted_dir)
-    )
+    spec = round12_ops.IMAGE_SPEC
+    first = media_index.band_store(spark, planted_dir, spec)
+    expected = round12_ops._band_frame(corpus_kernel(planted_dir, spec))
     assert first.subtract(expected).count() == 0
     assert expected.subtract(first).count() == 0
     path = media_index.store_table_dir(
@@ -551,7 +561,7 @@ def test_band_store_reregisters_over_existing_files(
     name = "img_bands_" + hashlib.md5(path.encode()).hexdigest()[:12]
     spark.sql(f"DROP TABLE IF EXISTS {name}")
     clear_memo_caches()
-    again = round12_ops.image_band_store(spark, planted_dir)
+    again = media_index.band_store(spark, planted_dir, spec)
     assert sorted(glob.glob(path + "/*.parquet")) == files  # no rewrite
     assert again.subtract(expected).count() == 0
     assert expected.subtract(again).count() == 0

@@ -179,7 +179,7 @@ def test_quadmodal_partitions_differ_per_modality(spark, planted_dir):
 _SF = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
-def test_multimodal_funnel_leaves_no_media_neardup_pair(spark):
+def test_multimodal_funnel_leaves_no_media_neardup_pair(spark, corpus_kernel):
     """After the media-dedup stage, no surviving pair is a near-dup
     in ANY modality (text, image, audio, or video) — the defining
     property of the widened graph under every keeper strategy."""
@@ -192,9 +192,10 @@ def test_multimodal_funnel_leaves_no_media_neardup_pair(spark):
     alive = {r.doc_id for r in alive_df.collect()}
     assert alive, "funnel emptied the real corpus — fixture changed?"
     for pairs in (
-        round12_ops._pairs_from(round12_ops._image_hash_table(spark, _SF)),
-        round12_ops._pairs_from(round12_ops._audio_hash_table(spark, _SF)),
-        round12_ops._pairs_from(round13_ops._video_hash_table(spark, _SF)),
+        round12_ops._pairs_from(corpus_kernel(_SF, spec))
+        for spec in (
+            round12_ops.IMAGE_SPEC, round12_ops.AUDIO_SPEC, round13_ops.VIDEO_SPEC
+        )
     ):
         surviving = [
             (r.media_a, r.media_b)

@@ -75,7 +75,7 @@ def test_media_lifecycle_planted_parity(spark, planted_dir, name):
     "spec_name", ["audio", "video"]
 )
 def test_incremental_union_untouched_equals_full(
-    spark, planted_dir, spec_name
+    spark, planted_dir, spec_name, corpus_kernel
 ):
     """The incremental ≡ full identity stated WITHOUT the oracle:
     delta(arrivals) ∪ {full pairs touching no arrival} == full pair
@@ -88,7 +88,7 @@ def test_incremental_union_untouched_equals_full(
     delta = registry.QUERIES[f"{spec_name}_neardup_incremental"](
         spark, planted_dir
     )
-    full = round12_ops._pairs_from(spec.hash_table(spark, planted_dir))
+    full = round12_ops._pairs_from(corpus_kernel(planted_dir, spec))
     r = spec.arrival_residue
     untouched = full.filter(
         (F.col("media_a") % 3 != r) & (F.col("media_b") % 3 != r)
@@ -115,7 +115,7 @@ def test_video_incremental_probe_plans_without_exchange(
     spec = media_lifecycle_ops.VIDEO_SPEC
     _isolate(monkeypatch, tmp_path, spec)
     allb = media_index.band_store(spark, planted_dir, spec)
-    arrivals = spec.hash_table(spark, planted_dir).filter(
+    arrivals = media_index.hash_store(spark, planted_dir, spec).filter(
         F.col("media_id") % 3 == spec.arrival_residue
     )
     ab = round12_ops._band_frame(arrivals)
