@@ -72,30 +72,22 @@ _QUERY_MODULES = (
 # this round's (or any later) record file can never falsify the test
 # (r9 VERDICT defect #1: the r9 version hand-pinned the as-of-builder
 # state and self-expired the moment CORRECTNESS_r09.json landed).
-WINDOW_ROUND = 18
+WINDOW_ROUND = 19
 
-# ROUND-19 ROTATION PLAN: group 1 (leads) is NEXT_WINDOW_LEADS below
-# (EMPTY after r18 — no new registrations in the optimization
-# rounds), then round-19 NEW registrations (never-driver-checked
-# outranks stale refreshes — the standing principle), then 2-3
-# round-18-green sentinels on whatever the r19 diff touches, then
-# the backlog: the REMAINING 23-name r13 tail (in registration
-# order: returning_customers, churned_customers, ann_lsh_topk,
-# embedding_neardup_lsh, contrastive_training_pairs,
-# multimodal_png_roundtrip, ann_recall_at5, lsh_neardup_recall,
-# split_neardup_leakage, dsir_importance_proxy,
-# span_corruption_plan, tokenizer_fertility_by_source,
-# crossmodal_dup_consistency, image_neardup_incremental,
-# audio_neardup_clusters, crossmodal_quadmodal_consistency,
-# audio_lsh_recall, lang_confusion_matrix, corpus_snapshot_diff,
-# video_framehash, video_neardup_pairs, video_neardup_clusters,
-# video_lsh_recall — derive from the records as always: names whose
-# latest green round is 13), then the r14 tier in (vintage,
-# registration-order) order to fill 50. Keep stream_tws_value_stats
-# OUTSIDE the window (honestly gated: google.protobuf absent,
-# installs disallowed — semantics driver-certified r6 via the
-# applyInPandasWithState twin). Bump WINDOW_ROUND to 19 in the same
-# commit that rewrites the groups — the bookkeeping test keys on it.
+# ROUND-20 ROTATION PLAN: group 1 (leads) is NEXT_WINDOW_LEADS below
+# (EMPTY after r19), then round-20 NEW registrations
+# (never-driver-checked outranks stale refreshes — the standing
+# principle), then 2-3 round-19-green sentinels on whatever the r20
+# diff touches, then the backlog: the REMAINING 23-name r14 tail (in
+# registration order: nation_trade_volume through
+# stream_video_neardup_ingest — derive from the records as always:
+# names whose latest green round is 14), then the r15 tier in
+# (vintage, registration-order) order to fill 50. Keep
+# stream_tws_value_stats OUTSIDE the window (honestly gated:
+# google.protobuf absent, installs disallowed — semantics
+# driver-certified r6 via the applyInPandasWithState twin). Bump
+# WINDOW_ROUND to 20 in the same commit that rewrites the groups —
+# the bookkeeping test keys on it.
 
 # Queries registered WITHOUT an oracle, by design (k-means float
 # centroid training isn't summation-order-portable SQL, BPE merge
@@ -127,84 +119,83 @@ ROWS_ONLY = frozenset({
 # against the record instead of hand-kept counts.
 
 # Group 1 — never-driver-checked registrations from earlier rounds:
-# EMPTY for round 18 (every oracled registration took an r17 window
-# slot and NEXT_WINDOW_LEADS drained to empty; round 18 is an
-# optimization round and registers nothing new).
+# EMPTY for round 19 (NEXT_WINDOW_LEADS was empty after r18).
 _WINDOW_LEADS: tuple[str, ...] = ()
 
-# Group 2 — round-18 NEW registrations: NONE (optimization round —
-# the round's published derived-table stores are internal helpers,
-# not registered queries).
+# Group 2 — round-19 NEW registrations: NONE (the round moved the
+# image/audio/video fingerprint tables onto the published media
+# stores and registered no new query).
 _WINDOW_NEW: tuple[str, ...] = ()
 
-# Group 3 — r17-green sentinels sitting directly on the round-18
-# diff: pipeline_funnel_contract re-certifies the stage-frame
-# persist reordering in pipelines.curation_stage_frames;
-# copurchase_pairs re-certifies the _frequent_pairs null-key pin
-# (round11_ops, r17 ADVICE #1); segment_overlap_sketch re-certifies
-# the persisted-membership memoization (sketch_ops, r17 ADVICE #2).
+# Group 3 — r18-green sentinels sitting directly on the round-19
+# diff: image_neardup_clusters re-certifies the shared band probe
+# and cluster labeller over the published image store;
+# image_resize_hash_invariance re-certifies the rewritten image hash
+# frame; audio_fingerprint re-certifies the audio frame now read
+# back from the published audio store.
 _WINDOW_SENTINELS = (
-    "pipeline_funnel_contract",
-    "copurchase_pairs",
-    "segment_overlap_sketch",
+    "image_neardup_clusters",
+    "image_resize_hash_invariance",
+    "audio_fingerprint",
 )
 
 # Group 4 — stale tiers oldest-first, in registration order: the
-# COMPLETE 23-name r12 tail (latest green driver row r12 — the
-# oldest vintage after r17 drained the r11 tier and the first 24
-# r12 names), then the first 24 of the 47-name r13 tier. The
-# trimmed 23-name r13 tail (returning_customers onward) leads the
-# r19 backlog per the ROUND-19 ROTATION PLAN above.
+# COMPLETE 23-name r13 tail (latest green driver row r13 — the
+# oldest vintage after r18 drained the r12 tier and the first 24
+# r13 names; it also covers most of the round-19 media diff), then
+# the first 24 of the 47-name r14 tier. The trimmed 23-name r14
+# tail (nation_trade_volume onward) leads the r20 backlog per the
+# ROUND-20 ROTATION PLAN above.
 _WINDOW_STALE = (
-    # r12 tail — drains the tier completely
-    "curation_funnel",
-    "neardup_incremental",
-    "event_path_trigrams",
-    "rfm_segments",
-    "hard_negatives",
-    "rrf_fusion",
-    "label_centroid_drift",
-    "multimodal_audio_meta",
-    "source_temperature_weights",
-    "token_budget_allocation",
-    "curriculum_phases",
-    "training_manifest",
-    "tfidf_shingle_pairs",
-    "bpe_contract",
-    "dedup_keep_best_quality",
-    "stream_upsert_publish",
-    "image_dhash",
-    "image_neardup_pairs",
-    "image_neardup_clusters",
-    "image_lsh_recall",
-    "image_resize_hash_invariance",
-    "audio_fingerprint",
-    "audio_neardup_pairs",
-    # r13 tier, registration-order prefix (24 of 47)
-    "bigram_stats",
-    "doc_lang_mix",
-    "knn_label_vote",
-    "adaptive_quality_gate",
-    "near_dup_rate_by_source",
-    "corpus_shuffle",
-    "skew_profile",
-    "stream_tumbling_daily",
-    "stream_sliding_2d",
-    "stream_dedup",
-    "sessionization",
-    "stream_session_window",
-    "stream_stateful_counts",
-    "stream_enrich_segment",
-    "stream_join_attribution",
-    "stream_corpus_quality",
-    "stream_vocab_drift",
-    "mau",
-    "corpus_mixture_weights",
-    "source_vocab_divergence",
-    "doc_line_dedup",
-    "customers_with_orders",
-    "customers_without_orders",
-    "rollup_revenue",
+    # r13 tail — drains the tier completely
+    "returning_customers",
+    "churned_customers",
+    "ann_lsh_topk",
+    "embedding_neardup_lsh",
+    "contrastive_training_pairs",
+    "multimodal_png_roundtrip",
+    "ann_recall_at5",
+    "lsh_neardup_recall",
+    "split_neardup_leakage",
+    "dsir_importance_proxy",
+    "span_corruption_plan",
+    "tokenizer_fertility_by_source",
+    "crossmodal_dup_consistency",
+    "image_neardup_incremental",
+    "audio_neardup_clusters",
+    "crossmodal_quadmodal_consistency",
+    "audio_lsh_recall",
+    "lang_confusion_matrix",
+    "corpus_snapshot_diff",
+    "video_framehash",
+    "video_neardup_pairs",
+    "video_neardup_clusters",
+    "video_lsh_recall",
+    # r14 tier, registration-order prefix (24 of 47)
+    "cross_source_dup_matrix",
+    "dup_span_mine",
+    "cube_order_stats",
+    "running_revenue",
+    "asof_last_order",
+    "value_histogram",
+    "event_type_pivot",
+    "value_percentiles",
+    "post_purchase_clicks",
+    "acctbal_quartiles",
+    "grouping_sets_revenue",
+    "event_type_unpivot",
+    "salted_segment_revenue",
+    "cohort_retention",
+    "pricing_summary",
+    "region_revenue",
+    "top_customers",
+    "order_priority",
+    "top3_per_segment",
+    "nation_customer_stats",
+    "brand_revenue",
+    "daily_revenue",
+    "shipping_priority",
+    "promo_revenue_share",
 )
 
 _WINDOW = _WINDOW_LEADS + _WINDOW_NEW + _WINDOW_SENTINELS + _WINDOW_STALE
@@ -213,8 +204,8 @@ _WINDOW = _WINDOW_LEADS + _WINDOW_NEW + _WINDOW_SENTINELS + _WINDOW_STALE
 # slot without evicting protected stale names queue here, and the
 # NEXT round's window MUST lead with them (the bookkeeping test
 # asserts this tuple is EXACTLY the never-checked set outside the
-# window). EMPTY after round 18: no oracled registration is waiting
-# on a driver check (round 18 registered nothing).
+# window). EMPTY after round 19: no oracled registration is waiting
+# on a driver check (round 19 registered nothing).
 NEXT_WINDOW_LEADS: tuple[str, ...] = ()
 
 
